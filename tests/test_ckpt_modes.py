@@ -6,11 +6,19 @@ in their hot loops."""
 from __future__ import annotations
 
 import contextlib
+import os
+from urllib.parse import urlparse
 
 import pyspark.sql.functions as F
 import pytest
 
-from transcription_lakehouse_spark.ckpt import MODE_CONF, cut_lineage
+from transcription_lakehouse_spark import ckpt
+from transcription_lakehouse_spark.ckpt import (
+    DIR_CONF,
+    MODE_CONF,
+    _context_dir,
+    cut_lineage,
+)
 from transcription_lakehouse_spark.operators.graph import (
     connected_components,
 )
@@ -45,14 +53,27 @@ def _rows(df):
 def test_cut_lineage_reliable_sets_checkpoint_dir(spark, tmp_path):
     df = spark.range(10).withColumn("x", F.col("id") * 2)
     with _mode(spark, "reliable"):
-        spark.conf.set(
-            "spark.lakehouse.checkpoint.dir", str(tmp_path / "ckpt")
-        )
-        out = cut_lineage(df)
+        spark.conf.set(DIR_CONF, str(tmp_path / "ckpt"))
+        try:
+            out = cut_lineage(df)
+        finally:
+            spark.conf.unset(DIR_CONF)
         assert _rows(out) == _rows(df)
-        # reliable checkpoints truncate lineage to an RDD scan backed by
-        # files under the checkpoint dir
-        assert (tmp_path / "ckpt").exists()
+    # reliable checkpoints truncate lineage to an RDD scan backed by files
+    # under the checkpoint dir: the configured one, unless an earlier
+    # reliable cut in this SparkContext already fixed it
+    used = _context_dir(spark.sparkContext)
+    assert used is not None
+    assert os.listdir(urlparse(used).path)
+
+
+def test_cut_lineage_reliable_refuses_node_local_dir_on_cluster(
+    spark, monkeypatch
+):
+    monkeypatch.setattr(spark.sparkContext, "master", "spark://cluster:7077")
+    monkeypatch.setattr(ckpt, "_context_dir", lambda sc: None)
+    with _mode(spark, "reliable"), pytest.raises(ValueError, match=DIR_CONF):
+        cut_lineage(spark.range(3))
 
 
 @pytest.mark.parametrize("algorithm", ["hash-to-min", "two-phase"])

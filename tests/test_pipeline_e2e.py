@@ -373,6 +373,184 @@ def test_snapshot_immutable_and_verifiable(spark, tmp_path):
     assert any("checksum mismatch" in p for p in verify_snapshot(snap))
 
 
+# `validate` on `_corrupt_lake`; NaN/Inf checks name columns the
+# normalized table does not have, so no normalized_*_nan_inf key appears
+VALIDATE_CORRUPT = {
+    "checks": {
+        "normalized_empty": 0,
+        "normalized_schema_problems": 0,
+        "utterance_id_dupes": 2,
+        "spans_empty": 0,
+        "spans_schema_problems": 0,
+        "span_id_dupes": 1,
+        "spans_negative_duration": 0,
+        "spans_zero_duration": 1,
+        "spans_missing_episode_id": 1,
+        "spans_missing_speaker": 1,
+        "spans_missing_text": 1,
+        "spans_negative_start": 0,
+        "spans_orphan_episodes": 2,
+    },
+    "tables": {"normalized": 5, "spans": 6},
+    "ok": False,
+}
+VALIDATE_FAIL_FAST = {
+    "checks": {
+        "normalized_empty": 0,
+        "normalized_schema_problems": 0,
+        "utterance_id_dupes": 2,
+    },
+    "tables": {"normalized": 5},
+    "ok": False,
+    "stopped_early": True,
+}
+# Spark jobs per chain command on the 60-utterance fixture (test session:
+# AQE off, 4 shuffle partitions); the count()-probing chain took 62
+JOB_BUDGET = {
+    "ingest": 1,
+    "materialize": 15,
+    "catalog": 3,
+    "validate": 5,
+    "quality": 9,
+    "snapshot": 0,
+}
+
+
+def _write_dirty_jsonl(dir_path, name, episode):
+    """Six clean utterances, four invalid ones (missing speaker, end <=
+    start, negative start, blank text) and one malformed line, which the
+    reader drops before validation."""
+    rows = [
+        {"episode_id": episode, "start": 2.0 * i, "end": 2.0 * i + 1.5,
+         "speaker": "AB"[i % 2], "text": f"clean line {i}"}
+        for i in range(6)
+    ] + [
+        {"episode_id": episode, "start": 20.0, "end": 21.0, "text": "who"},
+        {"episode_id": episode, "start": 22.0, "end": 22.0, "speaker": "A",
+         "text": "zero length"},
+        {"episode_id": episode, "start": -1.0, "end": 1.0, "speaker": "B",
+         "text": "before zero"},
+        {"episode_id": episode, "start": 24.0, "end": 25.0, "speaker": "A",
+         "text": "   "},
+    ]
+    with open(dir_path / name, "w") as f:
+        for r in rows:
+            f.write(json.dumps(r) + "\n")
+        f.write("{not json\n")
+
+
+def test_ingest_counts_observed_on_the_write(spark, tmp_path):
+    """`ingest`'s valid/invalid/total are observed on the write itself,
+    exact on input with invalid rows: on a dirs lake, on a txlog lake, and
+    for `lakehouse ingest --incremental`, where only the delta counts."""
+    from click.testing import CliRunner
+
+    from transcription_lakehouse_spark.cli import cli as cli_group
+    from transcription_lakehouse_spark.ingestion import read_versioned
+
+    data = tmp_path / "data"
+    data.mkdir()
+    _write_dirty_jsonl(data, "ep1.jsonl", "EP1")
+    want = {"valid": 6, "invalid": 4, "total": 10}
+    for fmt in ("dirs", "txlog"):
+        lake = str(tmp_path / f"lake_{fmt}")
+        got = pipeline.ingest(spark, str(data / "*.jsonl"), lake, fmt=fmt)
+        assert got == want, fmt
+        assert read_versioned(spark, lake, "normalized").count() == 6
+
+    lake = str(tmp_path / "lake_cli")
+    runner = CliRunner()
+
+    def ingest(*flags):
+        r = runner.invoke(
+            cli_group, ["ingest", str(data), "--lakehouse-path", lake, *flags],
+            catch_exceptions=False,
+        )
+        assert r.exit_code == 0, r.output
+        return json.loads(r.output)
+
+    assert ingest() == want
+    _write_dirty_jsonl(data, "ep2.jsonl", "EP2")
+    _write_jsonl(data, "ep3.jsonl", n=5, episode="EP3")
+    assert ingest("--incremental") == {"valid": 11, "invalid": 4, "total": 15}
+
+
+def _corrupt_lake(spark, lake):
+    """A lake whose normalized table has a duplicate id, NULL ids and a NaN
+    start, and whose spans add an orphan and a NULL episode, a NaN start
+    and missing text on top of the same id defects."""
+    nan = float("nan")
+    spark.createDataFrame(
+        [
+            ("u1", "EP1", 0.0, 1.0, 1.0, "A", "hello there"),
+            ("u1", "EP1", 1.0, 2.0, 1.0, "B", "duplicate id"),
+            (None, "EP1", 2.0, 3.0, 1.0, "A", "null id"),
+            (None, "EP1", 3.0, 4.0, 1.0, "A", "another null id"),
+            ("u5", "EP2", nan, 5.0, nan, "B", "nan start"),
+        ],
+        "utterance_id string, episode_id string, start double, end double, "
+        "duration double, speaker string, text string",
+    ).write.parquet(f"{lake}/normalized/v1")
+    spark.createDataFrame(
+        [
+            ("s1", "EP1", "A", 0.0, 2.0, 2.0, "hello there duplicate"),
+            ("s1", "EP1", "B", 2.0, 4.0, 2.0, "same span id"),
+            (None, "EP1", "A", 4.0, 5.0, 1.0, "null span id"),
+            ("s4", "EP2", "B", nan, 5.0, nan, "nan start"),
+            ("s5", "GHOST", "A", 0.0, 3.0, 3.0, "orphan episode"),
+            ("s6", None, "", 1.0, 1.0, 0.0, None),
+        ],
+        "span_id string, episode_id string, speaker string, "
+        "start_time double, end_time double, duration double, text string",
+    ).select(
+        "span_id", "episode_id", "speaker",
+        F.col("speaker").alias("speaker_canonical"),
+        F.lit("other").alias("speaker_role"), F.lit(False).alias("is_expert"),
+        "start_time", "end_time", "duration", "text",
+        F.array(F.lit("u1")).alias("utterance_ids"),
+    ).write.parquet(f"{lake}/spans/v1")
+
+
+def test_validate_pins_counts_on_corrupt_lake(spark, tmp_path):
+    """`validate`'s whole returned dict on a lake with duplicate and NULL
+    ids, NaN starts, an orphan and a NULL episode (all folded into one
+    aggregate per artifact)."""
+    lake = str(tmp_path / "lake")
+    _corrupt_lake(spark, lake)
+    assert pipeline.validate(spark, lake) == VALIDATE_CORRUPT
+    assert pipeline.validate(spark, lake, fail_fast=True) == VALIDATE_FAIL_FAST
+
+
+def test_chain_job_budget(spark, tmp_path):
+    """Spark jobs per chain command, counted per job group. Each command's
+    counts and checks come from the pass that writes or scans its data, so
+    a re-added count()/collect() probe breaks its ceiling. Ceilings are the
+    counts under the test session's confs (AQE off)."""
+    _write_jsonl(tmp_path, "ep1.jsonl")
+    raw, lake = str(tmp_path / "*.jsonl"), str(tmp_path / "lake")
+    stages = {
+        "ingest": lambda: pipeline.ingest(spark, raw, lake),
+        "materialize": lambda: pipeline.materialize(spark, lake),
+        "catalog": lambda: pipeline.catalog(spark, lake),
+        "validate": lambda: pipeline.validate(spark, lake),
+        "quality": lambda: pipeline.quality(spark, lake),
+        "snapshot": lambda: pipeline.snapshot(spark, lake, "v1.0.0"),
+    }
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for name, run in stages.items():
+            group = f"job-budget-{name}-{tmp_path.name}"
+            sc.setJobGroup(group, name)
+            run()
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    over = {k: (n, JOB_BUDGET[k]) for k, n in jobs.items() if n > JOB_BUDGET[k]}
+    assert not over, f"jobs over budget (got, ceiling): {over}"
+
+
 def test_validate_command_clean_then_corrupted(spark, tmp_path):
     """`pipeline.validate` (reference `lakehouse validate` parity): a clean
     materialized lake passes every check; injected violations (dup span ids,

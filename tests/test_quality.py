@@ -140,11 +140,8 @@ def test_assess_rag_verdict(spark):
     assert g.status == "GREEN", [v.as_dict() for v in g.violations]
 
 
-def test_assess_driver_collects_are_capped(spark):
-    """Pathological key cardinality (many speakers, many low-coverage
-    episodes) must yield BOUNDED driver-side metric lists: top-N detail
-    plus one tail-rollup row, never the full per-key list."""
-    n_speakers, cap = 500, 10
+def _many_speakers(spark, n_speakers):
+    """One speaker and one under-covered episode per span."""
     spans = (
         spark.range(n_speakers)
         .select(
@@ -162,6 +159,15 @@ def test_assess_driver_collects_are_capped(spark):
         F.lit(100.0).alias("duration_seconds"),  # every episode <80% covered
         F.lit("S").alias("series"),
     )
+    return spans, eps
+
+
+def test_assess_driver_collects_are_capped(spark):
+    """Pathological key cardinality (many speakers, many low-coverage
+    episodes) must yield BOUNDED driver-side metric lists: top-N detail
+    plus one tail-rollup row, never the full per-key list."""
+    n_speakers, cap = 500, 10
+    spans, eps = _many_speakers(spark, n_speakers)
     a = assess(spans, eps, thresholds=Thresholds(max_detail_rows=cap))
     # coverage: cap rows of detail + distributed rollup accounting for all
     assert len(a.metrics["coverage"]) == cap
@@ -177,6 +183,55 @@ def test_assess_driver_collects_are_capped(spark):
     assert bal[-1]["n_speakers_in_tail"] == n_speakers - cap
     total_pct = sum(r["pct_duration"] for r in bal)
     assert abs(total_pct - 100.0) < 0.5
+
+
+def test_assess_fused_metrics_match_standalone(spark):
+    """`assess` collects its metrics in fused passes (one job for B/C/E,
+    observed rollups for coverage and the balance tail); every value equals
+    the standalone metric function's, with and without the detail cap."""
+    cases = [
+        (spans_df(spark), episodes_df(spark), Thresholds()),
+        (*_many_speakers(spark, 40), Thresholds(max_detail_rows=10)),
+    ]
+    for spans, eps, th in cases:
+        m = assess(spans, eps, thresholds=th).metrics
+        cap = th.max_detail_rows
+        assert m["span_duration"] == duration_stats(spans).collect()[0].asDict()
+        assert m["span_compliance"] == length_compliance(spans, *th.span_len_range)
+        assert m["integrity"] == integrity_counts(spans)
+        assert m["text"] == text_metrics(spans).collect()[0].asDict()
+        assert m["duplicate_groups"] == duplicate_groups(spans).count()
+        assert m["regressions"] == timestamp_regressions(spans).agg(
+            F.sum("episode_regressions")
+        ).collect()[0][0]
+
+        cov = coverage_metrics(spans, eps)
+        assert m["coverage"] == [
+            r.asDict() for r in cov.orderBy("coverage_pct", "episode_id")
+            .limit(cap).collect()
+        ]
+        assert m["coverage_summary"] == cov.agg(
+            F.count(F.lit(1)).alias("n_episodes"),
+            F.sum((F.col("coverage_pct") < th.min_coverage_pct).cast("long"))
+            .alias("n_below_threshold"),
+            F.round(F.avg("coverage_pct"), 2).alias("avg_coverage_pct"),
+            F.min("coverage_pct").alias("min_coverage_pct"),
+        ).collect()[0].asDict()
+
+        bal = speaker_balance(spans)
+        head = [r.asDict() for r in bal.filter(F.col("rank") <= cap).collect()]
+        tail = bal.filter(F.col("rank") > cap).agg(
+            F.lit("<tail>").alias("speaker"),
+            F.sum("n_segments").alias("n_segments"),
+            F.round(F.sum("total_duration"), 6).alias("total_duration"),
+            F.lit(None).cast("int").alias("rank"),
+            F.round(F.sum("pct_duration"), 2).alias("pct_duration"),
+            F.lit(False).alias("in_top_n"),
+            F.count(F.lit(1)).alias("n_speakers_in_tail"),
+        ).collect()[0].asDict()
+        assert m["speaker_balance"] == head + (
+            [tail] if tail["n_speakers_in_tail"] else []
+        )
 
 
 def test_stratified_sample_guarantees_and_determinism(spark):

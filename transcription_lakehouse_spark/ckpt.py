@@ -15,8 +15,9 @@ beam fragments need reliable checkpointing instead.
 - ``spark.lakehouse.checkpoint.mode = reliable``: ``DataFrame.checkpoint``
   into ``spark.lakehouse.checkpoint.dir`` (or the already-set
   ``SparkContext`` checkpoint dir; a cluster deployment points this at
-  HDFS/object storage). Survives executor loss; costs one write+read of
-  the truncated relation, which is the standard durability trade.
+  HDFS/object storage, and a non-local master without either is an
+  error). Survives executor loss; costs one write+read of the truncated
+  relation, which is the standard durability trade.
 
 Values are identical in both modes — a checkpoint materializes, never
 recomputes, its input. ``tests/test_ckpt_modes.py`` pins mode parity on
@@ -44,23 +45,36 @@ def _mode(spark) -> str:
         return "local"
 
 
+def _context_dir(sc) -> str | None:
+    """The ``SparkContext``'s checkpoint directory, if one is set."""
+    try:
+        opt = sc._jsc.sc().getCheckpointDir()
+        return opt.get() if opt.isDefined() else None
+    except Exception:  # noqa: BLE001 - py4j surface change: treat as unset
+        return None
+
+
 def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     """Truncate ``df``'s lineage; mode chosen by session conf (see module
     docstring). ``eager=False`` defers materialization to first use in
-    both modes."""
+    both modes.
+
+    Reliable mode on a non-local master refuses to run without a
+    configured directory: a node-local ``$TMPDIR`` fallback would not
+    survive the executor loss the mode exists for."""
     spark = df.sparkSession
     if _mode(spark) == "reliable":
         sc = spark.sparkContext
-        ckpt_dir = None
-        try:
-            opt = sc._jsc.sc().getCheckpointDir()
-            ckpt_dir = opt.get() if opt.isDefined() else None
-        except Exception:  # noqa: BLE001 - py4j surface change: treat as unset
-            ckpt_dir = None
-        if ckpt_dir is None:
+        if _context_dir(sc) is None:
             try:
                 target = spark.conf.get(DIR_CONF)
             except Exception:  # noqa: BLE001 - conf unset
+                if not sc.master.startswith("local"):
+                    raise ValueError(
+                        f"{MODE_CONF}=reliable on master {sc.master} needs "
+                        f"{DIR_CONF} (or a SparkContext checkpoint dir) on "
+                        "storage every executor shares"
+                    ) from None
                 target = os.path.join(
                     os.environ.get("TMPDIR", "/tmp"), "lakehouse_ckpt"
                 )

@@ -11,7 +11,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 
 from .ids import utterance_id
 from .schemas import UTTERANCE_SCHEMA, validate_schema
@@ -21,6 +21,7 @@ __all__ = [
     "split_valid",
     "normalize",
     "write_versioned",
+    "write_counted",
     "read_versioned",
     "read_as_of",
     "list_versions",
@@ -296,6 +297,22 @@ def write_versioned(
     return path
 
 
+def write_counted(
+    df: DataFrame, base_dir: str, artifact: str, version: str = "v1", **kw
+) -> int:
+    """`write_versioned` returning the number of rows written, observed on
+    the write itself (``DataFrame.observe``) instead of a second job that
+    recomputes or re-reads the artifact. Not for range-clustered txlog
+    writes (``partition_by`` on a txlog lake): their sampling pass would
+    feed the observation too."""
+    obs = Observation()
+    write_versioned(
+        df.observe(obs, F.count(F.lit(1)).alias("rows")),
+        base_dir, artifact, version, **kw,
+    )
+    return obs.get["rows"]
+
+
 def _stamp_version(path: str, version: str) -> None:
     """Sidecar `_version_info.json` with a UTC creation stamp — the
     metadata `read_as_of` resolves time-travel reads against. Underscore
@@ -548,16 +565,17 @@ def ingest(
         set_lake_format(base_dir, fmt)
     if existing is not None:
         raw = incremental_filter(raw, existing)
-    valid, invalid = split_valid(raw)
-    normalized = normalize(valid)
+    # both counts ride the write: the input rows are observed before the
+    # validity split, the valid rows as they are written
+    seen = Observation()
+    valid, _ = split_valid(raw.observe(seen, F.count(F.lit(1)).alias("rows")))
     # incremental mode APPENDS the new episodes — overwrite would replace
     # the whole table with only the delta, silently deleting every
     # previously ingested episode
-    write_versioned(
-        normalized, base_dir, "normalized", version,
+    n_valid = write_counted(
+        normalize(valid), base_dir, "normalized", version,
         mode="append" if existing is not None else "overwrite",
         schema=UTTERANCE_SCHEMA,
     )
-    n_valid = normalized.count()
-    n_invalid = invalid.count()
-    return {"valid": n_valid, "invalid": n_invalid, "total": n_valid + n_invalid}
+    n_total = seen.get["rows"]
+    return {"valid": n_valid, "invalid": n_total - n_valid, "total": n_total}

@@ -31,10 +31,6 @@ __all__ = [
 ]
 
 
-def _arr(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
-
-
 def max_equal_run(arr: Column) -> Column:
     """Longest run of equal CONSECUTIVE elements in a string array, as one
     JVM-side fold (no explode, no shuffle). Empty array -> 0."""

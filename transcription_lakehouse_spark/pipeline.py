@@ -33,7 +33,7 @@ from .catalogs.speakers import speaker_catalog
 from .embeddings import generate_embeddings
 from .ingestion import artifact_exists
 from .ingestion import ingest as _ingest
-from .ingestion import read_versioned, write_versioned
+from .ingestion import read_versioned, write_counted, write_versioned
 from .schemas import BEAT_SCHEMA, SECTION_SCHEMA, SPAN_SCHEMA
 from .session import get_spark
 from .sources.transcripts import read_jsonl, with_default_episode_id
@@ -69,7 +69,7 @@ def materialize(
     utterances = read_versioned(spark, lake_dir, "normalized", version)
 
     spans = enrich_spans(generate_spans(utterances), config, spark)
-    write_versioned(spans, lake_dir, "spans", version, schema=SPAN_SCHEMA)
+    n_spans = write_counted(spans, lake_dir, "spans", version, schema=SPAN_SCHEMA)
     spans = read_versioned(spark, lake_dir, "spans", version)
 
     if use_embeddings:
@@ -82,7 +82,7 @@ def materialize(
     beats = beat_speaker_metadata(beats, spans).withColumn(
         "topic_label", F.lit(None).cast("string")
     )
-    write_versioned(beats, lake_dir, "beats", version, schema=BEAT_SCHEMA)
+    n_beats = write_counted(beats, lake_dir, "beats", version, schema=BEAT_SCHEMA)
     beats = read_versioned(spark, lake_dir, "beats", version)
 
     beat_emb = None
@@ -90,25 +90,25 @@ def materialize(
         beat_emb = generate_embeddings(beats, "beat_id", "text", "beat")
         write_versioned(beat_emb, lake_dir, "embeddings_beat", version)
         beat_emb = read_versioned(spark, lake_dir, "embeddings_beat", version)
-    sections = generate_sections(beats, beat_emb)
-    write_versioned(sections, lake_dir, "sections", version, schema=SECTION_SCHEMA)
-
-    return {
-        "spans": spans.count(),
-        "beats": beats.count(),
-        "sections": read_versioned(spark, lake_dir, "sections", version).count(),
-    }
+    n_sections = write_counted(
+        generate_sections(beats, beat_emb), lake_dir, "sections", version,
+        schema=SECTION_SCHEMA,
+    )
+    return {"spans": n_spans, "beats": n_beats, "sections": n_sections}
 
 
 def catalog(
     spark: SparkSession, lake_dir: str, version: str = "v1"
 ) -> dict[str, int]:
     utterances = read_versioned(spark, lake_dir, "normalized", version)
-    episodes = episode_catalog(utterances)
-    speakers = speaker_catalog(utterances)
-    write_versioned(episodes, lake_dir, "catalogs/episodes", version)
-    write_versioned(speakers, lake_dir, "catalogs/speakers", version)
-    return {"episodes": episodes.count(), "speakers": speakers.count()}
+    return {
+        "episodes": write_counted(
+            episode_catalog(utterances), lake_dir, "catalogs/episodes", version
+        ),
+        "speakers": write_counted(
+            speaker_catalog(utterances), lake_dir, "catalogs/speakers", version
+        ),
+    }
 
 
 def quality(spark: SparkSession, lake_dir: str, version: str = "v1") -> dict:
@@ -145,27 +145,27 @@ def validate(
     """`lakehouse validate` parity (reference `cli/commands/validate.py:66`):
     integrity battery over the materialized artifacts — non-empty tables,
     timestamp quality, text quality, ID uniqueness, referential integrity,
-    NaN/Inf numerics — as ONE aggregation pass per artifact plus two
-    distinct-count probes; no per-row driver work.
+    NaN/Inf numerics — as ONE aggregation per artifact (`table_checks`);
+    no per-row driver work.
 
     Returns {"checks": {name: failing_count}, "tables": {name: rows},
     "ok": bool} — ok iff every failing_count is 0. ``fail_fast`` skips the
     remaining artifacts once one artifact has failures (cheap CI gate)."""
-    from .quality.metrics import integrity_counts, numeric_anomalies
+    from .quality.metrics import numeric_anomalies, table_checks
     from .schemas import UTTERANCE_SCHEMA, validate_schema
 
     checks: dict[str, int] = {}
     tables: dict[str, int] = {}
 
     utt = read_versioned(spark, lake_dir, "normalized", version)
-    tables["normalized"] = utt.count()
-    checks["normalized_empty"] = int(tables["normalized"] == 0)
+    u = table_checks(utt, "utterance_id")
+    tables["normalized"] = u["rows"]
+    checks["normalized_empty"] = int(u["rows"] == 0)
     checks["normalized_schema_problems"] = len(
         validate_schema(utt, UTTERANCE_SCHEMA)
     )
-    checks["utterance_id_dupes"] = tables["normalized"] - utt.select(
-        "utterance_id"
-    ).distinct().count()
+    checks["utterance_id_dupes"] = u["id_dupes"]
+    # names columns the normalized schema lacks (start/end): no job runs
     for name, d in numeric_anomalies(utt, ["start_time", "end_time"]).items():
         checks[f"normalized_{name}_nan_inf"] = d["nan"] + d["inf"]
 
@@ -179,23 +179,17 @@ def validate(
 
     if artifact_exists(lake_dir, "spans", version):
         spans = read_versioned(spark, lake_dir, "spans", version)
-        tables["spans"] = spans.count()
-        checks["spans_empty"] = int(tables["spans"] == 0)
+        # the battery covers timestamp quality (negative start/duration)
+        # and missing speaker/episode/text; the parent table gives
+        # referential integrity (every span's episode exists upstream)
+        s = table_checks(spans, "span_id", battery=True, parent=utt)
+        tables["spans"] = s["rows"]
+        checks["spans_empty"] = int(s["rows"] == 0)
         checks["spans_schema_problems"] = len(validate_schema(spans, SPAN_SCHEMA))
-        checks["span_id_dupes"] = tables["spans"] - spans.select(
-            "span_id"
-        ).distinct().count()
-        # battery covers timestamp quality (negative start/duration),
-        # missing speaker/episode/text — one scan
-        for key, val in integrity_counts(spans).items():
+        checks["span_id_dupes"] = s["id_dupes"]
+        for key, val in s["integrity"].items():
             checks[f"spans_{key}"] = val
-        # referential integrity: every span's episode exists upstream
-        checks["spans_orphan_episodes"] = (
-            spans.select("episode_id")
-            .distinct()
-            .join(utt.select("episode_id").distinct(), "episode_id", "left_anti")
-            .count()
-        )
+        checks["spans_orphan_episodes"] = s["orphans"]
 
     return {
         "checks": checks,

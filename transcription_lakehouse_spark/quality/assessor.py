@@ -12,17 +12,13 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 
 from .metrics import (
     coverage_metrics,
-    duplicate_groups,
-    duration_stats,
-    integrity_counts,
     length_compliance,
+    span_battery,
     speaker_balance,
-    text_metrics,
-    timestamp_regressions,
 )
 
 __all__ = ["Thresholds", "Violation", "assess"]
@@ -87,25 +83,25 @@ def assess(
     violations: list[Violation] = []
     metrics: dict = {}
 
-    # A: coverage — collect only the WORST max_detail_rows episodes plus a
-    # distributed rollup; per-episode violation detail is bounded even on a
-    # million-episode lake
-    # persist: the detail limit and the rollup both execute this aggregate
-    cov = coverage_metrics(spans, episodes).persist()
-    cov_rows = (
-        cov.orderBy(F.asc("coverage_pct"), F.asc("episode_id"))
-        .limit(th.max_detail_rows)
-        .collect()
-    )
-    cov_summary = cov.agg(
+    # A: coverage — collect only the WORST max_detail_rows episodes; the
+    # rollup over every episode is observed on that same pass, so the
+    # per-episode violation detail is bounded even on a million-episode lake
+    cov_obs = Observation()
+    cov = coverage_metrics(spans, episodes).observe(
+        cov_obs,
         F.count(F.lit(1)).alias("n_episodes"),
         F.sum((F.col("coverage_pct") < th.min_coverage_pct).cast("long")).alias(
             "n_below_threshold"
         ),
         F.round(F.avg("coverage_pct"), 2).alias("avg_coverage_pct"),
         F.min("coverage_pct").alias("min_coverage_pct"),
-    ).collect()[0].asDict()
-    cov.unpersist()
+    )
+    cov_rows = (
+        cov.orderBy(F.asc("coverage_pct"), F.asc("episode_id"))
+        .limit(th.max_detail_rows)
+        .collect()
+    )
+    cov_summary = cov_obs.get
     metrics["coverage"] = [r.asDict() for r in cov_rows]
     metrics["coverage_summary"] = cov_summary
     n_below = int(cov_summary["n_below_threshold"] or 0)
@@ -130,9 +126,10 @@ def assess(
             )
         )
 
-    # B: distribution
-    metrics["span_duration"] = duration_stats(spans).collect()[0].asDict()
-    comp = length_compliance(spans, *th.span_len_range)
+    # B (distribution), C (integrity) and E (text) in one job
+    battery = span_battery(spans, *th.span_len_range)
+    metrics["span_duration"] = battery["span_duration"]
+    comp = battery["span_compliance"]
     metrics["span_compliance"] = comp
     if comp["pct_in_range"] < th.min_len_compliance_pct:
         violations.append(
@@ -141,7 +138,7 @@ def assess(
         )
 
     # C: integrity
-    ic = integrity_counts(spans)
+    ic = battery["integrity"]
     metrics["integrity"] = ic
     bad = sum(ic.values())
     if bad > th.max_integrity_violations:
@@ -149,17 +146,15 @@ def assess(
             Violation("integrity", "violation counts", "error", bad,
                       th.max_integrity_violations)
         )
-    n_dup = duplicate_groups(spans).count()
+    n_dup = battery["duplicate_groups"]
     metrics["duplicate_groups"] = n_dup
     if n_dup > th.max_duplicate_groups:
         violations.append(
             Violation("integrity", "exact duplicate groups", "warning", n_dup,
                       th.max_duplicate_groups)
         )
-    regs = timestamp_regressions(spans).agg(
-        F.sum("episode_regressions").alias("r")
-    ).collect()[0]["r"] or 0
-    metrics["regressions"] = int(regs)
+    regs = battery["regressions"]
+    metrics["regressions"] = regs
     if regs > th.max_regressions:
         violations.append(
             Violation("integrity", "timestamp regressions", "warning", regs,
@@ -167,27 +162,30 @@ def assess(
         )
 
     # D: balance — top-N by rank + ONE tail-rollup row, never the full
-    # per-speaker list (a 100k-speaker corpus must not OOM the driver)
-    bal = speaker_balance(spans).persist()  # head + tail both execute it
-    head = bal.filter(F.col("rank") <= th.max_detail_rows)
-    tail = bal.filter(F.col("rank") > th.max_detail_rows).agg(
+    # per-speaker list (a 100k-speaker corpus must not OOM the driver); the
+    # tail is observed on the pass that collects the head
+    in_head = F.col("rank") <= th.max_detail_rows
+    tail_obs = Observation()
+    bal = speaker_balance(spans).observe(
+        tail_obs,
         F.lit("<tail>").alias("speaker"),
-        F.sum("n_segments").alias("n_segments"),
-        F.round(F.sum("total_duration"), 6).alias("total_duration"),
+        F.sum(F.when(~in_head, F.col("n_segments"))).alias("n_segments"),
+        F.round(F.sum(F.when(~in_head, F.col("total_duration"))), 6).alias(
+            "total_duration"
+        ),
         F.lit(None).cast("int").alias("rank"),
-        F.round(F.sum("pct_duration"), 2).alias("pct_duration"),
+        F.round(F.sum(F.when(~in_head, F.col("pct_duration"))), 2).alias(
+            "pct_duration"
+        ),
         F.lit(False).alias("in_top_n"),
-        F.count(F.lit(1)).alias("n_speakers_in_tail"),
+        F.count(F.when(~in_head, 1)).alias("n_speakers_in_tail"),
     )
-    balance_rows = [r.asDict() for r in head.collect()]
-    tail_row = tail.collect()[0].asDict()
-    bal.unpersist()
-    if (tail_row["n_speakers_in_tail"] or 0) > 0:
-        balance_rows.append(tail_row)
+    balance_rows = [r.asDict() for r in bal.filter(in_head).collect()]
+    if tail_obs.get["n_speakers_in_tail"] > 0:
+        balance_rows.append(tail_obs.get)
     metrics["speaker_balance"] = balance_rows
 
-    # E: text quality
-    metrics["text"] = text_metrics(spans).collect()[0].asDict()
+    metrics["text"] = battery["text"]
 
     # B for beats (optional)
     if beats is not None:

@@ -8,7 +8,7 @@ there, single-shuffle window/agg compositions here.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 
 from ..functions.text import content_tokens, punct_ratio, token_count
 from ..operators.intervals import merged_intervals, sweep_concurrency
@@ -23,8 +23,10 @@ __all__ = [
     "series_balance",
     "text_metrics",
     "integrity_counts",
+    "span_battery",
     "duplicate_groups",
     "numeric_anomalies",
+    "table_checks",
     "timestamp_regressions",
 ]
 
@@ -48,10 +50,13 @@ def coverage_metrics(segments: DataFrame, episodes: DataFrame) -> DataFrame:
         F.max("active").alias("max_concurrency"),
         F.sum((F.col("active") >= 2).cast("long")).alias("n_overlap_points"),
     )
+    # all three sides are already hash-partitioned on episode_id: merge
+    # joins need no further exchange, where broadcasting the per-episode
+    # aggregates would cost a job each and grow with the episode count
     out = (
         episodes.select("episode_id", "duration_seconds")
-        .join(per_ep, "episode_id", "left")
-        .join(overlaps, "episode_id", "left")
+        .join(per_ep.hint("merge"), "episode_id", "left")
+        .join(overlaps.hint("merge"), "episode_id", "left")
         .fillna(0, ["covered_seconds", "n_islands", "n_overlap_points"])
     )
     # guard the division: null/zero episode duration must read as 0 coverage
@@ -74,19 +79,46 @@ def coverage_metrics(segments: DataFrame, episodes: DataFrame) -> DataFrame:
 # --- Category B: distribution (`quality/metrics/distribution.py`) -----------
 
 
+def _aliased(aggs: dict[str, Column]) -> list[Column]:
+    return [c.alias(name) for name, c in aggs.items()]
+
+
+def _duration_aggs() -> dict[str, Column]:
+    return {
+        "n": F.count(F.lit(1)),
+        "min_duration": F.round(F.min("duration"), 6),
+        "max_duration": F.round(F.max("duration"), 6),
+        "mean_duration": F.round(F.avg("duration"), 6),
+        "p5_duration": F.round(F.percentile("duration", F.lit(0.05)), 6),
+        "median_duration": F.round(F.percentile("duration", F.lit(0.5)), 6),
+        "p95_duration": F.round(F.percentile("duration", F.lit(0.95)), 6),
+        "std_duration": F.round(F.stddev("duration"), 6),
+    }
+
+
 def duration_stats(segments: DataFrame, group_col: str | None = None) -> DataFrame:
     """A7: min/max/mean/median/p5/p95/std of segment duration."""
     g = segments.groupBy(group_col) if group_col else segments.groupBy()
-    return g.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.min("duration"), 6).alias("min_duration"),
-        F.round(F.max("duration"), 6).alias("max_duration"),
-        F.round(F.avg("duration"), 6).alias("mean_duration"),
-        F.round(F.percentile("duration", F.lit(0.05)), 6).alias("p5_duration"),
-        F.round(F.percentile("duration", F.lit(0.5)), 6).alias("median_duration"),
-        F.round(F.percentile("duration", F.lit(0.95)), 6).alias("p95_duration"),
-        F.round(F.stddev("duration"), 6).alias("std_duration"),
-    )
+    return g.agg(*_aliased(_duration_aggs()))
+
+
+def _compliance_aggs(lo: float, hi: float) -> dict[str, Column]:
+    return {
+        "n": F.count(F.lit(1)),
+        "short": F.sum((F.col("duration") < lo).cast("long")),
+        "long": F.sum((F.col("duration") > hi).cast("long")),
+    }
+
+
+def _compliance(counts: dict) -> dict[str, float]:
+    n = counts["n"] or 1
+    pct_short = round(counts["short"] * 100.0 / n, 2)
+    pct_long = round(counts["long"] * 100.0 / n, 2)
+    return {
+        "pct_in_range": round(100.0 - pct_short - pct_long, 2),
+        "pct_too_short": pct_short,
+        "pct_too_long": pct_long,
+    }
 
 
 def length_compliance(
@@ -94,19 +126,8 @@ def length_compliance(
 ) -> dict[str, float]:
     """A8: % within [lo,hi] / too short / too long, forced to sum to 100
     (`distribution.py:192-197`)."""
-    row = segments.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum((F.col("duration") < lo).cast("long")).alias("short"),
-        F.sum((F.col("duration") > hi).cast("long")).alias("long"),
-    ).collect()[0]
-    n = row["n"] or 1
-    pct_short = round(row["short"] * 100.0 / n, 2)
-    pct_long = round(row["long"] * 100.0 / n, 2)
-    return {
-        "pct_in_range": round(100.0 - pct_short - pct_long, 2),
-        "pct_too_short": pct_short,
-        "pct_too_long": pct_long,
-    }
+    row = segments.agg(*_aliased(_compliance_aggs(lo, hi))).collect()[0]
+    return _compliance(row.asDict())
 
 
 def duration_histogram(segments: DataFrame, edges: list[float]) -> DataFrame:
@@ -165,66 +186,127 @@ def series_balance(segments: DataFrame, episodes: DataFrame) -> DataFrame:
 # --- Category E: text quality (`quality/metrics/text_quality.py`) -----------
 
 
-def text_metrics(segments: DataFrame, group_col: str | None = None) -> DataFrame:
-    """A12-A14: token/char counts, lexical density, punctuation ratio."""
-    base = segments.select(
-        *( [group_col] if group_col else [] ),
+def _text_cols() -> list[Column]:
+    return [
         token_count("text").alias("n_tokens"),
         F.length("text").alias("n_chars"),
         F.size(content_tokens("text")).alias("n_content"),
         punct_ratio("text").alias("punct"),
-    )
+    ]
+
+
+def _text_aggs() -> dict[str, Column]:
+    """Aggregates over the :func:`_text_cols` projection."""
+    return {
+        "n_segments": F.count(F.lit(1)),
+        "total_tokens": F.sum("n_tokens"),
+        "avg_tokens": F.round(F.avg("n_tokens"), 4),
+        "avg_chars": F.round(F.avg("n_chars"), 4),
+        "lexical_density": F.round(F.sum("n_content") / F.sum("n_tokens"), 6),
+        "avg_punct_ratio": F.round(F.avg("punct"), 6),
+    }
+
+
+def text_metrics(segments: DataFrame, group_col: str | None = None) -> DataFrame:
+    """A12-A14: token/char counts, lexical density, punctuation ratio."""
+    base = segments.select(*( [group_col] if group_col else [] ), *_text_cols())
     g = base.groupBy(group_col) if group_col else base.groupBy()
-    return g.agg(
-        F.count(F.lit(1)).alias("n_segments"),
-        F.sum("n_tokens").alias("total_tokens"),
-        F.round(F.avg("n_tokens"), 4).alias("avg_tokens"),
-        F.round(F.avg("n_chars"), 4).alias("avg_chars"),
-        F.round(F.sum("n_content") / F.sum("n_tokens"), 6).alias("lexical_density"),
-        F.round(F.avg("punct"), 6).alias("avg_punct_ratio"),
-    )
+    return g.agg(*_aliased(_text_aggs()))
 
 
 # --- Category C: integrity (`quality/metrics/integrity.py`) -----------------
 
 
+def _integrity_aggs() -> dict[str, Column]:
+    return {
+        "negative_duration": F.sum((F.col("duration") < 0).cast("long")),
+        "zero_duration": F.sum((F.col("duration") == 0).cast("long")),
+        "missing_episode_id": F.sum(
+            (F.col("episode_id").isNull() | (F.trim("episode_id") == "")).cast("long")
+        ),
+        "missing_speaker": F.sum(
+            (F.col("speaker").isNull() | (F.trim("speaker") == "")).cast("long")
+        ),
+        "missing_text": F.sum(
+            (F.col("text").isNull() | (F.trim("text") == "")).cast("long")
+        ),
+        "negative_start": F.sum((F.col("start_time") < 0).cast("long")),
+    }
+
+
 def integrity_battery(segments: DataFrame) -> DataFrame:
     """A17: violation-count battery as ONE conditional aggregation pass
     (single scan regardless of how many checks ride it)."""
-    return segments.agg(
-        F.sum((F.col("duration") < 0).cast("long")).alias("negative_duration"),
-        F.sum((F.col("duration") == 0).cast("long")).alias("zero_duration"),
-        F.sum(
-            (F.col("episode_id").isNull() | (F.trim("episode_id") == "")).cast("long")
-        ).alias("missing_episode_id"),
-        F.sum(
-            (F.col("speaker").isNull() | (F.trim("speaker") == "")).cast("long")
-        ).alias("missing_speaker"),
-        F.sum((F.col("text").isNull() | (F.trim("text") == "")).cast("long")).alias(
-            "missing_text"
-        ),
-        F.sum((F.col("start_time") < 0).cast("long")).alias("negative_start"),
-    )
+    return segments.agg(*_aliased(_integrity_aggs()))
+
+
+def _integrity_dict(counts: dict) -> dict[str, int]:
+    return {k: int(counts[k] or 0) for k in _integrity_aggs()}
 
 
 def integrity_counts(segments: DataFrame) -> dict[str, int]:
     """Dict view of :func:`integrity_battery` for the assessor."""
-    row = integrity_battery(segments).collect()[0]
-    return {k: int(row[k] or 0) for k in row.asDict()}
+    return _integrity_dict(integrity_battery(segments).collect()[0].asDict())
+
+
+def span_battery(segments: DataFrame, lo: float, hi: float) -> dict:
+    """Categories B, C and E as ONE job: the values of
+    :func:`duration_stats`, :func:`length_compliance` (within
+    ``[lo, hi]``), :func:`integrity_counts`, :func:`text_metrics`, the
+    :func:`duplicate_groups` count and the :func:`timestamp_regressions`
+    episode total. The keyed checks are windows over one episode_id
+    shuffle; everything else aggregates the same rows."""
+    keyed = segments.select(
+        "duration", "start_time", "end_time", "text", *_text_cols(),
+        _dup_eligible().alias("_dup_eligible"), *_dup_key(),
+    )
+    w_dup = Window.partitionBy(
+        "_dup_eligible", "fp", "episode_id", "speaker", "time_bin"
+    ).orderBy("start_time")
+    flagged = keyed.select(
+        "*",
+        # the episode window comes first so its episode_id shuffle also
+        # serves the duplicate-key window
+        _regression(Window.partitionBy("episode_id").orderBy(
+            "start_time", "end_time")).alias("_regression"),
+        # one marked row per duplicate group (a key with 2+ rows)
+        F.when(
+            F.col("_dup_eligible") & (F.row_number().over(w_dup) == 2), 1
+        ).alias("_dup_group"),
+    )
+    # the batteries' names are disjoint apart from the shared count "n"
+    row = flagged.agg(*_aliased({
+        **_duration_aggs(), **_compliance_aggs(lo, hi), **_integrity_aggs(),
+        **_text_aggs(),
+        "duplicate_groups": F.count("_dup_group"),
+        "regressions": F.sum("_regression"),
+    })).collect()[0].asDict()
+    return {
+        "span_duration": {k: row[k] for k in _duration_aggs()},
+        "span_compliance": _compliance(row),
+        "integrity": _integrity_dict(row),
+        "text": {k: row[k] for k in _text_aggs()},
+        "duplicate_groups": row["duplicate_groups"],
+        "regressions": int(row["regressions"] or 0),
+    }
+
+
+def _dup_eligible() -> Column:
+    return F.length(F.trim("text")) >= 10
+
+
+def _dup_key() -> list[Column]:
+    return [fingerprint("text").alias("fp"), F.col("episode_id"),
+            F.col("speaker"), F.floor(F.col("start_time") / 300).alias("time_bin")]
 
 
 def duplicate_groups(segments: DataFrame) -> DataFrame:
     """A16: exact-dup groups on (normalized text, episode, speaker, 5-min
     time bin) having count > 1 (`integrity.py:459-549`); texts < 10 chars are
     exempt (F7)."""
-    eligible = segments.filter(F.length(F.trim("text")) >= 10)
     return (
-        eligible.groupBy(
-            fingerprint("text").alias("fp"),
-            "episode_id",
-            "speaker",
-            F.floor(F.col("start_time") / 300).alias("time_bin"),
-        )
+        segments.filter(_dup_eligible())
+        .groupBy(*_dup_key())
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") > 1)
         .withColumn("n_duplicates", F.col("n") - 1)
@@ -262,18 +344,53 @@ def numeric_anomalies(df: DataFrame, columns: list[str] | None = None) -> dict[s
     }
 
 
+def table_checks(
+    df: DataFrame, id_col: str, battery: bool = False,
+    parent: DataFrame | None = None,
+) -> dict:
+    """An artifact's validation counts as ONE aggregate: ``rows``,
+    ``id_dupes`` (rows minus distinct ids; all NULL ids count as one id,
+    as ``DISTINCT`` does), with ``battery`` the :func:`integrity_counts`
+    battery as ``integrity``, and with a ``parent`` table ``orphans``: the
+    distinct ``episode_id`` values (NULL included, it never matches) that
+    ``parent`` lacks."""
+    aggs = {
+        "rows": F.count(F.lit(1)),
+        "ids": F.count_distinct(id_col),
+        "null_id": F.max(F.col(id_col).isNull().cast("long")),
+        **(_integrity_aggs() if battery else {}),
+    }
+    if parent is not None:
+        known = parent.select("episode_id").distinct().withColumn("_known", F.lit(True))
+        df = df.join(known, "episode_id", "left")
+        aggs["orphans"] = F.count_distinct(
+            F.when(F.col("_known").isNull(), F.col("episode_id"))
+        )
+        aggs["null_orphan"] = F.max(F.col("episode_id").isNull().cast("long"))
+    row = df.agg(*_aliased(aggs)).collect()[0].asDict()
+    out = {"rows": row["rows"],
+           "id_dupes": row["rows"] - row["ids"] - (row["null_id"] or 0)}
+    if battery:
+        out["integrity"] = _integrity_dict(row)
+    if parent is not None:
+        out["orphans"] = row["orphans"] + (row["null_orphan"] or 0)
+    return out
+
+
+def _regression(w: WindowSpec) -> Column:
+    """1 where a row ends after the next row (under ``w``) starts."""
+    nxt = F.lead("start_time").over(w)
+    return (nxt.isNotNull() & (F.col("end_time") > nxt)).cast("long")
+
+
 def timestamp_regressions(segments: DataFrame) -> DataFrame:
     """W6 applied per episode and per (episode, speaker)."""
     w1 = Window.partitionBy("episode_id").orderBy("start_time", "end_time")
     w2 = Window.partitionBy("episode_id", "speaker").orderBy(
         "start_time", "end_time"
     )
-    v1 = (F.lead("start_time").over(w1).isNotNull() & (
-        F.col("end_time") > F.lead("start_time").over(w1))).cast("long")
-    v2 = (F.lead("start_time").over(w2).isNotNull() & (
-        F.col("end_time") > F.lead("start_time").over(w2))).cast("long")
     return segments.select(
-        "episode_id", v1.alias("_v1"), v2.alias("_v2")
+        "episode_id", _regression(w1).alias("_v1"), _regression(w2).alias("_v2")
     ).groupBy("episode_id").agg(
         F.sum("_v1").alias("episode_regressions"),
         F.sum("_v2").alias("speaker_regressions"),

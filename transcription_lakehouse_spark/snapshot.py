@@ -5,9 +5,10 @@ parquet into `snapshots/vX.Y.Z/`, writes `lake_manifest.json` with per-file
 sha256 + row counts, and refuses to overwrite an existing version
 (immutability contract, `creator.py:99-130`, `manifest.py:39-92`).
 
-Spark note: file checksums are driver-side I/O by design (manifests are
-O(files), not O(rows)); row counts come from parquet footers via Spark. On
-Delta-capable clusters, `CLONE` + time travel replaces the copy (SURVEY §1).
+Spark note: file checksums and row counts are driver-side I/O by design
+(manifests are O(files), not O(rows)): the rows come from the footers of
+the parquet files just copied, with no Spark job. On Delta-capable
+clusters, `CLONE` + time travel replaces the copy (SURVEY §1).
 """
 
 from __future__ import annotations
@@ -18,9 +19,17 @@ import os
 import shutil
 from datetime import datetime, timezone
 
+import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 
 __all__ = ["create_snapshot", "verify_snapshot"]
+
+
+def _data_file(rel: str) -> bool:
+    """Whether a parquet scan reads ``rel``: no hidden or ``_``-prefixed
+    path part (checksums, markers), bar ``key=value`` partition dirs."""
+    return not any(p.startswith(".") or (p.startswith("_") and "=" not in p)
+                   for p in rel.split(os.sep))
 
 
 def _sha256(path: str) -> str:
@@ -117,13 +126,14 @@ def create_snapshot(
                 continue
             dst = os.path.join(snap_dir, art)
             shutil.copytree(src, dst)
-        files = {}
+        files, n_rows = {}, 0
         for root, _, names in os.walk(dst):
             for n in sorted(names):
                 p = os.path.join(root, n)
                 rel = os.path.relpath(p, snap_dir)
                 files[rel] = {"sha256": _sha256(p), "bytes": os.path.getsize(p)}
-        n_rows = spark.read.parquet(dst).count()
+                if _data_file(os.path.relpath(p, dst)):
+                    n_rows += pq.ParquetFile(p).metadata.num_rows
         manifest["artifacts"][art] = {"files": files, "rows": n_rows}
     with open(os.path.join(snap_dir, "lake_manifest.json"), "w") as f:
         json.dump(manifest, f, indent=2, sort_keys=True)

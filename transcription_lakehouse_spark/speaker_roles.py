@@ -61,6 +61,9 @@ def enrich_spans(spans: DataFrame, config: SpeakerRoleConfig, spark: SparkSessio
     )
 
 
+_BEAT_META = ("speakers_set", "expert_span_ids", "expert_coverage_pct")
+
+
 def beat_speaker_metadata(beats: DataFrame, spans: DataFrame) -> DataFrame:
     """J1 + SO3 + A18: enrich beats with speakers_set (ordered distinct by
     first appearance), expert_span_ids, and token-weighted
@@ -68,10 +71,21 @@ def beat_speaker_metadata(beats: DataFrame, spans: DataFrame) -> DataFrame:
 
     Shape: explode beat.span_ids → join spans (broadcastable when spans are
     per-episode small; otherwise a shuffle equi-join on span_id) →
-    re-aggregate per beat.
+    re-aggregate per beat. The beat row rides along on its first exploded
+    element, so ``beats`` is consumed once (no join back to it, which
+    would re-run its whole lineage) and its payload is shuffled once per
+    beat, not once per span.
     """
+    cols = [c for c in beats.columns if c not in _BEAT_META]
     exploded = beats.select(
-        "beat_id", F.posexplode("span_ids").alias("pos", "span_id")
+        F.struct(*cols).alias("_beat"),
+        F.posexplode_outer("span_ids").alias("pos", "span_id"),
+    ).select(
+        F.col("_beat.beat_id").alias("_beat_id"),
+        # the outer explode keeps a beat without span ids as one null row
+        F.when(F.coalesce("pos", F.lit(0)) == 0, F.col("_beat")).alias("_beat"),
+        "pos",
+        "span_id",
     )
     sp = spans.select(
         "span_id",
@@ -81,18 +95,21 @@ def beat_speaker_metadata(beats: DataFrame, spans: DataFrame) -> DataFrame:
         F.size(F.split("text", r"\s+")).alias("_tokens"),
     )
     joined = exploded.join(sp, "span_id", "left")
-    agg = joined.groupBy("beat_id").agg(
+    # a beat without span ids gets NULL metadata, as an unmatched join would
+    has_spans = F.count("pos") > 0
+    agg = joined.groupBy("_beat_id").agg(
+        F.any_value("_beat", ignoreNulls=True).alias("_beat"),
         # ordered-distinct speakers by span position within the beat (SO3)
-        F.array_distinct(
+        F.when(has_spans, F.array_distinct(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "_speaker"))),
                 lambda s: s["_speaker"],
             )
-        ).alias("speakers_set"),
-        F.sort_array(
+        )).alias("speakers_set"),
+        F.when(has_spans, F.sort_array(
             F.collect_list(F.when(F.col("is_expert"), F.col("span_id")))
-        ).alias("expert_span_ids"),
-        F.round(
+        )).alias("expert_span_ids"),
+        F.when(has_spans, F.round(
             F.coalesce(
                 F.sum(F.when(F.col("is_expert"), F.col("_tokens")).otherwise(0))
                 * 100.0
@@ -100,8 +117,10 @@ def beat_speaker_metadata(beats: DataFrame, spans: DataFrame) -> DataFrame:
                 F.lit(0.0),
             ),
             2,
-        ).alias("expert_coverage_pct"),
+        )).alias("expert_coverage_pct"),
     )
-    return beats.drop(
-        "speakers_set", "expert_span_ids", "expert_coverage_pct"
-    ).join(agg, "beat_id", "left")
+    return agg.select(
+        "_beat.beat_id",
+        *[f"_beat.{c}" for c in cols if c != "beat_id"],
+        *_BEAT_META,
+    )

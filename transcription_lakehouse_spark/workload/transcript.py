@@ -924,15 +924,6 @@ def _span_sem_embedding_col() -> Column:
     )
 
 
-def _span_sem_embeddings(spans: DataFrame) -> DataFrame:
-    """DataFrame form of :func:`_span_sem_embedding_col` (artifact_id,
-    embedding), for sink-shaped consumers."""
-    return spans.select(
-        F.col("span_id").alias("artifact_id"),
-        _span_sem_embedding_col().alias("embedding"),
-    ).filter(F.col("embedding").isNotNull())
-
-
 def _span_emb_list_sql() -> str:
     topic = "regexp_extract(text, '^\\S+')"
     comps = ", ".join(
@@ -949,14 +940,6 @@ def _beat_sem_embedding_col() -> Column:
     return F.when(
         F.substring(F.md5("text"), 1, 1) != _SEM_BEAT_NULL_HEX, F.array(*comps)
     )
-
-
-def _beat_sem_embeddings(beats: DataFrame) -> DataFrame:
-    """DataFrame form of :func:`_beat_sem_embedding_col`."""
-    return beats.select(
-        F.col("beat_id").alias("artifact_id"),
-        _beat_sem_embedding_col().alias("embedding"),
-    ).filter(F.col("embedding").isNotNull())
 
 
 def _beat_emb_list_sql() -> str:

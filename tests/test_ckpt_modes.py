@@ -118,3 +118,91 @@ def test_graph_walk_mode_parity(spark):
         rel = run()
     assert local == rel
     assert local
+
+
+def test_local_checkpoint_only_in_ckpt():
+    """Every lineage cut in the package goes through `cut_lineage`, so the
+    checkpoint mode switch reaches all of them."""
+    import pathlib
+
+    import transcription_lakehouse_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    raw = sorted(
+        str(f.relative_to(root))
+        for f in root.rglob("*.py")
+        if "localCheckpoint(" in f.read_text()
+    )
+    assert raw == ["ckpt.py"]
+
+
+def test_stream_cluster_update_mode_parity(spark, tmp_path):
+    """A streaming ingest path (dup-cluster maintenance: a first batch,
+    then a batch folded into the existing state) lands the same clusters
+    in both modes."""
+    import json
+
+    from transcription_lakehouse_spark.streaming.ingest import (
+        read_versioned_state,
+        stream_cluster_update,
+    )
+
+    base = (
+        "the quick brown fox jumps over the lazy dog while the cat "
+        "watches from the fence and the birds sing in the morning light"
+    )
+    batches = [
+        [{"doc_id": "a1", "text": base},
+         {"doc_id": "a2", "text": base + " today"},
+         {"doc_id": "b1", "text": "spacecraft navigation and orbital "
+                                  "mechanics for deep space missions"}],
+        [{"doc_id": "a3", "text": base + " tonight"}],
+    ]
+
+    def run(mode):
+        d, state = tmp_path / f"in_{mode}", str(tmp_path / f"state_{mode}")
+        d.mkdir()
+        with _mode(spark, mode):
+            for i, docs in enumerate(batches):
+                (d / f"{i}.jsonl").write_text(
+                    "\n".join(json.dumps(r) for r in docs)
+                )
+                stream_cluster_update(
+                    spark, str(d), state, str(tmp_path / f"ck_{mode}")
+                ).awaitTermination(120)
+        return _rows(read_versioned_state(spark, f"{state}/clusters"))
+
+    local = run("local")
+    assert local == run("reliable")
+    assert len(local) == 3  # a1 keeps a2 and a3
+
+
+def test_matview_refresh_mode_parity(spark, tmp_path):
+    """An incremental matview refresh (delta pin, min/max recompute flag,
+    change rows — all three cuts) gives the same view in both modes."""
+    from transcription_lakehouse_spark.matview import IncrementalAggView
+    from transcription_lakehouse_spark.txlog import LogTable
+
+    def mk(rows):
+        return spark.createDataFrame(
+            [(i, g, i * 0.5) for i, g in rows],
+            "id bigint, grp string, val double",
+        )
+
+    def run(mode):
+        src = LogTable(spark, str(tmp_path / f"src_{mode}"))
+        mv = IncrementalAggView(
+            spark, src, str(tmp_path / f"mv_{mode}"), group_by="grp",
+            sum_cols=["val"], min_cols=["val"], max_cols=["val"],
+        )
+        with _mode(spark, mode):
+            src.append(mk([(1, "a"), (2, "a"), (3, "b")]))
+            mv.refresh()
+            src.append(mk([(4, "b"), (5, "c")]))
+            src.delete("id = 1")  # group a's min: targeted recompute
+            mv.refresh()
+        return _rows(mv.read())
+
+    local = run("local")
+    assert local == run("reliable")
+    assert len(local) == 3

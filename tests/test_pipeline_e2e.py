@@ -373,13 +373,15 @@ def test_snapshot_immutable_and_verifiable(spark, tmp_path):
     assert any("checksum mismatch" in p for p in verify_snapshot(snap))
 
 
-# `validate` on `_corrupt_lake`; NaN/Inf checks name columns the
-# normalized table does not have, so no normalized_*_nan_inf key appears
+# `validate` on `_corrupt_lake`; the planted NaN start is counted by the
+# normalized table's NaN/Inf check
 VALIDATE_CORRUPT = {
     "checks": {
         "normalized_empty": 0,
         "normalized_schema_problems": 0,
         "utterance_id_dupes": 2,
+        "normalized_start_nan_inf": 1,
+        "normalized_end_nan_inf": 0,
         "spans_empty": 0,
         "spans_schema_problems": 0,
         "span_id_dupes": 1,
@@ -399,6 +401,8 @@ VALIDATE_FAIL_FAST = {
         "normalized_empty": 0,
         "normalized_schema_problems": 0,
         "utterance_id_dupes": 2,
+        "normalized_start_nan_inf": 1,
+        "normalized_end_nan_inf": 0,
     },
     "tables": {"normalized": 5},
     "ok": False,

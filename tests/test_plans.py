@@ -551,14 +551,8 @@ def test_graph_walk_plan_size_bounded_and_deep_walk_checkpoints(spark):
     # beam — force it on at hops=2 and compare against the default
     from transcription_lakehouse_spark.operators import graph_ann as ga
 
-    q = queries.select(
-        F.col("vec_id").alias("query_id"),
-        ga.as_double_array("embedding").alias("qv"),
-    ).withColumn("qn", ga.l2_norm(F.col("qv")))
-    c = emb.select(
-        F.col("vec_id").alias("node_id"),
-        ga.as_double_array("embedding").alias("cv"),
-    ).withColumn("cn", ga.l2_norm(F.col("cv")))
+    q = ga._vec_side(queries, "vec_id", "embedding", "query_id", "qv", "qn")
+    c = ga._vec_side(emb, "vec_id", "embedding", "node_id", "cv", "cn")
     qb = ga._banded_buckets(q.select("query_id", "qv"), "qv", 2, 4)
     cb = ga._banded_buckets(c.select("node_id", "cv"), "cv", 2, 4)
     seeds = (

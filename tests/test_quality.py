@@ -270,16 +270,20 @@ def test_random_pairs_distinct_and_nonempty(spark):
     assert sorted(map(tuple, pairs)) == sorted(map(tuple, again))
 
 
-def test_numeric_anomalies(spark):
-    from transcription_lakehouse_spark.quality.metrics import numeric_anomalies
+def test_table_checks_nan_inf(spark):
+    """NaN and ±Inf are counted per numeric column inside the artifact's
+    one aggregate; NULL is neither."""
+    from transcription_lakehouse_spark.quality.metrics import table_checks
 
     df = spark.createDataFrame(
-        [(1.0, 2.0), (float("nan"), 3.0), (None, float("inf")), (4.0, -float("inf"))],
-        "a double, b double",
+        [(1, 1.0, 2.0), (2, float("nan"), 3.0), (3, None, float("inf")),
+         (4, 4.0, -float("inf"))],
+        "id long, a double, b double",
     )
-    out = numeric_anomalies(df)
-    assert out["a"] == {"nan": 1, "null": 1, "inf": 0}
-    assert out["b"] == {"nan": 0, "null": 0, "inf": 2}
+    out = table_checks(df, "id", numeric=("a", "b"))
+    assert out["nan_inf"] == {"a": 1, "b": 2}
+    assert out["rows"] == 4 and out["id_dupes"] == 0
+    assert "nan_inf" not in table_checks(df, "id")
 
 
 def test_weighted_sample_props(spark):

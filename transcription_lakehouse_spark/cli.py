@@ -83,6 +83,7 @@ def ingest(input_path, lakehouse_path, pattern, version, dry_run,
     ) else input_path
     raw = with_default_episode_id(read_jsonl(spark, glob_path))
 
+    from .ckpt import cut_lineage
     from .ingestion import incremental_filter, seen_episode_ids
 
     existing = None
@@ -101,9 +102,9 @@ def ingest(input_path, lakehouse_path, pattern, version, dry_run,
         # pin ONLY the matched episode ids (not the full table) before
         # writing to the same path: cheap, and the plan stays independent
         # of the sink's file listing
-        existing = seen_episode_ids(
+        existing = cut_lineage(seen_episode_ids(
             spark, lakehouse_path, "normalized", version, batch_ids
-        ).localCheckpoint()
+        ))
         # validation/dry-run stats must describe what WOULD be ingested —
         # the post-filter delta — not episodes already in the lake
         raw = incremental_filter(raw, existing)
@@ -713,6 +714,7 @@ def curate(documents_path, output_dir, shards, seed, max_repeats,
     import pyspark.sql.functions as F
 
     from ._quality_model import BIAS, WEIGHTS
+    from .ckpt import cut_lineage
     from .operators.ordering import training_order, write_training_shards
     from .operators.quality_model import quality_classifier
 
@@ -767,9 +769,9 @@ def curate(documents_path, output_dir, shards, seed, max_repeats,
         # BELOW this anti-join, silently re-scoring the whole input
         # corpus every epoch (measured: a 5k-doc delta cost 99 s against
         # a 100k store). Materializing the delta pins scoring to it.
-        docs = docs.join(
+        docs = cut_lineage(docs.join(
             existing.select("doc_id").distinct(), "doc_id", "left_anti"
-        ).localCheckpoint()
+        ))
         # per-shard position offsets (n_shards rows — broadcast) so the
         # appended batch's shard_pos continues the existing order
         base = existing.groupBy("shard").agg(
@@ -785,9 +787,9 @@ def curate(documents_path, output_dir, shards, seed, max_repeats,
     # totals, ordering, the shard write, and the summary counts) re-reads
     # this narrow 4-column relation instead of re-running the tokenizing
     # scorer per consumer (the counts alone re-ran it 3x before)
-    kept = scored.filter(F.col("quality_score") >= min_quality).select(
+    kept = cut_lineage(scored.filter(F.col("quality_score") >= min_quality).select(
         "doc_id", "source", "n_tokens", "quality_score"
-    ).localCheckpoint()
+    ))
     per_src = kept.groupBy("source").agg(F.sum("n_tokens").alias("n_tokens"))
     tot = per_src.agg(
         F.sum("n_tokens").alias("_tot"), F.count(F.lit(1)).alias("_n_src")

@@ -42,6 +42,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from .ckpt import cut_lineage
 from .txlog import LogTable, StaleWatermarkError, _fold_txns
 
 __all__ = ["IncrementalAggView"]
@@ -257,7 +258,7 @@ class IncrementalAggView:
         # actions (dup refusal, file discovery, the rewrite) and each
         # would otherwise replay the whole CDF lineage (exceptAll over
         # the changed files) from scratch
-        d = self._delta_agg(delta).localCheckpoint()
+        d = cut_lineage(self._delta_agg(delta))
 
         vals = self._value_cols()
         mm = self._minmax_names()
@@ -311,9 +312,9 @@ class IncrementalAggView:
                 F.coalesce(F.col("_old_cnt"), F.lit(0))
                 + F.coalesce(F.col("cnt"), F.lit(0)) > 0
             )
-            merged = merged.withColumn(
+            merged = cut_lineage(merged.withColumn(
                 "_needs_rec", need & survives
-            ).localCheckpoint()
+            ))
             rec_keys = merged.filter(F.col("_needs_rec")).select(
                 _KEY, *self.group_by
             )
@@ -336,7 +337,9 @@ class IncrementalAggView:
                 )
         # a group that appeared and vanished inside one window never
         # reached the view — drop it instead of emitting a no-op delete
-        changes = (
+        # still one row per touched group; pinned for the same
+        # several-actions reason as `d`
+        changes = cut_lineage(
             merged
             .filter(F.col("_old_cnt").isNotNull() | (F.col("cnt") > 0))
             .select(F.col(_KEY), *self.group_by, *new_vals, *mm_exprs)
@@ -344,9 +347,6 @@ class IncrementalAggView:
                 "_op",
                 F.when(F.col("cnt") <= 0, F.lit("D")).otherwise(F.lit("U")),
             )
-            # still one row per touched group; pinned for the same
-            # several-actions reason as `d`
-            .localCheckpoint()
         )
         res = self.view.merge_cdc(changes, key=_KEY,
                                   txn=(self.app_id, src_v),

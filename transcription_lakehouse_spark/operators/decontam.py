@@ -19,7 +19,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from ..functions.text import tokens
-from ..functions.vector import as_double_array, guarded_cosine, l2_norm
+from ..functions.vector import guarded_cosine
 from .dedup import shingles_from_tokens
 
 __all__ = [
@@ -131,14 +131,10 @@ def semantic_decontam(
     so the whole screen value-hash-gates against a DuckDB twin
     (`workload/vectors.py:VEC_SEMANTIC_DECONTAM_SQL`).
     """
-    from .similarity import _banded_buckets
+    from .similarity import _banded_buckets, _dedupe_by, _rank_topk, _vec_side
 
-    c = corpus.select(
-        F.col(id_col).alias("corpus_id"), as_double_array(vec_col).alias("cv")
-    ).withColumn("cn", l2_norm(F.col("cv")))
-    e = evalset.select(
-        F.col(id_col).alias("eval_id"), as_double_array(vec_col).alias("ev")
-    ).withColumn("en", l2_norm(F.col("ev")))
+    c = _vec_side(corpus, id_col, vec_col, "corpus_id", "cv", "cn")
+    e = _vec_side(evalset, id_col, vec_col, "eval_id", "ev", "en")
     # Score AT the collision row (r11, guide §2.3/§2.4): bucket rows carry
     # their vectors, the eval side broadcasts WITH vectors, and the rounded
     # cosine + threshold filter run in the same stage as the bucket join —
@@ -163,25 +159,19 @@ def semantic_decontam(
             ).alias("sim"),
         )
         .filter(F.col("sim") >= F.lit(threshold))
-        # hash the few surviving hits by corpus_id BEFORE the distinct:
-        # HashPartitioning(corpus_id) satisfies the dedupe aggregate's
-        # clustering (subset rule) AND both downstream windows' required
-        # distribution, so dedupe + hit-count + argmax share ONE exchange
-        .repartition("corpus_id")
-        .distinct()
     )
-    w = Window.partitionBy("corpus_id").orderBy(F.desc("sim"), F.asc("eval_id"))
+    # the few surviving hits dedupe over the corpus_id exchange, which the
+    # hit-count window and the argmax rank share
     hits = F.count(F.lit(1)).over(Window.partitionBy("corpus_id"))
-    return (
-        scored.withColumn("n_eval_hits", hits)
-        .withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") == 1)
-        .select(
+    return _rank_topk(
+        _dedupe_by(scored, "corpus_id").withColumn("n_eval_hits", hits),
+        1, by="corpus_id", tie="eval_id",
+        cols=[
             "corpus_id",
             F.col("eval_id").alias("matched_eval_id"),
             F.col("sim").alias("max_sim"),
             "n_eval_hits",
-        )
+        ],
     )
 
 

@@ -39,14 +39,16 @@ graph index.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 from ..ckpt import cut_lineage
-from ..functions.vector import as_double_array, guarded_cosine, l2_norm
+from ..functions.vector import guarded_cosine
 from .similarity import (
     _banded_buckets,
     _nearest_cells_udf,
+    _rank_topk,
     _topk_score_kernel,
+    _vec_side,
     lsh_topk,
 )
 
@@ -191,12 +193,8 @@ def _batch_candidate_scores(
     # distinct before scoring and no corpus-vector re-fetch join. Duplicate
     # multi-band collisions recompute the same deterministic expression and
     # collapse in the distinct over the thin scored rows.
-    o = old_corpus.select(
-        F.col(id_col).alias("src"), as_double_array(vec_col).alias("qv")
-    ).withColumn("qn", l2_norm(F.col("qv")))
-    b = batch.select(
-        F.col(id_col).alias("dst"), as_double_array(vec_col).alias("cv")
-    ).withColumn("cn", l2_norm(F.col("cv")))
+    o = _vec_side(old_corpus, id_col, vec_col, "src", "qv", "qn")
+    b = _vec_side(batch, id_col, vec_col, "dst", "cv", "cn")
     ob = _banded_buckets(o, "qv", n_bands, planes_per_band, keep_vec=True)
     nb = _banded_buckets(b, "cv", n_bands, planes_per_band, keep_vec=True)
     if broadcast_batch:
@@ -232,14 +230,11 @@ def _fold_edges(
     if broadcast_touched:
         touched = F.broadcast(touched)
     untouched = graph.join(touched, "src", "left_anti")
-    w = Window.partitionBy("src").orderBy(F.desc("sim"), F.asc("dst"))
-    re_ranked = (
+    re_ranked = _rank_topk(
         graph.join(touched, "src")
         .select("src", "dst", "sim")
-        .unionByName(scored_new)
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k_graph)
-        .select("src", "dst", "sim")
+        .unionByName(scored_new),
+        k_graph, by="src", tie="dst", cols=["src", "dst", "sim"],
     )
     return untouched.unionByName(re_ranked)
 
@@ -271,13 +266,8 @@ def _score(cand: DataFrame, q: DataFrame, c: DataFrame) -> DataFrame:
 
 
 def _top_beam(scored: DataFrame, beam: int) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("node_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= beam)
-        .select("query_id", "node_id", "sim")
+    return _rank_topk(
+        scored, beam, tie="node_id", cols=["query_id", "node_id", "sim"]
     )
 
 
@@ -309,12 +299,8 @@ def graph_topk(
     """
     if beam < k:
         raise ValueError(f"graph_topk: beam={beam} must be >= k={k}")
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double_array(vec_col).alias("qv")
-    ).withColumn("qn", l2_norm(F.col("qv")))
-    c = corpus.select(
-        F.col(id_col).alias("node_id"), as_double_array(vec_col).alias("cv")
-    ).withColumn("cn", l2_norm(F.col("cv")))
+    q = _vec_side(queries, id_col, vec_col, "query_id", "qv", "qn")
+    c = _vec_side(corpus, id_col, vec_col, "node_id", "cv", "cn")
 
     # Seed scoring: JVM HOF cosine AT the bucket-collision row (r11, the
     # asymmetric `lsh_topk` shape) — the search-side query set is sparse
@@ -403,13 +389,9 @@ def _walk_and_rank(
             # on first use inside the query's one real action
             beam_df = cut_lineage(beam_df, eager=False)
 
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("node_id"))
-    return (
-        beam_df.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", F.col("node_id").alias("neighbor_id"), "rank", "sim"
-        )
+    return _rank_topk(
+        beam_df, k, tie="node_id",
+        cols=["query_id", F.col("node_id").alias("neighbor_id"), "rank", "sim"],
     )
 
 
@@ -449,12 +431,8 @@ def graph_topk_coarse(
     beam, and walk CTE-for-CTE."""
     if beam < k:
         raise ValueError(f"graph_topk_coarse: beam={beam} must be >= k={k}")
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double_array(vec_col).alias("qv")
-    ).withColumn("qn", l2_norm(F.col("qv")))
-    c = corpus.select(
-        F.col(id_col).alias("node_id"), as_double_array(vec_col).alias("cv")
-    ).withColumn("cn", l2_norm(F.col("cv")))
+    q = _vec_side(queries, id_col, vec_col, "query_id", "qv", "qn")
+    c = _vec_side(corpus, id_col, vec_col, "node_id", "cv", "cn")
 
     # Seed scoring = IVF's cogrouped-GEMM shape (r11, guide §2.3/§4.2):
     # probed (query, cell) rows cogroup with cell members, one matmul per

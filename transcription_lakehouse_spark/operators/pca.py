@@ -25,6 +25,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from ..functions.vector import as_double_array, dot
+from .similarity import _rank_topk, _score_topk, _vec_side
 
 __all__ = ["train_pca", "pca_project", "pca_whiten", "pca_topk"]
 
@@ -162,22 +163,12 @@ def pca_topk(
     cosine) is strict left-to-right double accumulation, so the DuckDB
     twin replays it bit-identically — no margin guard needed.
     """
-    from pyspark.sql import Window
-
-    from ..functions.vector import cosine, l2_norm  # noqa: F401
-
     q = pca_project(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            as_double_array(vec_col).alias("qv"),
-        ),
+        _vec_side(queries, id_col, vec_col, "query_id", "qv", "qn"),
         "qv", mean, components, out_col="qp",
     )
     c = pca_project(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            as_double_array(vec_col).alias("cv"),
-        ),
+        _vec_side(corpus, id_col, vec_col, "neighbor_id", "cv", "cn"),
         "cv", mean, components, out_col="cp",
     )
     red_d2 = F.aggregate(
@@ -191,26 +182,14 @@ def pca_topk(
         .where(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("red_d2", red_d2)
     )
-    sw = Window.partitionBy("query_id").orderBy(
-        F.col("red_d2").asc(), F.col("neighbor_id").asc()
+    short = _rank_topk(
+        cand, shortlist, score="red_d2", ascending=True,
+        cols=["query_id", "neighbor_id"],
     )
-    short = (
-        cand.withColumn("srank", F.row_number().over(sw))
-        .where(F.col("srank") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    scored = (
-        short.join(q.select("query_id", "qv"), "query_id")
-        .join(c.select("neighbor_id", "cv"), "neighbor_id")
-        .withColumn(
-            "sim", F.round(cosine(F.col("qv"), F.col("cv")), 6)
-        )
-    )
-    rw = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(rw).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
+    # round(cosine) from the precomputed norms: the same arithmetic as
+    # the inline cosine (same operands, same left-to-right sums)
+    return _score_topk(
+        short.join(q.select("query_id", "qv", "qn"), "query_id")
+        .join(c.select("neighbor_id", "cv", "cn"), "neighbor_id"),
+        k,
     )

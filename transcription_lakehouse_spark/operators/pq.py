@@ -32,9 +32,10 @@ from __future__ import annotations
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
-from ..functions.vector import as_double_array, dot, l2_norm
+from ..functions.vector import as_double_array
+from .similarity import _nearest_cells_udf, _rank_topk, _score_topk, _vec_side
 
 __all__ = [
     "train_pq_codebooks",
@@ -379,20 +380,22 @@ def _adc_shortlist_kernel(m: int, kk: int, shortlist: int):
     return score
 
 
-def _shortlist_topk(
-    local: DataFrame, shortlist: int
+def _rescore_shortlist(
+    local: DataFrame, shortlist: int, queries: DataFrame, corpus: DataFrame,
+    id_col: str, vec_col: str, k: int,
 ) -> DataFrame:
-    """Global shortlist over per-group local shortlists (groups are
-    disjoint in ``neighbor_id`` for both callers, so no dedupe): the same
-    (adc ASC, id ASC) ranking the pair-relation window used, now over
-    ≤ groups-per-query · shortlist rows."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_d2"), F.asc("neighbor_id")
+    """Global shortlist over the per-group local shortlists (adc ASC, id
+    ASC; groups are disjoint in ``neighbor_id`` for both callers, so no
+    dedupe), then the exact rescore: full vectors are re-fetched for the
+    shortlisted ids only (queries broadcast) and `_score_topk` ranks."""
+    short = _rank_topk(
+        local, shortlist, score="adc_d2", ascending=True,
+        cols=["query_id", "neighbor_id"],
     )
-    return (
-        local.withColumn("srank", F.row_number().over(w))
-        .filter(F.col("srank") <= shortlist)
-        .select("query_id", "neighbor_id")
+    x = _vec_side(queries, id_col, vec_col, "query_id", "qv", "qn")
+    y = _vec_side(corpus, id_col, vec_col, "neighbor_id", "cv", "cn")
+    return _score_topk(
+        short.join(F.broadcast(x), "query_id").join(y, "neighbor_id"), k
     )
 
 
@@ -418,8 +421,6 @@ def ivfpq_topk(
     partitioned by cell), followed by zip_with/aggregate sums JVM-side —
     no Python touches the corpus-sized path. Value-hash gated end-to-end
     by the DuckDB twin (workload/vectors.py:vec_knn_ivfpq)."""
-    from .similarity import _nearest_cells_udf
-
     m = len(codebooks)
     kk = len(codebooks[0])
     enc = _ivfpq_encode_udf(centroids, codebooks)
@@ -455,35 +456,8 @@ def ivfpq_topk(
             f"query_id {qid_t}, neighbor_id {nid_t}, adc_d2 double",
         )
     )
-    short = _shortlist_topk(local, shortlist)
-
-    x = queries.select(
-        F.col(id_col).alias("query_id"), as_double_array(vec_col).alias("qv")
-    ).withColumn("qn", l2_norm(F.col("qv")))
-    y = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double_array(vec_col).alias("cv"),
-    ).withColumn("cn", l2_norm(F.col("cv")))
-    den = F.col("qn") * F.col("cn")
-    scored = (
-        short.join(F.broadcast(x), "query_id")
-        .join(y, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                F.when(den > 0, dot(F.col("qv"), F.col("cv")) / den).otherwise(
-                    F.lit(0.0)
-                ),
-                6,
-            ).alias("sim"),
-        )
-    )
-    rw = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(rw))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
+    return _rescore_shortlist(
+        local, shortlist, queries, corpus, id_col, vec_col, k
     )
 
 
@@ -556,31 +530,6 @@ def pq_topk(
             f"query_id {qid_t}, neighbor_id {nid_t}, adc_d2 double",
         )
     )
-    short = _shortlist_topk(local, shortlist)
-
-    x = q.select("query_id", "qv").withColumn("qn", l2_norm(F.col("qv")))
-    y = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double_array(vec_col).alias("cv"),
-    ).withColumn("cn", l2_norm(F.col("cv")))
-    den = F.col("qn") * F.col("cn")
-    scored = (
-        short.join(F.broadcast(x), "query_id")
-        .join(y, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                F.when(den > 0, dot(F.col("qv"), F.col("cv")) / den).otherwise(
-                    F.lit(0.0)
-                ),
-                6,
-            ).alias("sim"),
-        )
-    )
-    rw = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(rw))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
+    return _rescore_shortlist(
+        local, shortlist, queries, corpus, id_col, vec_col, k
     )

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 
 from ..functions.vector import (
     as_double_array,
@@ -168,37 +168,73 @@ def _lsh_supergroups(spark, n_bands: int, planes_per_band: int) -> int:
     return min(2 ** planes_per_band, per_band)
 
 
-def _rank_topk(local: DataFrame, k: int, dedupe: bool = True) -> DataFrame:
-    """Global top-k tail over per-group local winners: dedupe the
-    (query, neighbor, sim) rows a multi-group collision emits twice (the
-    sims are deterministic, so duplicates are exact), then the same
-    (sim DESC, id ASC) row_number window every ANN path ranks with.
-    ``dedupe=False`` skips the distinct's exchange when groups are
-    provably disjoint (IVF cells)."""
+# --- the ANN scoring seam -------------------------------------------------
+# Every top-k path in the package (exact, LSH, IVF, PQ, IVF-PQ, PCA, SQ8,
+# graph beams, hard negatives, triplets, decontam argmax) projects its
+# sides with `_vec_side`, scores shortlists with `_score_topk` and ranks
+# with `_rank_topk`: the rounding (`guarded_cosine`, 6 digits) and the
+# tie-break (score, then id ASC) live here and nowhere else. The numpy
+# kernels above replay the same policy group-locally.
+
+
+def _vec_side(
+    df: DataFrame, id_col: str, vec_col: str,
+    id_as: str, vec_as: str, norm_as: str, *extra: Column,
+) -> DataFrame:
+    """One side of a cosine join: ``(id_as, *extra, vec_as, norm_as)`` —
+    the id, any carried columns, the vector as ``double[]`` and its L2
+    norm, computed once per ROW (n + m norms, not one per pair)."""
+    return df.select(
+        F.col(id_col).alias(id_as), *extra, as_double_array(vec_col).alias(vec_as)
+    ).withColumn(norm_as, l2_norm(F.col(vec_as)))
+
+
+def _dedupe_by(df: DataFrame, *keys: str) -> DataFrame:
+    """Drop the exact-duplicate rows a multi-group collision emits (the
+    sims are deterministic) over ONE exchange (guide §2.4 — share the
+    partitioning): hash by the rank key FIRST; that partitioning satisfies
+    the distinct aggregate's clustering by the subset rule and is exactly
+    what a later window on ``keys`` requires, so neither plans its own
+    exchange. A plain ``.distinct()`` would exchange on every column and
+    the window would re-exchange on the key."""
+    return df.repartition(*keys).distinct()
+
+
+def _rank_topk(
+    local: DataFrame,
+    k: int | Column,
+    *,
+    dedupe: bool = False,
+    by: str | list[str] = "query_id",
+    tie: str = "neighbor_id",
+    score: str = "sim",
+    ascending: bool = False,
+    cols: list | None = None,
+) -> DataFrame:
+    """THE rank tail: per ``by`` key, order by ``score`` (DESC; ASC for
+    distances) then ``tie`` ASC and keep ``row_number() <= k`` (``k`` may
+    be a per-row Column). ``dedupe`` first collapses duplicate candidate
+    rows through `_dedupe_by`; skip it when groups are provably disjoint
+    (IVF cells, PQ groups). Returns ``cols``, default
+    ``(*by, tie, rank, score)``."""
+    keys = [by] if isinstance(by, str) else list(by)
     if dedupe:
-        # one exchange for dedupe + window (guide §2.4 — share the
-        # partitioning): hash by query_id FIRST; HashPartitioning(query_id)
-        # satisfies the distinct aggregate's ClusteredDistribution(query_id,
-        # neighbor_id, sim) by the subset rule and is exactly the window's
-        # required distribution, so neither plans its own exchange. A plain
-        # .distinct() would exchange on all three columns and the window
-        # would re-exchange on query_id.
-        local = local.repartition("query_id").distinct()
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
+        local = _dedupe_by(local, *keys)
+    order = F.asc(score) if ascending else F.desc(score)
+    w = Window.partitionBy(*keys).orderBy(order, F.asc(tie))
     return (
         local.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
+        .select(*(cols or [*keys, tie, "rank", score]))
     )
 
 
 def _score_topk(
     pairs: DataFrame, k: int, round_digits: int = 6
 ) -> DataFrame:
-    """Shared scoring tail for exact and LSH top-k: guarded cosine from
-    precomputed norms, rank on the ROUNDED similarity with id tiebreak."""
+    """The one candidate → rescore → rank step: ``pairs`` carry both
+    sides (``qv``/``qn``, ``cv``/``cn`` from `_vec_side`); self-pairs are
+    dropped, the guarded cosine is rounded, and `_rank_topk` ranks."""
     scored = pairs.filter(F.col("query_id") != F.col("neighbor_id")).select(
         "query_id",
         "neighbor_id",
@@ -206,12 +242,7 @@ def _score_topk(
             F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn"), round_digits
         ).alias("sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
-    )
+    return _rank_topk(scored, k)
 
 
 def brute_force_topk(
@@ -228,14 +259,8 @@ def brute_force_topk(
     sim = dot/(qn*cn) is arithmetic-identical to inline cosine, so oracle
     hashes are unaffected. Self-pairs are excluded.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        as_double_array(vec_col).alias("qv"),
-    ).withColumn("qn", l2_norm(F.col("qv")))
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double_array(vec_col).alias("cv"),
-    ).withColumn("cn", l2_norm(F.col("cv")))
+    q = _vec_side(queries, id_col, vec_col, "query_id", "qv", "qn")
+    c = _vec_side(corpus, id_col, vec_col, "neighbor_id", "cv", "cn")
     return _score_topk(F.broadcast(q).crossJoin(c), k, round_digits)
 
 
@@ -315,16 +340,10 @@ def hard_negatives(
     broadcast-queries/streaming-corpus shape as :func:`brute_force_topk`,
     with the label-mismatch predicate applied before ranking so ranks are
     over the negative pool only."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(label_col).alias("q_label"),
-        as_double_array(vec_col).alias("qv"),
-    ).withColumn("qn", l2_norm(F.col("qv")))
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(label_col).alias("c_label"),
-        as_double_array(vec_col).alias("cv"),
-    ).withColumn("cn", l2_norm(F.col("cv")))
+    q = _vec_side(queries, id_col, vec_col, "query_id", "qv", "qn",
+                  F.col(label_col).alias("q_label"))
+    c = _vec_side(corpus, id_col, vec_col, "neighbor_id", "cv", "cn",
+                  F.col(label_col).alias("c_label"))
     pairs = (
         F.broadcast(q)
         .crossJoin(c)
@@ -349,16 +368,10 @@ def contrastive_triplets(
     scan, one window, instead of separate positive and negative mining jobs.
     Emits (query_id, role 'pos'|'neg', rank, other_id, sim); anchors whose
     label has no second member simply lack a pos row."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(label_col).alias("q_label"),
-        as_double_array(vec_col).alias("qv"),
-    ).withColumn("qn", l2_norm(F.col("qv")))
-    c = corpus.select(
-        F.col(id_col).alias("other_id"),
-        F.col(label_col).alias("c_label"),
-        as_double_array(vec_col).alias("cv"),
-    ).withColumn("cn", l2_norm(F.col("cv")))
+    q = _vec_side(queries, id_col, vec_col, "query_id", "qv", "qn",
+                  F.col(label_col).alias("q_label"))
+    c = _vec_side(corpus, id_col, vec_col, "other_id", "cv", "cn",
+                  F.col(label_col).alias("c_label"))
     scored = (
         F.broadcast(q)
         .crossJoin(c)
@@ -375,14 +388,15 @@ def contrastive_triplets(
             ).alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id", "role").orderBy(
-        F.desc("sim"), F.asc("other_id")
+    # one window over (anchor, role): the positive keeps rank 1, the
+    # negatives ranks 1..n_negatives
+    per_role = F.when(F.col("role") == "pos", F.lit(1)).otherwise(
+        F.lit(n_negatives)
     )
-    ranked = scored.withColumn("rank", F.row_number().over(w))
-    return ranked.filter(
-        (F.col("role") == "pos") & (F.col("rank") == 1)
-        | (F.col("role") == "neg") & (F.col("rank") <= n_negatives)
-    ).select("query_id", "role", "rank", "other_id", "sim")
+    return _rank_topk(
+        scored, per_role, by=["query_id", "role"], tie="other_id",
+        cols=["query_id", "role", "rank", "other_id", "sim"],
+    )
 
 
 def _plane_signs(p: int, max_dims: int) -> list[float]:
@@ -623,7 +637,7 @@ def ivf_topk(
     # global top-k across the nprobe probed cells: only nprobe*k candidate
     # rows per query reach this window (duplicates impossible — cells are
     # disjoint — so the dedupe exchange is skipped)
-    return _rank_topk(local, k, dedupe=False)
+    return _rank_topk(local, k)
 
 
 def lsh_near_dup_pairs(
@@ -659,9 +673,7 @@ def lsh_near_dup_pairs(
     up with the corpus to keep buckets (and the shuffle) bounded.
     Deterministic: the plane family is md5-derived.
     """
-    v = df.select(
-        F.col(id_col).alias("vid"), as_double_array(vec_col).alias("v")
-    ).withColumn("nrm", l2_norm(F.col("v")))
+    v = _vec_side(df, id_col, vec_col, "vid", "v", "nrm")
     if n_bands * planes_per_band > 32:
         # wide banding: literal-array codegen would dominate (see
         # _band_buckets_udf); one GEMM, posexplode the per-band buckets
@@ -871,7 +883,7 @@ def lsh_topk(
         local = b.groupBy("band", "sub").applyInPandas(
             self_score, out_schema
         )
-        return _rank_topk(local, k)
+        return _rank_topk(local, k, dedupe=True)
     else:
         # Asymmetric (queries ≢ corpus): score AT the bucket-collision row
         # with the JVM HOF cosine — NOT the cogrouped GEMM, which must ship
@@ -889,12 +901,8 @@ def lsh_topk(
         # corpus by id) to avoid rescoring the ~1.3x multi-band collision
         # duplicates, whose recomputed sims are bit-identical anyway and
         # collapse in `_rank_topk`'s distinct.
-        q = queries.select(
-            F.col(id_col).alias("query_id"), as_double_array(vec_col).alias("qv")
-        ).withColumn("qn", l2_norm(F.col("qv")))
-        c = corpus.select(
-            F.col(id_col).alias("neighbor_id"), as_double_array(vec_col).alias("cv")
-        ).withColumn("cn", l2_norm(F.col("cv")))
+        q = _vec_side(queries, id_col, vec_col, "query_id", "qv", "qn")
+        c = _vec_side(corpus, id_col, vec_col, "neighbor_id", "cv", "cn")
         q_ids = _banded_buckets(q, "qv", n_bands, planes_per_band, keep_vec=True)
         c_ids = _banded_buckets(c, "cv", n_bands, planes_per_band, keep_vec=True)
         # ``broadcast_queries`` gates the hint (r12, ADVICE r11): the fat
@@ -918,7 +926,7 @@ def lsh_topk(
                 ).alias("sim"),
             )
         )
-        return _rank_topk(scored, k)
+        return _rank_topk(scored, k, dedupe=True)
 
 
 def semdedup_kmeans(

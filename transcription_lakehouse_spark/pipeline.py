@@ -151,23 +151,22 @@ def validate(
     Returns {"checks": {name: failing_count}, "tables": {name: rows},
     "ok": bool} — ok iff every failing_count is 0. ``fail_fast`` skips the
     remaining artifacts once one artifact has failures (cheap CI gate)."""
-    from .quality.metrics import numeric_anomalies, table_checks
+    from .quality.metrics import table_checks
     from .schemas import UTTERANCE_SCHEMA, validate_schema
 
     checks: dict[str, int] = {}
     tables: dict[str, int] = {}
 
     utt = read_versioned(spark, lake_dir, "normalized", version)
-    u = table_checks(utt, "utterance_id")
+    u = table_checks(utt, "utterance_id", numeric=("start", "end"))
     tables["normalized"] = u["rows"]
     checks["normalized_empty"] = int(u["rows"] == 0)
     checks["normalized_schema_problems"] = len(
         validate_schema(utt, UTTERANCE_SCHEMA)
     )
     checks["utterance_id_dupes"] = u["id_dupes"]
-    # names columns the normalized schema lacks (start/end): no job runs
-    for name, d in numeric_anomalies(utt, ["start_time", "end_time"]).items():
-        checks[f"normalized_{name}_nan_inf"] = d["nan"] + d["inf"]
+    for name, n in u["nan_inf"].items():
+        checks[f"normalized_{name}_nan_inf"] = n
 
     if fail_fast and any(v for v in checks.values()):
         return {

@@ -25,7 +25,6 @@ __all__ = [
     "integrity_counts",
     "span_battery",
     "duplicate_groups",
-    "numeric_anomalies",
     "table_checks",
     "timestamp_regressions",
 ]
@@ -313,52 +312,25 @@ def duplicate_groups(segments: DataFrame) -> DataFrame:
     )
 
 
-def numeric_anomalies(df: DataFrame, columns: list[str] | None = None) -> dict[str, dict[str, int]]:
-    """F9: NaN / null / ±Inf counts per numeric column
-    (`validation/checks.py:554-607`) in one aggregation pass."""
-    numeric = [
-        f.name
-        for f in df.schema.fields
-        if f.dataType.simpleString() in ("double", "float")
-        and (columns is None or f.name in columns)
-    ]
-    if not numeric:
-        return {}
-    aggs = []
-    for c in numeric:
-        aggs += [
-            F.sum(F.isnan(c).cast("long")).alias(f"{c}__nan"),
-            F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__null"),
-            F.sum(
-                (F.abs(F.col(c)) == F.lit(float("inf"))).cast("long")
-            ).alias(f"{c}__inf"),
-        ]
-    row = df.agg(*aggs).collect()[0]
-    return {
-        c: {
-            "nan": int(row[f"{c}__nan"] or 0),
-            "null": int(row[f"{c}__null"] or 0),
-            "inf": int(row[f"{c}__inf"] or 0),
-        }
-        for c in numeric
-    }
-
-
 def table_checks(
     df: DataFrame, id_col: str, battery: bool = False,
-    parent: DataFrame | None = None,
+    parent: DataFrame | None = None, numeric: tuple[str, ...] = (),
 ) -> dict:
     """An artifact's validation counts as ONE aggregate: ``rows``,
     ``id_dupes`` (rows minus distinct ids; all NULL ids count as one id,
     as ``DISTINCT`` does), with ``battery`` the :func:`integrity_counts`
-    battery as ``integrity``, and with a ``parent`` table ``orphans``: the
+    battery as ``integrity``, with a ``parent`` table ``orphans``: the
     distinct ``episode_id`` values (NULL included, it never matches) that
-    ``parent`` lacks."""
+    ``parent`` lacks, and per ``numeric`` column the NaN + ±Inf count
+    (F9, `validation/checks.py:554-607`) as ``nan_inf``."""
     aggs = {
         "rows": F.count(F.lit(1)),
         "ids": F.count_distinct(id_col),
         "null_id": F.max(F.col(id_col).isNull().cast("long")),
         **(_integrity_aggs() if battery else {}),
+        **{f"{c}__nan_inf": F.sum((
+            F.isnan(c) | (F.abs(F.col(c)) == F.lit(float("inf")))
+        ).cast("long")) for c in numeric},
     }
     if parent is not None:
         known = parent.select("episode_id").distinct().withColumn("_known", F.lit(True))
@@ -374,6 +346,8 @@ def table_checks(
         out["integrity"] = _integrity_dict(row)
     if parent is not None:
         out["orphans"] = row["orphans"] + (row["null_orphan"] or 0)
+    if numeric:
+        out["nan_inf"] = {c: int(row[f"{c}__nan_inf"] or 0) for c in numeric}
     return out
 
 

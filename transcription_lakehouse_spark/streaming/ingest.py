@@ -20,6 +20,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from ..ckpt import cut_lineage
 from ..ingestion import normalize, split_valid
 from ..schemas import RAW_UTTERANCE_SCHEMA
 
@@ -494,13 +495,13 @@ def stream_cluster_update(
             )
         else:
             fresh = batch
-        fresh = fresh.localCheckpoint()  # reused by 4 consumers below
+        fresh = cut_lineage(fresh)  # reused by 4 consumers below
         if not fresh.head(1):
             return
 
-        new_bands = signature_bands(
+        new_bands = cut_lineage(signature_bands(
             minhash_signature(fresh, id_col, text_col), id_col
-        ).localCheckpoint()
+        ))
         old_bands = _read_state(sess, bands_path)
         all_bands = (
             old_bands.unionByName(new_bands) if old_bands is not None else new_bands
@@ -527,11 +528,10 @@ def stream_cluster_update(
             if corpus is not None
             else fresh.select(id_col, text_col)
         )
-        new_pairs = (
+        new_pairs = cut_lineage(
             jaccard_rescore(cands, texts, id_col, text_col)
             .filter(F.col("jaccard") >= jaccard_threshold)
             .select(f"{id_col}_1", f"{id_col}_2")
-            .localCheckpoint()
         )
 
         # WRITE ORDER IS THE CRASH-SAFETY CONTRACT: the corpus append goes
@@ -586,9 +586,10 @@ def stream_cluster_update(
             scoped_pairs = all_pairs
             kept = None
         recomputed = dup_clusters(scoped_pairs, f"{id_col}_1", f"{id_col}_2")
-        out = (
+        # materialize BEFORE overwriting our own input
+        out = cut_lineage(
             kept.unionByName(recomputed) if kept is not None else recomputed
-        ).localCheckpoint()  # materialize BEFORE overwriting our own input
+        )
         # versioned commit (write-new-then-prune, the stream_hll_update
         # discipline): a bare overwrite here has a partial-job-commit
         # window in which _read_state would see a half-written dir as
@@ -722,7 +723,7 @@ def stream_hll_update(
             )
         else:  # first complete version
             merged = delta
-        merged = merged.localCheckpoint()  # sever lineage from the old version
+        merged = cut_lineage(merged)  # sever lineage from the old version
         _write_versioned(merged, state_path, sess)
 
     writer = (
@@ -957,7 +958,7 @@ def stream_graph_update(
         sess = batch.sparkSession
         nodes = _read_state(sess, nodes_path)
         if nodes is None:
-            new = batch.localCheckpoint()
+            new = cut_lineage(batch)
             g1 = build_knn_graph(
                 new, id_col, vec_col,
                 k_graph=k_graph, n_bands=n_bands,
@@ -966,17 +967,17 @@ def stream_graph_update(
             _write_epoch(sess, g1.withColumn("bucket", bucket_of(F.col("src"))))
             new.write.mode("append").parquet(nodes_path)
             return
-        new = batch.join(
+        new = cut_lineage(batch.join(
             nodes.select(id_col), id_col, "left_anti"
-        ).localCheckpoint()
+        ))
         if not new.head(1):
             return  # fully replayed batch: exact no-op, zero writes
         # materialized once: both the touched-bucket resolution and the
         # fold consume it — without this the banded candidate-scoring
         # join (the dominant per-batch cost) would run twice
-        scored_new = _batch_candidate_scores(
+        scored_new = cut_lineage(_batch_candidate_scores(
             nodes, new, id_col, vec_col, n_bands, planes_per_band
-        ).localCheckpoint()
+        ))
         new_edges = _new_src_edges(
             nodes, new, id_col, vec_col,
             k_graph, n_bands, planes_per_band,
@@ -1009,11 +1010,11 @@ def stream_graph_update(
             )
             .dropDuplicates(["src", "dst"])
         )
-        out = (
+        # pin content before the store mutates
+        out = cut_lineage(
             _fold_edges(slice_clean, scored_new, k_graph)
             .unionByName(new_edges)
             .withColumn("bucket", bucket_of(F.col("src")))
-            .localCheckpoint()  # pin content before the store mutates
         )
         _write_epoch(sess, out)
         new.write.mode("append").parquet(nodes_path)

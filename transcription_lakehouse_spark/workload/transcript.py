@@ -305,18 +305,19 @@ def trn_section_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     when summed beat duration reaches the 8-min target, never under the
     5-min min) — `generate_sections`' carried state recomputed by the
     oracle with the same recursive-walk idiom over beats."""
-    beats = generate_beats_heuristic(generate_spans(_utterances(spark, sf_dir)))
+    utt = _utterances(spark, sf_dir)
+    beats = generate_beats_heuristic(generate_spans(utt))
     # the beats kernel's FlatMapGroupsInPandas output reports no
     # partitioning, so the sections groupBy re-exchanges behind an
     # ENSURE_REQUIREMENTS shuffle AQE coalesces down to 2-5 tasks on
     # these tiny bytes — starving the packing kernel exactly like the
     # semantic chain before its pin. An explicit episode repartition is
     # exempt from AQE coalescing and replaces (not adds to) that
-    # exchange; scale-adaptive via defaultParallelism.
+    # exchange; scale-adaptive via defaultParallelism. The width probe
+    # reads the utterances (same episode groups), never the beats: a
+    # probe over beats would run the Python kernel twice.
     beats = beats.repartition(
-        _pin_width(
-            beats, "episode_id", spark.sparkContext.defaultParallelism
-        ),
+        _pin_width(utt, "episode_id", spark.sparkContext.defaultParallelism),
         "episode_id",
     )
     sections = generate_sections(beats, beat_embeddings=None)

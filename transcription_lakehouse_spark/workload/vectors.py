@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from ..ckpt import cut_lineage
 from ..functions.vector import as_double_array, cosine, l2_norm
 from ..operators.similarity import (
+    _score_topk,
+    _vec_side,
     brute_force_topk,
     ivf_topk,
     lsh_near_dup_pairs,
@@ -664,7 +666,7 @@ def vec_label_similarity_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identically). The pairwise stage is then a bounded broadcast
     nested-loop over <= labels*cap rows — never an O(n²) cross join over
     the corpus; the per-label window shuffles once on the label key."""
-    from ..functions.vector import dot, l2_norm
+    from ..functions.vector import dot
     from pyspark.sql import Window
 
     e = _emb(spark, sf_dir)
@@ -676,16 +678,10 @@ def vec_label_similarity_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("_rk") <= _SIM_MATRIX_CAP)
         .drop("_rk")
     )
-    a = s.select(
-        F.col("label").alias("label_1"),
-        F.col("vec_id").alias("id_1"),
-        as_double_array("embedding").alias("va"),
-    ).withColumn("na", l2_norm(F.col("va")))
-    b = s.select(
-        F.col("label").alias("label_2"),
-        F.col("vec_id").alias("id_2"),
-        as_double_array("embedding").alias("vb"),
-    ).withColumn("nb", l2_norm(F.col("vb")))
+    a = _vec_side(s, "vec_id", "embedding", "id_1", "va", "na",
+                  F.col("label").alias("label_1"))
+    b = _vec_side(s, "vec_id", "embedding", "id_2", "vb", "nb",
+                  F.col("label").alias("label_2"))
     den = F.col("na") * F.col("nb")
     pairs = (
         F.broadcast(a)
@@ -1815,17 +1811,14 @@ def vec_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions.vector import guarded_cosine
 
-    emb = (
-        _emb(spark, sf_dir).select(
-            "vec_id", as_double_array("embedding").alias("e")
-        )
-        .withColumn("_n", l2_norm(F.col("e")))
-        # each of the k sequential picks re-reads this subtree; pin it so
-        # the parquet scan + norm run ONCE, not k times (lazy: materialized
-        # by the first action, reused by the remaining k-1 — the same
-        # shared-subtree pin as the semantic catalogs)
+    # each of the k sequential picks re-reads this subtree; pin it so the
+    # parquet scan + norm run ONCE, not k times (lazy: materialized by the
+    # first action, reused by the remaining k-1 — the same shared-subtree
+    # pin as the semantic catalogs)
+    emb = cut_lineage(
+        _vec_side(_emb(spark, sf_dir), "vec_id", "embedding", "vec_id", "e", "_n"),
+        eager=False,
     )
-    emb = cut_lineage(emb, eager=False)
     # bounded driver fast path (guide §1.2 — the k sequential rounds are
     # pure job-scheduling overhead at bench scale): below the cap, run the
     # same greedy loop over a collected numpy matrix with BIT-IDENTICAL
@@ -1985,7 +1978,7 @@ def vec_knn_int8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cross-engine: the shortlist ranks over round-6 quantized sims with
     neighbor-id tie-breaks (identical candidate sets), the rerank over
     round-6 float sims — both stages oracle-pinned end to end."""
-    from ..operators.similarity import brute_force_topk, sq8_dequantize
+    from ..operators.similarity import sq8_dequantize
 
     e = _emb(spark, sf_dir).select("vec_id", "embedding")
     arrs, _scales = sq8_dequantize(e, "embedding")
@@ -1993,37 +1986,10 @@ def vec_knn_int8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortlist = brute_force_topk(
         queries_q, arrs, "vec_id", "embedding", k=_SQ8_SHORTLIST
     ).select("query_id", "neighbor_id")
-
-    qv = e.select(
-        F.col("vec_id").alias("query_id"),
-        as_double_array("embedding").alias("qv"),
-    ).withColumn("qn", l2_norm(F.col("qv")))
-    cv = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        as_double_array("embedding").alias("cv"),
-    ).withColumn("cn", l2_norm(F.col("cv")))
-    from ..functions.vector import guarded_cosine
-
-    rescored = (
-        shortlist.join(qv, "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id", "neighbor_id",
-            F.round(
-                guarded_cosine(F.col("qv"), F.col("cv"),
-                               F.col("qn"), F.col("cn")), 6
-            ).alias("sim"),
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= _SQ8_K)
-        .select("query_id", "neighbor_id", "rank", "sim")
+    qv = _vec_side(e, "vec_id", "embedding", "query_id", "qv", "qn")
+    cv = _vec_side(e, "vec_id", "embedding", "neighbor_id", "cv", "cn")
+    return _score_topk(
+        shortlist.join(qv, "query_id").join(cv, "neighbor_id"), _SQ8_K
     )
 
 
@@ -2069,9 +2035,7 @@ def vec_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded similarities, so every pick and score is value-hash gated."""
     from ..functions.vector import guarded_cosine
 
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", as_double_array("embedding").alias("e")
-    ).withColumn("_n", l2_norm(F.col("e")))
+    emb = _vec_side(_emb(spark, sf_dir), "vec_id", "embedding", "vec_id", "e", "_n")
     qrow = emb.filter(F.col("vec_id") == 0).head()
     qv = F.array(*[F.lit(float(x)) for x in qrow["e"]])
     qn = F.lit(sum(float(x) * float(x) for x in qrow["e"]) ** 0.5)

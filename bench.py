@@ -1,10 +1,16 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"""Benchmark harness: runs the headline queries and the SCALED entries at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS] and prints ONE JSON line: {"metric": ...,
+"value": total_sec, "unit": "sec", "queries": {name: sec}, "sf": ...},
+then a compact final line (``_final_line``).
 
 Each query is forced to full materialization via collect() (all outputs are
 small aggregates / top-k lists).
+
+Usage:
+    python bench.py                  # the whole suite
+    python bench.py name [name ...]  # only the named HEADLINE/SCALED entries,
+                                     # in suite order, same timing rules
 """
 
 from __future__ import annotations
@@ -15,65 +21,17 @@ import re
 import sys
 import time
 
+import pyspark.sql.functions as F
+
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from transcription_lakehouse_spark.session import get_spark  # noqa: E402
+from transcription_lakehouse_spark.sources.tables import (  # noqa: E402
+    load_table,
+    load_tables,
+    replicate,
+)
 from transcription_lakehouse_spark.workload import QUERIES  # noqa: E402
-
-
-def _artifact_walls(d: object) -> dict[str, float]:
-    """Per-query walls from ONE driver artifact: the ``parsed`` record's
-    ``queries`` map when present, else a regex rescue of the truncated
-    stdout tail. The ``reruns`` block is stripped BEFORE the rescue —
-    its values are run COUNTS keyed by query name, and an unstripped
-    rescue silently overwrites real walls with integers like 3.0 (the
-    r10 artifact corrupted 20+ walls this way)."""
-    rec = d.get("parsed") if isinstance(d, dict) else None
-    for cand in (rec, d):
-        if isinstance(cand, dict):
-            q = cand.get("queries")
-            if isinstance(q, dict) and q:
-                return {k: float(v) for k, v in q.items()}
-    tail = d.get("tail", "") if isinstance(d, dict) else ""
-    body = re.sub(r'"reruns":\s*\{[^}]*\}?', "", tail)
-    return {
-        m.group(1): float(m.group(2))
-        for m in re.finditer(r'"([a-z0-9_]+)":\s*([0-9.]+)', body)
-        if m.group(1) in QUERIES or m.group(1) in SCALED
-    }
-
-
-def _prior_round_queries() -> dict[str, float]:
-    """Per-query walls from committed BENCH_r*.json artifacts — the
-    reference point for the >=3 s rerun trigger. Newest artifact wins
-    per query; when a truncated tail loses part of the suite (the r10
-    driver capture started mid-JSON and its compact final line carried
-    no queries), older artifacts FILL the missing entries instead of
-    silently disabling the trigger for them (r10 verdict #1). Absent or
-    unreadable artifacts yield {} and disable the trigger, never break
-    the bench."""
-    import glob as _glob
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    arts = sorted(
-        (p for p in _glob.glob(os.path.join(here, "BENCH_r*.json"))
-         if re.search(r"BENCH_r(\d+)\.json$", p)),
-        key=lambda p: int(re.search(r"BENCH_r(\d+)\.json$", p).group(1)),
-    )
-    expected = set(HEADLINE) | set(SCALED)
-    merged: dict[str, float] = {}
-    for path in reversed(arts):
-        try:
-            with open(path) as f:
-                d = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for k, v in _artifact_walls(d).items():
-            if k in expected:
-                merged.setdefault(k, v)
-        if expected <= merged.keys():
-            break
-    return merged
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -131,27 +89,20 @@ HEADLINE = [
 ]
 
 
-def _scaled_docs(spark, sf_dir: str, factor: int = 20):
-    """documents replicated with distinct ids — stresses the dedup scale
-    paths with real duplicates present (every replica group is a dup set)."""
-    import pyspark.sql.functions as F
+def _embeddings_20x(spark, sf_dir: str):
+    """embeddings replicated 20x with distinct vec_ids (40k vectors at
+    sf0.1), spread like a stored table so corpus-side scoring parallelizes
+    (queries are broadcast — corpus partitioning IS the parallelism)."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    return replicate(emb, 20, "vec_id").select("vec_id", "embedding")
 
-    from transcription_lakehouse_spark.sources.tables import load_table
 
+def _documents_20x(spark, sf_dir: str):
+    """documents replicated 20x with distinct doc_ids — stresses the dedup
+    scale paths with real duplicates present (every replica group is a dup
+    set)."""
     docs = load_table(spark, sf_dir, "documents")
-    reps = spark.range(factor).withColumnRenamed("id", "rep")
-    # spread the replicated fixture like a real stored table — otherwise the
-    # shingle/minhash map stage runs in the crossJoin's single partition
-    return (
-        docs.crossJoin(F.broadcast(reps))
-        .select(
-            (F.col("doc_id") * factor + F.col("rep")).alias("doc_id"),
-            "text",
-            "lang",
-            "source",
-        )
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    return replicate(docs, 20, "doc_id").select("doc_id", "text", "lang", "source")
 
 
 def bench_minhash_dedup_scaled(spark, sf_dir: str):
@@ -162,29 +113,16 @@ def bench_minhash_dedup_scaled(spark, sf_dir: str):
         minhash_signature,
     )
 
-    docs = _scaled_docs(spark, sf_dir)
+    docs = _documents_20x(spark, sf_dir)
     sigs = minhash_signature(docs, "doc_id", "text", n=3)
     return lsh_candidate_pairs(sigs, "doc_id").groupBy().count()
 
 
 def bench_knn_lsh_scaled(spark, sf_dir: str):
     """Hyperplane-LSH ANN over 20x embeddings (10k vectors, 400 queries)."""
-    import pyspark.sql.functions as F
-
     from transcription_lakehouse_spark.operators.similarity import lsh_topk
-    from transcription_lakehouse_spark.sources.tables import load_table
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    reps = spark.range(20).withColumnRenamed("id", "rep")
-    # the crossJoin-replicated fixture lands in ONE input partition; spread
-    # it the way a real stored table would be, so corpus-side scoring
-    # parallelizes (queries are broadcast — corpus partitioning IS the
-    # parallelism)
-    big = (
-        emb.crossJoin(F.broadcast(reps))
-        .select((F.col("vec_id") * 20 + F.col("rep")).alias("vec_id"), "embedding")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    big = _embeddings_20x(spark, sf_dir)
     queries = big.filter(F.col("vec_id") % 25 == 0)
     # planes_per_band scales with the corpus (10 planes -> 1024 buckets/band
     # over 100k vectors keeps per-bucket candidate sets ~100): finer buckets
@@ -196,19 +134,10 @@ def bench_knn_pq_scaled(spark, sf_dir: str):
     """PQ ANN over 20x embeddings (40k vectors, 400 queries): ADC over the
     8-int compressed codes + shortlist-64 exact rescore — the corpus-sized
     stage reads ~32x fewer bytes than the raw-vector scan."""
-    import pyspark.sql.functions as F
-
     from transcription_lakehouse_spark.operators.pq import pq_topk
-    from transcription_lakehouse_spark.sources.tables import load_table
     from transcription_lakehouse_spark.workload._pq_codebooks import CODEBOOKS
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    reps = spark.range(20).withColumnRenamed("id", "rep")
-    big = (
-        emb.crossJoin(F.broadcast(reps))
-        .select((F.col("vec_id") * 20 + F.col("rep")).alias("vec_id"), "embedding")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    big = _embeddings_20x(spark, sf_dir)
     queries = big.filter(F.col("vec_id") % 100 == 0)
     return pq_topk(queries, big, "vec_id", "embedding", CODEBOOKS, k=5, shortlist=64)
 
@@ -216,18 +145,9 @@ def bench_knn_pq_scaled(spark, sf_dir: str):
 def bench_knn_ivf_scaled(spark, sf_dir: str):
     """IVF ANN over 20x embeddings (10k vectors, 400 queries): k-means cell
     assignment + nprobe=4/32 probing — queries touch ~1/8 of the corpus."""
-    import pyspark.sql.functions as F
-
     from transcription_lakehouse_spark.operators.similarity import ivf_topk
-    from transcription_lakehouse_spark.sources.tables import load_table
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    reps = spark.range(20).withColumnRenamed("id", "rep")
-    big = (
-        emb.crossJoin(F.broadcast(reps))
-        .select((F.col("vec_id") * 20 + F.col("rep")).alias("vec_id"), "embedding")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    big = _embeddings_20x(spark, sf_dir)
     queries = big.filter(F.col("vec_id") % 25 == 0)
     return ivf_topk(queries, big, "vec_id", "embedding", k=5, n_cells=32, nprobe=4)
 
@@ -237,22 +157,13 @@ def bench_knn_ivfpq_scaled(spark, sf_dir: str):
     cells prune to nprobe/n_cells of the corpus BEFORE the ADC stage, so
     the per-query ranking shuffle shrinks ~8x vs flat PQ — the composed
     index is the 100 TB plan, flat PQ the small-corpus baseline."""
-    import pyspark.sql.functions as F
-
     from transcription_lakehouse_spark.operators.pq import ivfpq_topk
-    from transcription_lakehouse_spark.sources.tables import load_table
     from transcription_lakehouse_spark.workload._ivf_quantizer import CENTROIDS
     from transcription_lakehouse_spark.workload._ivfpq_codebooks import (
         CODEBOOKS as RESIDUAL_BOOKS,
     )
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    reps = spark.range(20).withColumnRenamed("id", "rep")
-    big = (
-        emb.crossJoin(F.broadcast(reps))
-        .select((F.col("vec_id") * 20 + F.col("rep")).alias("vec_id"), "embedding")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    big = _embeddings_20x(spark, sf_dir)
     queries = big.filter(F.col("vec_id") % 100 == 0)
     return ivfpq_topk(
         queries, big, "vec_id", "embedding", CENTROIDS, RESIDUAL_BOOKS,
@@ -264,41 +175,15 @@ def bench_semantic_decontam_scaled(spark, sf_dir: str):
     """Semantic decontamination of a 20x corpus (40k vectors) against a
     fixed ~100-vector eval slice: the asymmetric production shape — eval
     buckets broadcast, wall tracks the corpus scan, never corpus x eval."""
-    import pyspark.sql.functions as F
-
     from transcription_lakehouse_spark.operators.decontam import (
         semantic_decontam,
     )
-    from transcription_lakehouse_spark.sources.tables import load_table
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    reps = spark.range(20).withColumnRenamed("id", "rep")
-    big = (
-        emb.crossJoin(F.broadcast(reps))
-        .select((F.col("vec_id") * 20 + F.col("rep")).alias("vec_id"), "embedding")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    evalset = emb.filter(F.col("vec_id") % 20 == 0)
+    big = _embeddings_20x(spark, sf_dir)
+    evalset = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 20 == 0)
     return semantic_decontam(
         big, evalset, "vec_id", "embedding",
         threshold=0.35, n_bands=8, planes_per_band=4,
-    )
-
-
-def _replicated_embeddings(spark, sf_dir: str, factor: int = 20):
-    import pyspark.sql.functions as F
-
-    from transcription_lakehouse_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    reps = spark.range(factor).withColumnRenamed("id", "rep")
-    return (
-        emb.crossJoin(F.broadcast(reps))
-        .select(
-            (F.col("vec_id") * factor + F.col("rep")).alias("vec_id"),
-            "embedding",
-        )
-        .repartition(spark.sparkContext.defaultParallelism)
     )
 
 
@@ -315,7 +200,6 @@ def bench_graph_build(spark, sf_dir: str):
     from transcription_lakehouse_spark.operators.graph_ann import (
         build_knn_graph,
     )
-    from transcription_lakehouse_spark.sources.tables import load_table
 
     e = load_table(spark, sf_dir, "embeddings")
     g = build_knn_graph(
@@ -326,10 +210,7 @@ def bench_graph_build(spark, sf_dir: str):
 
 
 def bench_graph_search(spark, sf_dir: str):
-    import pyspark.sql.functions as F
-
     from transcription_lakehouse_spark.operators.graph_ann import graph_topk
-    from transcription_lakehouse_spark.sources.tables import load_table
 
     e = load_table(spark, sf_dir, "embeddings")
     g = spark.read.parquet(_GRAPH_STORE + "_1x")
@@ -344,12 +225,9 @@ def bench_graph_search_coarse(spark, sf_dir: str):
     """Two-layer descent over the same stored graph: committed-IVF coarse
     seed (nprobe=4) + beam-24 walk — higher recall than the LSH seed
     (0.865 vs 0.705 on the sf0.1 frontier corpus) from the same index."""
-    import pyspark.sql.functions as F
-
     from transcription_lakehouse_spark.operators.graph_ann import (
         graph_topk_coarse,
     )
-    from transcription_lakehouse_spark.sources.tables import load_table
     from transcription_lakehouse_spark.workload._ivf_quantizer import (
         CENTROIDS,
     )
@@ -371,7 +249,7 @@ def bench_graph_build_20x(spark, sf_dir: str):
         build_knn_graph,
     )
 
-    big = _replicated_embeddings(spark, sf_dir)
+    big = _embeddings_20x(spark, sf_dir)
     g = build_knn_graph(
         big, "vec_id", "embedding", k_graph=16, n_bands=8, planes_per_band=10
     )
@@ -384,8 +262,6 @@ def bench_graph_search_coarse_20x(spark, sf_dir: str):
     layer scores |Q| x 64 centroids (corpus-independent) and each probed
     cell's member scan grows with the corpus but stays nprobe/64 of it;
     the walk stage is O(|Q| * beam * k_graph) regardless of corpus."""
-    import pyspark.sql.functions as F
-
     from transcription_lakehouse_spark.operators.graph_ann import (
         graph_topk_coarse,
     )
@@ -393,7 +269,7 @@ def bench_graph_search_coarse_20x(spark, sf_dir: str):
         CENTROIDS,
     )
 
-    big = _replicated_embeddings(spark, sf_dir)
+    big = _embeddings_20x(spark, sf_dir)
     g = spark.read.parquet(_GRAPH_STORE + "_20x")
     queries = big.filter(F.col("vec_id") % 500 == 0)
     return graph_topk_coarse(
@@ -406,11 +282,9 @@ def bench_graph_search_20x(spark, sf_dir: str):
     """Search over the stored 20x graph: the walk stage's cost is
     O(|Q| * beam * k_graph) — independent of corpus size; only the seed
     stage scans bucket members (bounded by the finer 10-plane buckets)."""
-    import pyspark.sql.functions as F
-
     from transcription_lakehouse_spark.operators.graph_ann import graph_topk
 
-    big = _replicated_embeddings(spark, sf_dir)
+    big = _embeddings_20x(spark, sf_dir)
     g = spark.read.parquet(_GRAPH_STORE + "_20x")
     queries = big.filter(F.col("vec_id") % 500 == 0)
     return graph_topk(
@@ -434,7 +308,6 @@ def bench_sq8_build(spark, sf_dir: str):
     from transcription_lakehouse_spark.operators.similarity import (
         sq8_dequantize,
     )
-    from transcription_lakehouse_spark.sources.tables import load_table
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     arrs, _scales = sq8_dequantize(e, "embedding")
@@ -443,8 +316,6 @@ def bench_sq8_build(spark, sf_dir: str):
 
 
 def bench_sq8_search(spark, sf_dir: str):
-    import pyspark.sql.functions as F
-
     from transcription_lakehouse_spark.operators.similarity import (
         brute_force_topk,
     )
@@ -474,66 +345,72 @@ SCALED = {
 }
 
 
-def main() -> None:
+def entry(name: str):
+    """The callable(spark, sf_dir) behind a bench or registry name."""
+    fn = SCALED.get(name) or QUERIES.get(name)
+    if fn is None:
+        raise SystemExit(f"unknown query {name}")
+    return fn
+
+
+def warm_session(app_name: str):
+    """(spark, sf_dir) with every testdata table touched once: JVM/codegen
+    spin-up and parquet footer reads are session costs, not query costs."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else None
-
-    spark = get_spark(app_name="bench")
-    # warmup: JVM/codegen spin-up + parquet footer reads are session costs,
-    # not query costs — touch each table once before timing
-    from transcription_lakehouse_spark.sources.tables import load_tables
-
+    spark = get_spark(app_name=app_name)
     for df in load_tables(spark, sf_dir).values():
         df.limit(1).count()
+    return spark, sf_dir
+
+
+def best_of(run_once, name: str, reruns: dict[str, int]) -> float:
+    """Steady-state timing of one entry; ``run_once()`` returns one wall.
+
+    Entries >= 3 s report min-of-2 (cold-run codegen/JIT warmup dominates
+    the spread there, the min is the plan's reproducible cost). When the
+    slower of those two runs exceeds 1.5x the faster, the pair disagrees
+    too much to trust either: ONE extra run is taken, the min-of-3 is
+    reported and ``reruns[name] = 3`` records it in the output. Entries
+    under 3 s report the MEDIAN of three post-warmup runs: at sub-3 s walls
+    a single load spike on a shared host doubles the reading, and the
+    median absorbs one outlier run by construction, the same discipline
+    the calibration scalar uses."""
+    first = run_once()
+    if first >= 3.0:
+        second = run_once()
+        wall = min(first, second)
+        if max(first, second) > 1.5 * wall:
+            wall = min(wall, run_once())
+            reruns[name] = 3
+        return round(wall, 3)
+    walls = sorted(run_once() for _ in range(3))
+    return round(walls[1], 3)
+
+
+def main() -> None:
+    suite = [*HEADLINE, *SCALED]
+    names = sys.argv[1:]
+    unknown = sorted(set(names) - set(suite))
+    if unknown:
+        raise SystemExit(f"unknown bench entries: {unknown}")
+    # suite order, so a build entry still precedes the searches reading it
+    selected = [n for n in suite if not names or n in names]
+
+    spark, sf_dir = warm_session("bench")
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else None
 
     def _run_once(fn) -> float:
         t0 = time.time()
         fn(spark, sf_dir).collect()
         return time.time() - t0
 
-    prior = _prior_round_queries()
-    reruns: dict[str, int] = {}
-
-    def best_of(fn, name: str) -> float:
-        """Steady-state timing. Entries >= ~3 s report min-of-2 (cold-run
-        codegen/JIT warmup dominates the spread there, the min is the
-        plan's reproducible cost). Entries under 3 s report the MEDIAN of
-        three post-warmup runs instead: at sub-3 s walls a single load
-        spike on a shared host doubles the reading and manufactures a
-        phantom >1.3x regression for bench_compare (three driver rounds
-        of noise adjudication, r8 verdict "wrong #1") — the median
-        absorbs one outlier run by construction, same discipline the
-        calibration scalar already uses.
-
-        A >= 3 s entry whose min-of-2 STILL exceeds 1.5x its prior-round
-        artifact wall gets ONE extra run and reports the min-of-3 (r9
-        verdict "wrong #2": the 20x-family contamination always landed in
-        the single-burst-exposed >= 3 s tier). The rerun count lands in
-        the artifact's "reruns" map, so a surviving flag carries its own
-        in-artifact evidence and needs no prose adjudication."""
-        first = _run_once(fn)
-        if first >= 3.0:
-            wall = min(first, _run_once(fn))
-            ref = prior.get(name)
-            if ref and ref >= 0.001 and wall > 1.5 * ref:
-                wall = min(wall, _run_once(fn))
-                reruns[name] = 3
-            return round(wall, 3)
-        walls = sorted(_run_once(fn) for _ in range(3))
-        return round(walls[1], 3)
-
     # Host-speed calibration: median of 3 runs of a pinned pure scan+agg
     # query whose code changes rarely. bench_compare normalizes per-query
-    # ratios by the calibration ratio between two artifacts, so "the whole
-    # suite is 1.3x because the driver box was loaded" is arithmetic, not
-    # prose adjudication (round-5 verdict ask).
+    # ratios by the calibration ratio between two records, so "the whole
+    # suite is 1.3x because the box was loaded" is arithmetic, not prose.
     def _calibrate() -> float:
-        walls = []
-        for _ in range(3):
-            t0 = time.time()
-            QUERIES["q1_pricing_summary"](spark, sf_dir).collect()
-            walls.append(time.time() - t0)
+        walls = [_run_once(QUERIES["q1_pricing_summary"]) for _ in range(3)]
         return round(sorted(walls)[1], 3)
 
     def _load1() -> float:
@@ -545,17 +422,16 @@ def main() -> None:
     load_start = _load1()
     calibration = _calibrate()
 
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        timings[name] = best_of(QUERIES[name], name)
-    for name, fn in SCALED.items():
-        timings[name] = best_of(fn, name)
+    reruns: dict[str, int] = {}
+    timings = {
+        name: best_of(lambda fn=entry(name): _run_once(fn), name, reruns)
+        for name in selected
+    }
     total = round(sum(timings.values()), 3)
     # a SECOND calibration after the suite: co-resident host load that
-    # arrives MID-RUN (the r8/r9 contamination mode — the start-of-run
-    # calibration reads idle while the suite tail runs loaded) is then
-    # visible in the artifact itself as cal_post >> cal_pre, so
-    # adjudication stops needing a separate re-run to prove it
+    # arrives MID-RUN (the start-of-run calibration reads idle while the
+    # suite tail runs loaded) is then visible in the record itself as
+    # cal_post >> cal_pre, so adjudication needs no separate re-run
     calibration_post = _calibrate()
     record = {
         "metric": "headline_suite_wall_sec",
@@ -572,22 +448,10 @@ def main() -> None:
     }
     # Full record first (compact separators: more query entries survive a
     # fixed-size stdout-tail capture), then a compact FINAL line that must
-    # survive a ~2000-char driver tail capture COMPLETE — including the
-    # per-query walls. The r10 driver artifact proved the previous design
-    # wrong twice over: its tail started mid-full-record AND the short
-    # final line carried no queries, so next-round rerun triggers and
-    # bench_compare prior-walls lost ~20 early-listed queries (r10 verdict
-    # "wrong #1"). The final line now carries queries at 2 dp and sheds
-    # the reruns map (then 1-dp walls) if that would push it past the
-    # observed tail budget. The full-precision record also lands in
-    # BENCH_last_local.json beside the repo for direct use.
+    # survive a ~2000-char tail capture COMPLETE, including the per-query
+    # walls: it carries queries at 2 dp and sheds the reruns map (then
+    # 1-dp walls) if that would push it past the tail budget.
     print(json.dumps(record, separators=(",", ":")))
-    try:
-        here = os.path.dirname(os.path.abspath(__file__))
-        with open(os.path.join(here, "BENCH_last_local.json"), "w") as f:
-            json.dump(record, f)
-    except OSError:
-        pass
     print(_final_line(record))
 
 
@@ -608,7 +472,7 @@ def _final_line(record: dict) -> str:
     }
     line = json.dumps(summary, separators=(",", ":"))
     if len(line) > _TAIL_BUDGET:
-        # rerun detail survives in the full record + BENCH_last_local;
+        # rerun detail survives in the full record;
         # per-query walls are the thing only this line durably carries
         summary.pop("reruns", None)
         summary["reruns_n"] = len(record.get("reruns") or {})

@@ -34,9 +34,9 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
 PKG = "transcription_lakehouse_spark"
 
 # a change to any of these invalidates every query's certification

@@ -19,10 +19,11 @@ Prints one JSON line per (operator, factor).
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 
@@ -40,41 +41,27 @@ from transcription_lakehouse_spark.operators.quality_model import (  # noqa: E40
     quality_classifier,
 )
 from transcription_lakehouse_spark.session import get_spark  # noqa: E402
-from transcription_lakehouse_spark.sources.tables import load_table  # noqa: E402
+from transcription_lakehouse_spark.sources.tables import load_table, replicate  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.1"
 
 
 def scaled_embeddings(spark, factor: int):
     emb = load_table(spark, SF_DIR, "embeddings")
-    reps = spark.range(factor).withColumnRenamed("id", "rep")
     d = 64
     rot = F.col("rep") % d
     arr = F.col("embedding")
     rotated = F.when(rot == 0, arr).otherwise(
         F.concat(F.slice(arr, rot + 1, F.lit(d) - rot), F.slice(arr, 1, rot))
     )
-    return (
-        emb.crossJoin(F.broadcast(reps))
-        .select(
-            (F.col("vec_id") * factor + F.col("rep")).alias("vec_id"),
-            rotated.alias("embedding"),
-        )
-        .repartition(spark.sparkContext.defaultParallelism)
+    return replicate(emb, factor, "vec_id").select(
+        "vec_id", rotated.alias("embedding")
     )
 
 
 def scaled_docs(spark, factor: int):
     docs = load_table(spark, SF_DIR, "documents")
-    reps = spark.range(factor).withColumnRenamed("id", "rep")
-    return (
-        docs.crossJoin(F.broadcast(reps))
-        .select(
-            (F.col("doc_id") * factor + F.col("rep")).alias("doc_id"),
-            "text", "source",
-        )
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    return replicate(docs, factor, "doc_id").select("doc_id", "text", "source")
 
 
 def main() -> None:

@@ -15,10 +15,11 @@ Prints one JSON line per variant: recall@5, wall, params.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 
@@ -31,7 +32,7 @@ from transcription_lakehouse_spark.operators.similarity import (  # noqa: E402
     brute_force_topk,
 )
 from transcription_lakehouse_spark.session import get_spark  # noqa: E402
-from transcription_lakehouse_spark.sources.tables import load_table  # noqa: E402
+from transcription_lakehouse_spark.sources.tables import load_table, replicate  # noqa: E402
 from transcription_lakehouse_spark.workload._ivf_quantizer import (  # noqa: E402
     CENTROIDS,
 )
@@ -45,7 +46,6 @@ def main() -> int:
     spark = get_spark(app_name="graph-frontier-20x")
     emb = load_table(spark, sf_dir, "embeddings")
     n0 = emb.count()
-    reps = spark.range(factor).withColumnRenamed("id", "rep")
     # deterministic perturbation SIZED TO THE GEOMETRY (no RNG): the base
     # corpus is unit-norm with top-5 cosine ~0.37, so a noise vector of
     # norm ~0.75 puts replica<->source cosine ~0.8 — replicas still ARE
@@ -54,20 +54,17 @@ def main() -> int:
     # walk genuinely determine recall (a 1e-3 shift made recall vacuously
     # 1.0 for every variant). Pseudo-noise: affine hash mod 2000 mapped
     # to [-0.5, 0.5], scaled 0.33 (E-norm ~= 0.33*sqrt(64/12) ~= 0.76)
+    src_id = F.expr(f"vec_id div {factor}")  # the replica's source vec_id
     pert = F.transform(
         F.col("embedding"),
         lambda x, d: x + (
-            ((F.col("rep") * 1009 + d * 97 + F.col("vec_id") * 31) % 2000)
+            ((F.col("rep") * 1009 + d * 97 + src_id * 31) % 2000)
             / F.lit(2000.0) - F.lit(0.5)
         ) * F.lit(0.33),
     )
     big = (
-        emb.crossJoin(F.broadcast(reps))
-        .select(
-            (F.col("vec_id") * factor + F.col("rep")).alias("vec_id"),
-            pert.alias("embedding"),
-        )
-        .repartition(spark.sparkContext.defaultParallelism)
+        replicate(emb, factor, "vec_id")
+        .select("vec_id", pert.alias("embedding"))
         .cache()
     )
     n = big.count()

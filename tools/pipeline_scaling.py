@@ -27,18 +27,19 @@ from __future__ import annotations
 
 import json
 import shutil
+import os
 import sys
 import tempfile
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import Window  # noqa: E402
 
 from transcription_lakehouse_spark.session import get_spark  # noqa: E402
-from transcription_lakehouse_spark.sources.tables import load_table  # noqa: E402
+from transcription_lakehouse_spark.sources.tables import load_table, replicate  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.1"
 TIME_SCALE = 1e11  # µs → compressed seconds, same as workload.transcript
@@ -47,15 +48,7 @@ TIME_SCALE = 1e11  # µs → compressed seconds, same as workload.transcript
 def raw_utterances(spark, factor: int):
     """Scaled raw-utterance frame in RAW_UTTERANCE_SCHEMA shape; episode
     ids shift per replica so episode cardinality scales too."""
-    ev = load_table(spark, SF_DIR, "events")
-    reps = spark.range(factor).withColumnRenamed("id", "rep")
-    ev = ev.crossJoin(F.broadcast(reps)).select(
-        (F.col("user_id") + F.col("rep") * 10_000).alias("user_id"),
-        (F.col("event_id") + F.col("rep") * 10_000_000).alias("event_id"),
-        "ts_us",
-        "event_type",
-        "value",
-    )
+    ev = replicate(load_table(spark, SF_DIR, "events"), factor, "user_id", "event_id")
     rel = F.col("ts_us") - F.min("ts_us").over(Window.partitionBy("user_id"))
     start = rel / F.lit(TIME_SCALE)
     return ev.select(

@@ -1,18 +1,20 @@
-"""Dump formatted physical plans for representative queries into PLANS.md.
+"""Dump formatted physical plans for representative queries into one
+markdown file.
 
 The plan-shape TESTS (tests/test_plans.py) are the regression gate; this
 artifact is the human-readable companion: reviewers can see pushed filters,
 pruned schemas, broadcast vs shuffle joins, and exchange counts without
 running Spark.
 
-Usage: python tools/plans_dump.py [sf_dir]
+Usage: python tools/plans_dump.py OUT.md [sf_dir]
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from transcription_lakehouse_spark.session import get_spark  # noqa: E402
 from transcription_lakehouse_spark.workload import QUERIES  # noqa: E402
@@ -47,10 +49,13 @@ SHOWCASE = [
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    if len(sys.argv) < 2:
+        raise SystemExit("usage: plans_dump.py OUT.md [sf_dir]")
+    out_path = sys.argv[1]
+    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.001"
     spark = get_spark(app_name="plans-dump")
     out = [
-        "# PLANS — formatted physical plans (generated by tools/plans_dump.py",
+        "# Formatted physical plans (generated by tools/plans_dump.py",
         f"# at {sf_dir}; regenerate after plan-affecting changes)",
         "",
     ]
@@ -61,9 +66,9 @@ def main() -> None:
         )
         out += [f"## {name}", "", f"*Why it matters:* {why}", "", "```",
                 plan.rstrip(), "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(out_path, "w") as f:
         f.write("\n".join(out))
-    print(f"wrote PLANS.md ({len(SHOWCASE)} plans)")
+    print(f"wrote {out_path} ({len(SHOWCASE)} plans)")
 
 
 if __name__ == "__main__":

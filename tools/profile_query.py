@@ -19,7 +19,7 @@ comparable; pass --noop to time a noop sink instead (guide §1.4) when a
 query's collect volume is non-trivial.
 
 Usage:
-    python tools/profile_query.py [--plans-dir plans/r11 --tag before]
+    python tools/profile_query.py [--plans-dir DIR --tag before]
                                   [--noop] name [name ...]
 """
 from __future__ import annotations
@@ -33,9 +33,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
-from transcription_lakehouse_spark.session import get_spark  # noqa: E402
-from transcription_lakehouse_spark.sources.tables import load_tables  # noqa: E402
-from transcription_lakehouse_spark.workload import QUERIES  # noqa: E402
 
 
 def _plan_counts(plan: str) -> dict[str, int]:
@@ -74,15 +71,10 @@ def main() -> None:
         else:
             raise SystemExit(f"unknown flag {args[0]}")
     names = args
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name="profile_query")
-    for df in load_tables(spark, sf_dir).values():
-        df.limit(1).count()
+    spark, sf_dir = bench.warm_session("profile_query")
 
     for name in names:
-        fn = QUERIES.get(name) or bench.SCALED.get(name)
-        if fn is None:
-            raise SystemExit(f"unknown query {name}")
+        fn = bench.entry(name)
         spark.sparkContext.setJobDescription(f"profile:{name}")
         t0 = time.time()
         df = fn(spark, sf_dir)

@@ -9,10 +9,11 @@ the operators keep their single-shuffle shape as data grows.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import Window  # noqa: E402
@@ -20,47 +21,27 @@ from pyspark.sql import Window  # noqa: E402
 from transcription_lakehouse_spark.operators.intervals import merged_intervals  # noqa: E402
 from transcription_lakehouse_spark.operators.sessionization import with_session_id  # noqa: E402
 from transcription_lakehouse_spark.session import get_spark  # noqa: E402
-from transcription_lakehouse_spark.sources.tables import load_table  # noqa: E402
+from transcription_lakehouse_spark.sources.tables import load_table, replicate  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.1"
 
 
 def scaled_events(spark, factor: int):
+    # user ids are replica keys too, so user cardinality scales with the data
     ev = load_table(spark, SF_DIR, "events")
-    reps = spark.range(factor).withColumnRenamed("id", "rep")
-    # shift user ids per replica so user cardinality scales with the data
-    return ev.crossJoin(F.broadcast(reps)).select(
-        (F.col("user_id") + F.col("rep") * 1000).alias("user_id"),
-        (F.col("event_id") + F.col("rep") * 10_000_000).alias("event_id"),
-        "ts_us",
-        "event_type",
-        "value",
+    return replicate(ev, factor, "user_id", "event_id").select(
+        "user_id", "event_id", "ts_us", "event_type", "value"
     )
 
 
 def scaled_docs(spark, factor: int):
     docs = load_table(spark, SF_DIR, "documents")
-    reps = spark.range(factor).withColumnRenamed("id", "rep")
-    return (
-        docs.crossJoin(F.broadcast(reps))
-        .select(
-            (F.col("doc_id") * factor + F.col("rep")).alias("doc_id"), "text"
-        )
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    return replicate(docs, factor, "doc_id").select("doc_id", "text")
 
 
 def scaled_embeddings(spark, factor: int):
     emb = load_table(spark, SF_DIR, "embeddings")
-    reps = spark.range(factor).withColumnRenamed("id", "rep")
-    return (
-        emb.crossJoin(F.broadcast(reps))
-        .select(
-            (F.col("vec_id") * factor + F.col("rep")).alias("vec_id"),
-            "embedding",
-        )
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    return replicate(emb, factor, "vec_id").select("vec_id", "embedding")
 
 
 def run(factor: int) -> dict:

@@ -18,10 +18,11 @@ Prints one JSON line per factor.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 
@@ -30,7 +31,7 @@ from transcription_lakehouse_spark.operators.similarity import (  # noqa: E402
     train_centroids,
 )
 from transcription_lakehouse_spark.session import get_spark  # noqa: E402
-from transcription_lakehouse_spark.sources.tables import load_table  # noqa: E402
+from transcription_lakehouse_spark.sources.tables import load_table, replicate  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.1"
 TARGET_CELL = 300
@@ -39,7 +40,6 @@ THRESHOLD = 0.35
 
 def scaled_embeddings(spark, factor: int):
     emb = load_table(spark, SF_DIR, "embeddings")
-    reps = spark.range(factor).withColumnRenamed("id", "rep")
     d = 64
     rot = F.col("rep") % d
     arr = F.col("embedding")
@@ -48,13 +48,8 @@ def scaled_embeddings(spark, factor: int):
             F.slice(arr, rot + 1, F.lit(d) - rot), F.slice(arr, 1, rot)
         )
     )
-    return (
-        emb.crossJoin(F.broadcast(reps))
-        .select(
-            (F.col("vec_id") * factor + F.col("rep")).alias("vec_id"),
-            rotated.alias("embedding"),
-        )
-        .repartition(spark.sparkContext.defaultParallelism)
+    return replicate(emb, factor, "vec_id").select(
+        "vec_id", rotated.alias("embedding")
     )
 
 

@@ -14,7 +14,7 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from transcription_lakehouse_spark.operators.ngram_lm import (  # noqa: E402
     train_ngram_counts,

@@ -26,7 +26,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from transcription_lakehouse_spark.session import get_spark  # noqa: E402
 from transcription_lakehouse_spark.txlog import LogTable  # noqa: E402

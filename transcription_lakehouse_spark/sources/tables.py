@@ -63,5 +63,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def replicate(df: DataFrame, factor: int, *keys: str) -> DataFrame:
+    """``factor`` copies of ``df`` with distinct keys: each key ``k`` becomes
+    ``k * factor + rep``, so ``k // factor`` recovers the source row. The
+    other columns ride along unchanged, plus ``rep`` (0..factor-1) for
+    per-replica transforms. The broadcast cross join lands in one input
+    partition; the result is spread over ``defaultParallelism`` the way a
+    stored table would be, so downstream map stages parallelize."""
+    spark = df.sparkSession
+    reps = spark.range(factor).withColumnRenamed("id", "rep")
+    cols = [
+        (F.col(c) * factor + F.col("rep")).alias(c) if c in keys else F.col(c)
+        for c in df.columns
+    ]
+    return (
+        df.crossJoin(F.broadcast(reps))
+        .select(*cols, "rep")
+        .repartition(spark.sparkContext.defaultParallelism)
+    )
+
+
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}

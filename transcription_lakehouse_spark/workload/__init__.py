@@ -16,124 +16,13 @@ from . import events, relational, relational2, text, transcript, vectors
 
 _MODULES = (transcript, vectors, text, events, relational, relational2)
 
-# The driver's correctness gate records at most 50 queries per round, taken
-# in registry order.  Queries that have never had a green driver row (all
-# trn_*, the round-2 doc_*/vec_* additions, and the three round-1 CAST-fixed
-# evt_* queries) go first so the next CORRECTNESS_r{N}.json certifies them.
-# `_driver_green_names` below automates the rotation from this round on:
-# anything green in a committed CORRECTNESS artifact drops out of the
-# priority window, so each round's 50-query budget lands on whatever still
-# lacks a driver row. This static list is the round-3 seed / fallback.
-_PRIORITY = (
-    "trn_span_catalog",
-    "trn_beat_catalog",
-    "trn_section_catalog",
-    "trn_crosstalk",
-    "trn_duration_stats",
-    "trn_duration_histogram",
-    "trn_speaker_balance",
-    "trn_integrity_battery",
-    "trn_coverage",
-    "trn_text_metrics",
-    "trn_speaker_enrichment",
-    "evt_sessions",
-    "evt_interval_union",
-    "evt_gap_stats",
-    "vec_dim_stats",
-    "vec_hard_negatives",
-    "vec_semantic_dedup",
-    "vec_semantic_dedup_p95",
-    "vec_knn_ivf",
-    "vec_knn_lsh",
-    "doc_dup_spans",
-    "doc_cut_dup_spans",
-    "doc_dup_clusters",
-    "doc_curation_funnel",
-    "doc_curated_ids",
-    "doc_curation_v2",
-    "doc_curation_v3",
-    "doc_rag_chunks",
-    "doc_tfidf_topk",
-    "doc_collocations",
-    "doc_mixture_plan",
-    "doc_sequence_packing",
-    "doc_drift_psi",
-    "doc_unigram_logprob",
-    "doc_stratified_sample",
-    "doc_simhash_pairs",
-    "doc_repetition_metrics",
-    "doc_gopher_report",
-    "doc_decontamination",
-    "doc_weighted_sample",
-    "doc_boilerplate",
-    "doc_pii_scrub",
-)
-
-def _driver_green_rounds() -> dict[str, int]:
-    """Map each query name to the ROUND NUMBER of its most recent green row
-    across the committed driver correctness artifacts (CORRECTNESS_r*.json
-    next to the repo root). Green = value-hash match, or a clean rows-only
-    row for non-SQL-expressible queries. Unreadable / absent artifacts
-    contribute nothing — ordering degrades to the static seed, never breaks
-    the registry."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-    import re as _re
-
-    repo = _os.path.dirname(_os.path.dirname(_os.path.dirname(__file__)))
-    latest: dict[str, int] = {}
-    for path in _glob.glob(_os.path.join(repo, "CORRECTNESS_r*.json")):
-        m = _re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        rnd = int(m.group(1)) if m else 0
-        try:
-            with open(path) as f:
-                rows = _json.load(f)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, r in rows.items():
-            if not isinstance(r, dict) or r.get("err") is not None:
-                continue
-            if r.get("hash_match") or (
-                r.get("hash_match") is None and r.get("rows_match")
-            ):
-                latest[name] = max(latest.get(name, 0), rnd)
-    return latest
-
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-_ALL_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-_ALL_ORACLES: dict[str, str] = {}
-for _m in _MODULES:
-    _ALL_QUERIES.update(_m.QUERIES)
-    for _name, _sql in _m.ORACLES.items():
-        if _sql is not None:
-            _ALL_ORACLES[_name] = _sql
-
-# Registry order drives the driver's 50-query correctness window, so order
-# by verification staleness: never-driver-green first (seed order, then
-# module order), then green queries ascending by the round of their LATEST
-# green row — the oldest certifications get re-verified against current
-# code before recently-certified ones repeat. With no readable artifact
-# _GREEN is empty and this degrades to the static seed ordering. Stale seed
-# entries (renamed/removed queries) are skipped rather than raising.
-_GREEN = _driver_green_rounds()
-for _name in _PRIORITY:
-    if _name in _ALL_QUERIES and _name not in _GREEN:
-        QUERIES[_name] = _ALL_QUERIES[_name]
-for _name in _ALL_QUERIES:
-    if _name not in _GREEN and _name not in QUERIES:
-        QUERIES[_name] = _ALL_QUERIES[_name]
-_MODULE_POS = {n: i for i, n in enumerate(_ALL_QUERIES)}
-for _name in sorted(
-    (n for n in _ALL_QUERIES if n not in QUERIES),
-    key=lambda n: (_GREEN.get(n, 0), _MODULE_POS[n]),
-):
-    QUERIES[_name] = _ALL_QUERIES[_name]
-for _name in QUERIES:
-    if _name in _ALL_ORACLES:
-        ORACLES[_name] = _ALL_ORACLES[_name]
+# Registry order is module order, then each module's own definition order.
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    name: fn for m in _MODULES for name, fn in m.QUERIES.items()
+}
+ORACLES: dict[str, str] = {
+    name: sql
+    for m in _MODULES
+    for name, sql in m.ORACLES.items()
+    if sql is not None
+}

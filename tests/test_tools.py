@@ -167,6 +167,20 @@ def test_bench_compare_rescues_truncated_tail_and_reruns(tmp_path, capsys):
     assert '"a"' not in out or True      # a (1.1x) under threshold
 
 
+def test_bench_compare_requires_two_records(capsys):
+    """No default pair: without exactly two record files the gate prints
+    a usage error and exits 2 instead of diffing committed artifacts
+    taken on another host."""
+    import sys
+    from unittest import mock
+
+    bc = _load("bench_compare")
+    for argv in ([], ["--latest"], ["one.json"]):
+        with mock.patch.object(sys, "argv", ["bench_compare.py", *argv]):
+            assert bc.main() == 2
+        assert "usage:" in capsys.readouterr().err
+
+
 def test_bench_compare_raw_floor_suppression_is_audited(tmp_path, capsys):
     """When the current host is much faster, a normalized ratio can pass
     the threshold while the query measured FASTER in raw seconds: the
@@ -221,6 +235,11 @@ def test_bench_rerun_rule_compares_an_entrys_own_runs():
     run, calls = stub(1.0, 1.2, 3.0, 1.1)
     assert bench.best_of(run, "small", reruns) == 1.2
     assert len(calls) == 4 and "small" not in reruns
+    # the warm run picks the tier: cold codegen past 3 s does not make a
+    # ~1.7 s entry a min-of-2 entry with a forced rerun
+    run, calls = stub(4.0, 1.7, 1.8, 1.6)
+    assert bench.best_of(run, "cold_start", reruns) == 1.7
+    assert len(calls) == 4 and "cold_start" not in reruns
 
 
 def test_bench_final_line_carries_queries_within_tail_budget():

@@ -2464,6 +2464,46 @@ def test_optimize_lake_sweeps_only_debted_tables(spark, tmp_path):
         optimize_lake(spark, str(dirs_lake))
 
 
+def test_cli_maintain_prints_the_optimize_lake_report(spark, tmp_path):
+    """`lakehouse maintain` is a thin call into `optimize_lake`: on a
+    txlog lake it prints the report `optimize_lake` returns for an
+    identical twin lake; on a dirs lake it exits non-zero with the
+    `optimize_lake` error."""
+    import json as _json
+
+    from click.testing import CliRunner
+
+    from transcription_lakehouse_spark.cli import cli
+    from transcription_lakehouse_spark.ingestion import set_lake_format
+    from transcription_lakehouse_spark.maintenance import optimize_lake
+
+    def debted_lake(name):
+        lake = tmp_path / name
+        lake.mkdir()
+        set_lake_format(str(lake), "txlog")
+        t = LogTable(spark, str(lake / "normalized"), deletion_vectors=True)
+        t.append(spark.range(200).selectExpr("id").coalesce(2))
+        t.delete("id % 2 = 0")
+        LogTable(spark, str(lake / "catalogs" / "episodes")).append(
+            spark.range(10).selectExpr("id"))
+        return str(lake)
+
+    want = optimize_lake(spark, debted_lake("twin"), max_dead_ratio=0.3)
+    lake = debted_lake("lake")
+    r = CliRunner().invoke(cli, ["maintain", "--lakehouse-path", lake,
+                                 "--max-dead-ratio", "0.3"])
+    assert r.exit_code == 0, r.output
+    assert _json.loads(r.output) == want
+    assert want["normalized"]["triggered"] is True
+
+    dirs_lake = tmp_path / "dirs_lake"
+    dirs_lake.mkdir()
+    r = CliRunner().invoke(cli, ["maintain", "--lakehouse-path",
+                                 str(dirs_lake)])
+    assert r.exit_code != 0
+    assert "not a txlog-format lake" in r.output
+
+
 def test_constraint_stats_parser_and_prover_unit():
     """The stats fast path's pure pieces: what parses, what proves.
     One-sided by construction — a failed parse or proof only costs a

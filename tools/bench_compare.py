@@ -1,22 +1,22 @@
 #!/usr/bin/env python3
-"""Bench regression gate: diff two BENCH_r{N}.json artifacts and fail on
-any shared query slower than THRESHOLD× the previous round unless the
-regression has a written cause in BENCH_CAUSES.json.
+"""Bench regression gate: diff two bench records and fail on any shared
+query slower than THRESHOLD× the previous record unless the regression
+has a written cause in BENCH_CAUSES.json.
 
 Round-3 verdict prescribed this after an 11-query regression cluster that
 was probably machine load during the driver's bench run but could not be
-ruled noise without a gate. Usage:
+ruled noise without a gate. Both records must come from the same host
+(e.g. the first stdout line of ``python bench.py`` at the parent and at
+the change, each saved to a file). Usage:
 
-    python tools/bench_compare.py BENCH_r03.json BENCH_r04.json
-    python tools/bench_compare.py --latest      # two newest artifacts
+    python tools/bench_compare.py PREV.json CUR.json
 
-Exit 1 on unexplained regressions. BENCH_CAUSES.json (repo root) maps
+Exit 2 without exactly two files; exit 1 on unexplained regressions. BENCH_CAUSES.json (repo root) maps
 query name -> {"round": N, "cause": "..."} entries; a cause only excuses
 the round it names.
 """
 from __future__ import annotations
 
-import glob
 import json
 import os
 import re
@@ -115,14 +115,13 @@ def _round_of(path: str) -> int:
 
 def main() -> int:
     args = sys.argv[1:]
-    if args == ["--latest"] or not args:
-        arts = sorted(glob.glob(os.path.join(REPO, "BENCH_r*.json")), key=_round_of)
-        if len(arts) < 2:
-            print("need two BENCH_r*.json artifacts")
-            return 0
-        prev_path, cur_path = arts[-2], arts[-1]
-    else:
-        prev_path, cur_path = args
+    if len(args) != 2 or any(a.startswith("-") for a in args):
+        # no default pair: committed artifacts come from other hosts, so
+        # diffing them gates nothing about the code under test
+        print("usage: python tools/bench_compare.py PREV.json CUR.json",
+              file=sys.stderr)
+        return 2
+    prev_path, cur_path = args
     prev, cur = _queries(prev_path), _queries(cur_path)
     cur_round = _round_of(cur_path)
 

@@ -1,8 +1,7 @@
-"""Click CLI with reference flag parity (`/root/reference/src/lakehouse/
-cli/commands/*.py`): the same commands, options, and exit-code semantics,
-wrapping the Spark pipeline stages in pipeline.py. The positional
-`python -m transcription_lakehouse_spark.pipeline …` entry remains for
-scripting; this is the human surface.
+"""The `lakehouse` command line, with reference flag parity
+(`/root/reference/src/lakehouse/cli/commands/*.py`): the same commands,
+options, and exit-code semantics. Each lake command is a thin call into
+its pipeline.py function; this is the only command-line surface.
 
     python -m transcription_lakehouse_spark.cli ingest DATA --pattern '*.jsonl'
     python -m transcription_lakehouse_spark.cli materialize --heuristic-beats
@@ -11,6 +10,7 @@ scripting; this is the human surface.
     python -m transcription_lakehouse_spark.cli quality --coverage-min 75
     python -m transcription_lakehouse_spark.cli snapshot create --version v1.2.0
     python -m transcription_lakehouse_spark.cli snapshot verify SNAP_DIR
+    python -m transcription_lakehouse_spark.cli maintain --max-dead-ratio 0.2
     python -m transcription_lakehouse_spark.cli vacuum spans --keep-last 2
 """
 
@@ -28,6 +28,12 @@ _LAKE_OPT = click.option(
     show_default=True,
     help="Lakehouse root directory (env: LAKEHOUSE_PATH)",
 )
+
+
+def _comma_list(ctx, param, value: str | None) -> list[str] | None:
+    """Click callback for comma-separated column options: items are
+    stripped, empty ones dropped; an unset or empty option is None."""
+    return [c.strip() for c in (value or "").split(",") if c.strip()] or None
 
 
 def _spark(cmd: str):
@@ -280,40 +286,42 @@ def quality(lakehouse_path, version, output_dir, coverage_min,
     (`cli/commands/quality.py`); threshold flags map onto the assessor's
     Thresholds and are RECORDED in the report (the Assessment carries the
     applied thresholds)."""
-    from .catalogs.episodes import episode_catalog
-    from .ingestion import read_versioned
-    from .quality.assessor import Thresholds, assess
-    from .quality.reporter import write_report
+    from .pipeline import quality as _quality
+    from .quality.assessor import Thresholds
 
-    spark = _spark("quality")
-    th = Thresholds()
-    if coverage_min is not None:
-        th.min_coverage_pct = coverage_min
-    if span_length_min is not None or span_length_max is not None:
-        th.span_len_range = (
-            span_length_min if span_length_min is not None else th.span_len_range[0],
-            span_length_max if span_length_max is not None else th.span_len_range[1],
-        )
-    if beat_length_min is not None or beat_length_max is not None:
-        th.beat_len_range = (
-            beat_length_min if beat_length_min is not None else th.beat_len_range[0],
-            beat_length_max if beat_length_max is not None else th.beat_len_range[1],
-        )
-    spans = read_versioned(spark, lakehouse_path, "spans", version)
-    utterances = read_versioned(spark, lakehouse_path, "normalized", version)
-    episodes = episode_catalog(utterances)
-    beats_dir = os.path.join(lakehouse_path, "beats", version)
-    beats = (
-        read_versioned(spark, lakehouse_path, "beats", version)
-        if os.path.isdir(beats_dir)
-        else None
+    def given(flag, default):
+        return default if flag is None else flag
+
+    d = Thresholds()
+    th = Thresholds(
+        min_coverage_pct=given(coverage_min, d.min_coverage_pct),
+        span_len_range=(given(span_length_min, d.span_len_range[0]),
+                        given(span_length_max, d.span_len_range[1])),
+        beat_len_range=(given(beat_length_min, d.beat_len_range[0]),
+                        given(beat_length_max, d.beat_len_range[1])),
     )
-    a = assess(spans, episodes, beats=beats, thresholds=th)
-    rep = write_report(
-        a, output_dir or f"{lakehouse_path}/quality_reports", spans=spans
-    )
-    _echo({"status": a.status, "n_violations": len(a.violations), "report": rep})
-    raise SystemExit(1 if a.status == "RED" else 0)
+    out = _quality(_spark("quality"), lakehouse_path, version,
+                   thresholds=th, report_dir=output_dir)
+    _echo(out)
+    raise SystemExit(1 if out["status"] == "RED" else 0)
+
+
+@cli.command()
+@_LAKE_OPT
+@click.option("--max-dead-ratio", type=float, default=0.2, show_default=True,
+              help="Table-level dead-row ratio that triggers a table's "
+                   "OPTIMIZE")
+def maintain(lakehouse_path, max_dead_ratio):
+    """Lake-wide auto-OPTIMIZE of a txlog lake: one metadata-only
+    decision per table, commits only past the trigger."""
+    from .maintenance import optimize_lake
+
+    try:
+        out = optimize_lake(_spark("maintain"), lakehouse_path,
+                            max_dead_ratio=max_dead_ratio)
+    except ValueError as exc:  # a dirs lake has no tables to optimize
+        raise click.ClickException(str(exc)) from exc
+    _echo(out)
 
 
 @cli.group()
@@ -468,10 +476,10 @@ def table_history(path):
 @table.command("compact")
 @click.argument("path", type=click.Path(exists=True))
 @click.option("--target-files", type=int, default=1, show_default=True)
-@click.option("--cluster-by", default=None,
+@click.option("--cluster-by", default=None, callback=_comma_list,
               help="Comma-separated columns: range-cluster so each file "
                    "owns a disjoint value range (sharp scan skipping)")
-@click.option("--zorder-by", default=None,
+@click.option("--zorder-by", default=None, callback=_comma_list,
               help="Comma-separated columns: Morton-order clustering — "
                    "scans filtered on ANY listed column prune")
 def table_compact(path, target_files, cluster_by, zorder_by):
@@ -480,13 +488,8 @@ def table_compact(path, target_files, cluster_by, zorder_by):
     from .txlog import LogTable
 
     t = LogTable(_spark("table-compact"), path)
-    _echo(t.compact(
-        target_files=target_files,
-        cluster_by=[c.strip() for c in cluster_by.split(",")]
-        if cluster_by else None,
-        zorder_by=[c.strip() for c in zorder_by.split(",")]
-        if zorder_by else None,
-    ))
+    _echo(t.compact(target_files=target_files, cluster_by=cluster_by,
+                    zorder_by=zorder_by))
 
 
 @table.command("restore")
@@ -553,10 +556,10 @@ def table_constraint(path, add_, drop):
 @click.option("--small-file-bytes", type=int, default=None,
               help="Also bin-pack live files below this size into "
                    "~2x-threshold outputs (Delta OPTIMIZE bin-packing)")
-@click.option("--cluster-by", default=None,
+@click.option("--cluster-by", default=None, callback=_comma_list,
               help="Comma-separated columns: range-cluster the rewritten "
                    "rows so their min/max stats come back sharp")
-@click.option("--zorder-by", default=None,
+@click.option("--zorder-by", default=None, callback=_comma_list,
               help="Comma-separated columns: Morton-order the rewritten "
                    "rows instead")
 @click.option("--if-needed", is_flag=True,
@@ -577,13 +580,8 @@ def table_optimize(path, min_dead_ratio, small_file_bytes, cluster_by,
     from .txlog import LogTable
 
     t = LogTable(_spark("table-optimize"), path)
-    kwargs = dict(
-        small_file_bytes=small_file_bytes,
-        cluster_by=[c.strip() for c in cluster_by.split(",")]
-        if cluster_by else None,
-        zorder_by=[c.strip() for c in zorder_by.split(",")]
-        if zorder_by else None,
-    )
+    kwargs = dict(small_file_bytes=small_file_bytes, cluster_by=cluster_by,
+                  zorder_by=zorder_by)
     if if_needed:
         _echo(t.optimize_if_needed(max_dead_ratio=max_dead_ratio,
                                    **kwargs))
@@ -593,7 +591,7 @@ def table_optimize(path, min_dead_ratio, small_file_bytes, cluster_by,
 
 @table.command("clustering")
 @click.argument("path", type=click.Path(exists=True))
-@click.option("--columns", required=True,
+@click.option("--columns", required=True, callback=_comma_list,
               help="Comma-separated columns to audit")
 @click.option("--max-overlap", type=float, default=4.0, show_default=True,
               help="Mean files-overlapping-a-file past which a "
@@ -605,8 +603,7 @@ def table_clustering(path, columns, max_overlap):
     from .txlog import LogTable
 
     t = LogTable(_spark("table-clustering"), path)
-    _echo(t.clustering_health(
-        [c.strip() for c in columns.split(",")], max_overlap=max_overlap))
+    _echo(t.clustering_health(columns, max_overlap=max_overlap))
 
 
 @table.command("vacuum")
@@ -631,9 +628,9 @@ def table_vacuum(path, retain_last, remove_orphans, dry_run):
 @table.command("matview")
 @click.argument("source_path", type=click.Path(exists=True))
 @click.argument("view_path", type=click.Path())
-@click.option("--group-by", required=True,
+@click.option("--group-by", required=True, callback=_comma_list,
               help="Comma-separated group columns")
-@click.option("--sum", "sum_cols", default="",
+@click.option("--sum", "sum_cols", default="", callback=_comma_list,
               help="Comma-separated columns maintained as sum_<col> "
                    "(avg derived at read); count(*) is always kept")
 @click.option("--full", is_flag=True,
@@ -651,8 +648,7 @@ def table_matview(source_path, view_path, group_by, sum_cols, full):
     spark = _spark("table-matview")
     mv = IncrementalAggView(
         spark, LogTable(spark, source_path), view_path,
-        group_by=[c.strip() for c in group_by.split(",") if c.strip()],
-        sum_cols=[c.strip() for c in sum_cols.split(",") if c.strip()],
+        group_by=group_by, sum_cols=sum_cols,
     )
     _echo(mv.full_refresh() if full else mv.refresh())
 

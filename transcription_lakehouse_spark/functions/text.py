@@ -16,7 +16,6 @@ __all__ = [
     "normalize_text",
     "tokens",
     "token_count",
-    "char_count",
     "punct_ratio",
     "content_tokens",
     "STOPWORDS",
@@ -48,11 +47,6 @@ def tokens(col: Column | str) -> Column:
 
 def token_count(col: Column | str) -> Column:
     return F.size(tokens(col))
-
-
-def char_count(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.length(c)
 
 
 def punct_ratio(col: Column | str) -> Column:

@@ -67,8 +67,9 @@ def optimize_lake(
     their merge-on-read debt (per-file threshold = half the trigger,
     see ``LogTable.optimize_if_needed``). The batch counterpart of the
     CDC sink's ``optimize_every=`` schedule: run it after a pipeline
-    stage (``python -m ...pipeline maintain <lake>``) and nobody has to
-    remember per-table maintenance. Returns {artifact: report}.
+    stage (``python -m transcription_lakehouse_spark.cli maintain
+    --lakehouse-path <lake>``) and nobody has to remember per-table
+    maintenance. Returns {artifact: report}.
 
     Discovery walks the LOCAL directory tree for ``_txlog`` markers
     (artifacts nest, e.g. ``catalogs/episodes``); on an object store,

@@ -1,23 +1,16 @@
-"""End-to-end lakehouse pipeline + CLI.
+"""End-to-end lakehouse pipeline: one library function per lake command.
 
-Spark reshape of the reference's CLI surface
+Spark reshape of the reference's lake commands
 (`/root/reference/src/lakehouse/cli/`): ingest → materialize (spans, beats,
-sections, embeddings) → catalogs, with parquet tables under
-``<lake>/<artifact>/<version>/`` as the stage boundaries (SURVEY §3.2).
-
-Usage:
-    python -m transcription_lakehouse_spark.pipeline ingest <input_glob> <lake_dir>
-    python -m transcription_lakehouse_spark.pipeline materialize <lake_dir>
-    python -m transcription_lakehouse_spark.pipeline catalog <lake_dir>
-    python -m transcription_lakehouse_spark.pipeline validate <lake_dir>
-    python -m transcription_lakehouse_spark.pipeline quality <lake_dir>
-    python -m transcription_lakehouse_spark.pipeline snapshot <lake_dir> [version]
-    python -m transcription_lakehouse_spark.pipeline verify <snapshot_dir>
+sections, embeddings) → catalogs → validate → quality → snapshot, with
+parquet tables under ``<lake>/<artifact>/<version>/`` as the stage
+boundaries (SURVEY §3.2). The command line is `cli.py` (`lakehouse …`),
+whose lake commands call these functions.
 """
 
 from __future__ import annotations
 
-import sys
+from typing import TYPE_CHECKING
 
 import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
@@ -35,9 +28,11 @@ from .ingestion import artifact_exists
 from .ingestion import ingest as _ingest
 from .ingestion import read_versioned, write_counted, write_versioned
 from .schemas import BEAT_SCHEMA, SECTION_SCHEMA, SPAN_SCHEMA
-from .session import get_spark
 from .sources.transcripts import read_jsonl, with_default_episode_id
 from .speaker_roles import SpeakerRoleConfig, beat_speaker_metadata, enrich_spans
+
+if TYPE_CHECKING:
+    from .quality.assessor import Thresholds
 
 
 def ingest(
@@ -111,9 +106,18 @@ def catalog(
     }
 
 
-def quality(spark: SparkSession, lake_dir: str, version: str = "v1") -> dict:
+def quality(
+    spark: SparkSession,
+    lake_dir: str,
+    version: str = "v1",
+    thresholds: Thresholds | None = None,
+    report_dir: str | None = None,
+) -> dict:
     """Run the 7-category assessment over the materialized lake and render
-    the report tree (reference `lakehouse quality` command)."""
+    the report tree under ``report_dir`` (default
+    ``<lake>/quality_reports``; reference `lakehouse quality` command).
+    ``thresholds`` is an assessor ``Thresholds`` (default: its defaults);
+    the report records the ones applied."""
     from .quality.assessor import assess
     from .quality.reporter import write_report
 
@@ -127,8 +131,10 @@ def quality(spark: SparkSession, lake_dir: str, version: str = "v1") -> dict:
         if artifact_exists(lake_dir, "beats", version)
         else None
     )
-    a = assess(spans, episodes, beats=beats)
-    rep_dir = write_report(a, f"{lake_dir}/quality_reports", spans=spans)
+    a = assess(spans, episodes, beats=beats, thresholds=thresholds)
+    rep_dir = write_report(
+        a, report_dir or f"{lake_dir}/quality_reports", spans=spans
+    )
     return {
         "status": a.status,
         "n_violations": len(a.violations),
@@ -237,62 +243,3 @@ def snapshot(
         "verified": not problems,
         "problems": problems,
     }
-
-
-def main(argv: list[str]) -> int:
-    n_args = {
-        "ingest": 3,
-        "materialize": 2,
-        "catalog": 2,
-        "validate": 2,
-        "quality": 2,
-        "snapshot": 2,
-        "verify": 2,
-        "maintain": 2,
-    }
-    if not argv or argv[0] not in n_args or len(argv) < n_args[argv[0]]:
-        print(__doc__)
-        return 2
-    cmd = argv[0]
-    if cmd == "verify":  # pure filesystem check, no Spark needed
-        from .snapshot import verify_snapshot
-
-        problems = verify_snapshot(argv[1])
-        print({"snapshot": argv[1], "verified": not problems, "problems": problems})
-        return 0 if not problems else 1
-    spark = get_spark(app_name=f"lakehouse-{cmd}")
-    if cmd == "ingest":
-        # optional 4th arg: lake format (dirs | txlog)
-        print(ingest(spark, argv[1], argv[2],
-                     fmt=argv[3] if len(argv) > 3 else None))
-    elif cmd == "materialize":
-        print(materialize(spark, argv[1]))
-    elif cmd == "catalog":
-        print(catalog(spark, argv[1]))
-    elif cmd == "maintain":
-        # lake-wide auto-OPTIMIZE: optional 3rd arg = table-level
-        # dead-ratio trigger (default 0.2)
-        from .maintenance import optimize_lake
-
-        print(optimize_lake(
-            spark, argv[1],
-            max_dead_ratio=float(argv[2]) if len(argv) > 2 else 0.2,
-        ))
-    elif cmd == "validate":
-        out = validate(spark, argv[1])
-        print(out)
-        return 0 if out["ok"] else 1
-    elif cmd == "quality":
-        out = quality(spark, argv[1])
-        print(out)
-        # RED gates CI (reference exits non-zero on failed assessment)
-        return 1 if out["status"] == "RED" else 0
-    elif cmd == "snapshot":
-        out = snapshot(spark, argv[1], argv[2] if len(argv) > 2 else "v1.0.0")
-        print(out)
-        return 0 if out["verified"] else 1
-    return 0
-
-
-if __name__ == "__main__":
-    raise SystemExit(main(sys.argv[1:]))

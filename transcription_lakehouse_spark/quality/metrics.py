@@ -20,7 +20,6 @@ __all__ = [
     "length_compliance",
     "duration_histogram",
     "speaker_balance",
-    "series_balance",
     "text_metrics",
     "integrity_counts",
     "span_battery",
@@ -166,20 +165,6 @@ def speaker_balance(segments: DataFrame, top_n: int = 10) -> DataFrame:
     return ranked.withColumn(
         "pct_duration", F.round(F.col("total_duration") * 100.0 / total, 2)
     ).withColumn("in_top_n", F.col("rank") <= top_n)
-
-
-def series_balance(segments: DataFrame, episodes: DataFrame) -> DataFrame:
-    """A11/J3: per-series episode/segment counts + largest/smallest ratio."""
-    joined = segments.join(
-        F.broadcast(episodes.select("episode_id", "series")), "episode_id", "left"
-    )
-    per = joined.groupBy("series").agg(
-        F.countDistinct("episode_id").alias("n_episodes"),
-        F.count(F.lit(1)).alias("n_segments"),
-    )
-    mx = F.max("n_segments").over(Window.partitionBy())
-    mn = F.min("n_segments").over(Window.partitionBy())
-    return per.withColumn("imbalance_ratio", F.round(mx / mn, 4))
 
 
 # --- Category E: text quality (`quality/metrics/text_quality.py`) -----------

@@ -93,6 +93,41 @@ def _has_data_files(sess: SparkSession, path: str) -> bool:
     return False
 
 
+def _file_source(
+    spark: SparkSession, schema, input_dir: str, max_files: int = 16
+) -> DataFrame:
+    """Streaming JSON file source over ``input_dir``, at most ``max_files``
+    new files per micro-batch."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files)
+        .json(input_dir)
+    )
+
+
+def _start(raw: DataFrame, upsert, checkpoint_dir: str,
+           trigger_once: bool) -> StreamingQuery:
+    """Start ``raw`` with ``upsert`` as its ``foreachBatch`` sink; with
+    ``trigger_once`` the query drains the available input and stops."""
+    writer = (
+        raw.writeStream.foreachBatch(upsert)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if trigger_once:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _id_text_schema(id_col: str, text_col: str):
+    """(id, text) string schema of a text-artifact stream."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    return StructType([
+        StructField(id_col, StringType(), False),
+        StructField(text_col, StringType(), True),
+    ])
+
+
 def stream_ingest(
     spark: SparkSession,
     input_dir: str,
@@ -102,11 +137,7 @@ def stream_ingest(
 ) -> StreamingQuery:
     """File-source stream → validated/normalized utterances → idempotent
     parquet append under `<lake>/normalized/v1`."""
-    raw = (
-        spark.readStream.schema(RAW_UTTERANCE_SCHEMA)
-        .option("maxFilesPerTrigger", 16)
-        .json(input_dir)
-    )
+    raw = _file_source(spark, RAW_UTTERANCE_SCHEMA, input_dir)
     out_path = f"{lake_dir}/normalized/v1"
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
@@ -123,13 +154,7 @@ def stream_ingest(
             fresh = normalized
         fresh.write.mode("append").parquet(out_path)
 
-    writer = (
-        raw.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(raw, upsert, checkpoint_dir, trigger_once)
 
 
 def stream_ingest_txlog(
@@ -162,11 +187,7 @@ def stream_ingest_txlog(
     table periodically so the snapshot file list stays short."""
     from ..txlog import LogTable
 
-    raw = (
-        spark.readStream.schema(RAW_UTTERANCE_SCHEMA)
-        .option("maxFilesPerTrigger", 16)
-        .json(input_dir)
-    )
+    raw = _file_source(spark, RAW_UTTERANCE_SCHEMA, input_dir)
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
         valid, _ = split_valid(batch)
@@ -199,14 +220,7 @@ def stream_ingest_txlog(
                         len(_live_files(prefix)) > auto_compact_files:
                     t.compact(target_files=max(1, auto_compact_files // 4))
 
-    writer = (
-        raw.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
+    return _start(raw, upsert, checkpoint_dir, trigger_once)
 
 
 def stream_merge_txlog(
@@ -263,11 +277,7 @@ def stream_merge_txlog(
     from ..txlog import LogTable
 
     app = app_id or f"cdc:{table_path}"
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 16)
-        .json(input_dir)
-    )
+    raw = _file_source(spark, schema, input_dir)
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         if not batch.head(1):
@@ -292,13 +302,7 @@ def stream_merge_txlog(
                        cluster_by=cluster_by,
                        small_file_bytes=small_file_bytes)
 
-    writer = (
-        raw.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(raw, apply_batch, checkpoint_dir, trigger_once)
 
 
 def stream_index_update(
@@ -318,22 +322,10 @@ def stream_index_update(
     is a delta, not the corpus, and rebuilding from it would drop every
     previously indexed row — periodic full rebuilds are an offline
     `build_index` duty over the full store."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
     from ..embeddings import generate_embeddings
     from ..indexing import incremental_update
 
-    schema = StructType(
-        [
-            StructField(id_col, StringType(), False),
-            StructField(text_col, StringType(), True),
-        ]
-    )
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 16)
-        .json(input_dir)
-    )
+    raw = _file_source(spark, _id_text_schema(id_col, text_col), input_dir)
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
         if not batch.head(1):
@@ -346,13 +338,7 @@ def stream_index_update(
             rebuild_threshold=float("inf"),
         )
 
-    writer = (
-        raw.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(raw, upsert, checkpoint_dir, trigger_once)
 
 
 def stream_ivf_update(
@@ -382,22 +368,10 @@ def stream_ivf_update(
     twice. At 100 TB the schedule bounds retrain cost exactly like the
     CDC sink's ``optimize_every`` bounds DV debt: maintenance rides the
     stream instead of depending on anyone remembering an offline job."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
     from ..embeddings import generate_embeddings
     from ..indexing import ivf_incremental_update
 
-    schema = StructType(
-        [
-            StructField(id_col, StringType(), False),
-            StructField(text_col, StringType(), True),
-        ]
-    )
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 16)
-        .json(input_dir)
-    )
+    raw = _file_source(spark, _id_text_schema(id_col, text_col), input_dir)
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
         if not batch.head(1):
@@ -417,13 +391,7 @@ def stream_ivf_update(
             ),
         )
 
-    writer = (
-        raw.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(raw, upsert, checkpoint_dir, trigger_once)
 
 
 def stream_cluster_update(
@@ -459,8 +427,6 @@ def stream_cluster_update(
     bucket the bands store by `key` (sources/bucketed.py) on a real
     deployment so the probe prunes files instead of reading the full
     index each batch."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
     from ..operators.dedup import (
         jaccard_rescore,
         minhash_signature,
@@ -473,17 +439,7 @@ def stream_cluster_update(
     pairs_path = f"{cluster_path}/pairs"
     clusters_path = f"{cluster_path}/clusters"
 
-    schema = StructType(
-        [
-            StructField(id_col, StringType(), False),
-            StructField(text_col, StringType(), True),
-        ]
-    )
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 16)
-        .json(input_dir)
-    )
+    raw = _file_source(spark, _id_text_schema(id_col, text_col), input_dir)
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
         sess = batch.sparkSession
@@ -599,13 +555,7 @@ def stream_cluster_update(
         # the replay gate commits ONLY after all derived state is durable
         fresh.select(id_col, text_col).write.mode("append").parquet(corpus_path)
 
-    writer = (
-        raw.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(raw, upsert, checkpoint_dir, trigger_once)
 
 
 def _fs_of(sess: SparkSession, path: str):
@@ -614,23 +564,26 @@ def _fs_of(sess: SparkSession, path: str):
     return hpath.getFileSystem(sess._jsc.hadoopConfiguration()), hpath, jvm
 
 
-def _complete_versions(sess: SparkSession, root: str) -> list[tuple[int, str]]:
-    """``v=K`` child dirs of ``root`` that finished their job commit
-    (``_SUCCESS`` marker present), newest first."""
+def _complete_dirs(
+    sess: SparkSession, root: str, prefix: str
+) -> list[tuple[int, str]]:
+    """``<prefix>K`` child dirs of ``root`` (``v=K`` versions, ``epoch=E``
+    epochs) that finished their job commit (``_SUCCESS`` marker present),
+    newest first."""
     fs, hroot, jvm = _fs_of(sess, root)
     if not fs.exists(hroot):
         return []
     out = []
     for st in fs.listStatus(hroot):
         name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith("v=")):
+        if not (st.isDirectory() and name.startswith(prefix)):
             continue
         try:
-            v = int(name[2:])
+            k = int(name[len(prefix):])
         except ValueError:
             continue
         if fs.exists(jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")):
-            out.append((v, str(st.getPath())))
+            out.append((k, str(st.getPath())))
     out.sort(reverse=True)
     return out
 
@@ -640,7 +593,7 @@ def read_versioned_state(sess: SparkSession, root: str) -> DataFrame | None:
     (``root/v=K`` dirs written by `stream_hll_update` /
     `stream_cluster_update`), or None when no complete version exists
     yet."""
-    versions = _complete_versions(sess, root)
+    versions = _complete_dirs(sess, root, "v=")
     return sess.read.parquet(versions[0][1]) if versions else None
 
 
@@ -656,13 +609,13 @@ def _write_versioned(df: DataFrame, root: str, sess: SparkSession) -> None:
     the previous version authoritative; a crash before the prune leaves
     two complete versions that converge on replay (the caller's merge
     must be idempotent, which max-merge and full-recompute both are)."""
-    versions = _complete_versions(sess, root)
+    versions = _complete_dirs(sess, root, "v=")
     v = (versions[0][0] if versions else -1) + 1
     # overwrite only ever clears an INCOMPLETE leftover of this same
     # number (crash before _SUCCESS) — never a complete version
     df.write.mode("overwrite").parquet(f"{root}/v={v}")
     fs, _, jvm = _fs_of(sess, root)
-    for k, old in _complete_versions(sess, root):
+    for k, old in _complete_dirs(sess, root, "v="):
         if k != v:
             fs.delete(jvm.org.apache.hadoop.fs.Path(old), True)
 
@@ -686,8 +639,9 @@ def stream_hll_update(
     state. Read it back with :func:`read_versioned_state`.
 
     Crash contract: state versions are WRITE-NEW-THEN-PRUNE — each batch
-    writes ``{state}/v=<batch_id>`` and only then deletes older complete
-    versions. A crash mid-write leaves the previous complete version as
+    writes ``{state}/v=<newest complete version + 1>`` (numbered from the
+    store, not the batch id; see ``_write_versioned``) and only then
+    deletes older complete versions. A crash mid-write leaves the previous complete version as
     the newest ``_SUCCESS``-marked dir, so the replay merges against it;
     a crash after the write but before the prune (or before the stream
     checkpoint commits) leaves two complete versions whose contents
@@ -702,11 +656,7 @@ def stream_hll_update(
         [StructField(c, StringType(), True) for c in group_cols]
         + [StructField(key_col, LongType(), True)]
     )
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 16)
-        .json(input_dir)
-    )
+    raw = _file_source(spark, schema, input_dir)
     gcols = list(group_cols)
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
@@ -726,38 +676,11 @@ def stream_hll_update(
         merged = cut_lineage(merged)  # sever lineage from the old version
         _write_versioned(merged, state_path, sess)
 
-    writer = (
-        raw.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(raw, upsert, checkpoint_dir, trigger_once)
 
 
 _EDGE_DDL = "src bigint, dst bigint, sim double"
 _EDGE_DDL_PART = _EDGE_DDL + ", bucket int, epoch int"
-
-
-def _complete_epochs(sess: SparkSession, edges_root: str) -> list[tuple[int, str]]:
-    """``epoch=E`` child dirs whose job commit finished (``_SUCCESS``
-    present), newest first."""
-    fs, hroot, jvm = _fs_of(sess, edges_root)
-    if not fs.exists(hroot):
-        return []
-    out = []
-    for st in fs.listStatus(hroot):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith("epoch=")):
-            continue
-        try:
-            e = int(name[6:])
-        except ValueError:
-            continue
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")):
-            out.append((e, str(st.getPath())))
-    out.sort(reverse=True)
-    return out
 
 
 def _current_bucket_dirs(
@@ -768,7 +691,7 @@ def _current_bucket_dirs(
     dirs per epoch; epochs stay few because the writer prunes superseded
     bucket dirs after every commit). Returns ``(dirs, store_exists)``;
     ``buckets`` narrows the resolution (the writer's partition pruning)."""
-    epochs = _complete_epochs(sess, edges_root)
+    epochs = _complete_dirs(sess, edges_root, "epoch=")
     if not epochs:
         return [], False
     fs, _, _ = _fs_of(sess, edges_root)
@@ -813,7 +736,7 @@ def _prune_superseded_buckets(sess: SparkSession, edges_root: str) -> None:
     without bucket dirs. Failure or a crash here is harmless — readers
     always resolve per-bucket newest-epoch content; the next batch's
     prune sweeps leftovers."""
-    epochs = _complete_epochs(sess, edges_root)
+    epochs = _complete_dirs(sess, edges_root, "epoch=")
     if len(epochs) < 1:
         return
     fs, _, _ = _fs_of(sess, edges_root)
@@ -928,17 +851,13 @@ def stream_graph_update(
         StructField(id_col, LongType(), False),
         StructField(vec_col, ArrayType(DoubleType()), True),
     ])
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(input_dir)
-    )
+    raw = _file_source(spark, schema, input_dir, max_files=1)
     nodes_path = state_path + "/nodes"
     edges_path = state_path + "/edges"
     bucket_of = lambda c: F.pmod(F.hash(c), F.lit(n_state_buckets))  # noqa: E731
 
     def _write_epoch(sess: SparkSession, edges: DataFrame) -> None:
-        epochs = _complete_epochs(sess, edges_path)
+        epochs = _complete_dirs(sess, edges_path, "epoch=")
         e = (epochs[0][0] if epochs else -1) + 1
         # overwrite only ever clears an INCOMPLETE leftover of this same
         # epoch number (crash before _SUCCESS) — never committed content
@@ -1020,13 +939,8 @@ def stream_graph_update(
         new.write.mode("append").parquet(nodes_path)
         _prune_superseded_buckets(sess, edges_path)
 
-    writer = (
-        raw.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(raw, upsert, checkpoint_dir, trigger_once)
+
 
 def streaming_quality_stats(
     spark: SparkSession,
@@ -1151,11 +1065,7 @@ def stream_aggregate_txlog(
     from ..matview import IncrementalAggView
     from ..txlog import LogTable
 
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 16)
-        .json(input_dir)
-    )
+    raw = _file_source(spark, schema, input_dir)
     app = f"stream-agg:{table_path}"
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
@@ -1167,10 +1077,4 @@ def stream_aggregate_txlog(
             sess, t, view_path, group_by=group_by, sum_cols=sum_cols
         ).refresh()
 
-    writer = (
-        raw.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(raw, upsert, checkpoint_dir, trigger_once)

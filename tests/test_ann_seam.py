@@ -85,3 +85,21 @@ def test_exact_degenerate_paths_share_ranks_sims_and_types(spark, tied):
     for name, got in paths.items():
         assert got.dtypes == exact.dtypes, name
         assert _rows(got) == want, name
+
+
+def test_banded_buckets_only_in_similarity():
+    """Every banded-LSH bucket row in the package is built inside
+    `operators/similarity.py` (`_banded_buckets`, `_collision_scores`), so
+    the hash family, its margin guard and the collision join live once."""
+    import pathlib
+
+    import transcription_lakehouse_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    callers = sorted(
+        str(f.relative_to(root))
+        for f in root.rglob("*.py")
+        if "_banded_buckets(" in (t := f.read_text())
+        or "_band_buckets_udf(" in t
+    )
+    assert callers == ["operators/similarity.py"]

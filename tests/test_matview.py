@@ -503,7 +503,7 @@ def test_refresh_over_deletion_vector_source(spark, tmp_path):
     src.append(_mk(spark, [(9, "a")]))
     mv.refresh()                        # folds both commits at once
     assert _materialized(mv) == _recompute(src)
-    src.purge_dvs(min_dead_ratio=0.0)   # content-neutral materialization
+    src.optimize(min_dead_ratio=0.0)   # content-neutral materialization
     mv.refresh()
     assert _materialized(mv) == _recompute(src)
 

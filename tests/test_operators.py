@@ -1574,6 +1574,18 @@ def test_semantic_decontam_hit_count_multiple_evals(spark):
     assert r["matched_eval_id"] == 10  # tie -> min eval id
     assert r["n_eval_hits"] == 2
 
+    # an eval row may share its id AND vector with a corpus row: that
+    # collision is the leak itself, so it is never dropped as a self-pair
+    leak = spark.createDataFrame(
+        [(2, [0.5, -1.0] * (dim // 2))], "vec_id long, embedding array<float>"
+    )
+    rows = semantic_decontam(
+        co.unionByName(leak), leak, "vec_id", "embedding", threshold=0.5,
+        n_bands=8, planes_per_band=2,
+    ).collect()
+    assert [(r["corpus_id"], r["matched_eval_id"], r["max_sim"])
+            for r in rows] == [(2, 2, 1.0)]
+
 
 def test_training_order_deterministic_and_seed_reshuffles(spark):
     from transcription_lakehouse_spark.operators.ordering import (

@@ -418,6 +418,10 @@ JOB_BUDGET = {
     "quality": 9,
     "snapshot": 0,
 }
+# `lakehouse catalog --save-catalog --statistics` (both catalogs) on the
+# CLI fixture when each save was followed by its own count() pass; taking
+# the counts on the saves runs 13
+CATALOG_SAVE_STATS_JOBS_BEFORE = 19
 
 
 def _write_dirty_jsonl(dir_path, name, episode):
@@ -1797,6 +1801,31 @@ def test_click_cli_flag_surface(spark, tmp_path):
         "--output-format", "json", "--detailed", "--limit", "1", "--all",
     )
     assert len(json.loads(r.output)["episodes"]) == 2  # --all lifts the cap
+
+    # --save-catalog --statistics: the stats are the row counts observed on
+    # the saves, so neither catalog pays a second count() pass over the
+    # utterances (the job count drops below the save-then-count shape's)
+    sc = spark.sparkContext
+    group = f"catalog-save-{tmp_path.name}"
+    sc.setJobGroup(group, "catalog --save-catalog --statistics")
+    try:
+        r = run(
+            "catalog", "--lakehouse-path", lake, "--output-format", "json",
+            "--save-catalog", "--statistics",
+        )
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert r.exit_code == 0, r.output
+    out = json.loads(r.output)
+    assert out["episode_stats"]["n_episodes"] == _rv(
+        spark, lake, "catalogs/episodes"
+    ).count() == 2
+    assert out["speaker_stats"]["n_speakers"] == _rv(
+        spark, lake, "catalogs/speakers"
+    ).count() == 2
+    assert n_jobs < CATALOG_SAVE_STATS_JOBS_BEFORE, n_jobs
 
     r = run("validate", "--lakehouse-path", lake, "--output-format", "json")
     assert r.exit_code == 0, r.output

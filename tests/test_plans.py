@@ -550,11 +550,12 @@ def test_graph_walk_plan_size_bounded_and_deep_walk_checkpoints(spark):
     # value parity: checkpointing only materializes, never changes, the
     # beam — force it on at hops=2 and compare against the default
     from transcription_lakehouse_spark.operators import graph_ann as ga
+    from transcription_lakehouse_spark.operators import similarity as sim
 
     q = ga._vec_side(queries, "vec_id", "embedding", "query_id", "qv", "qn")
     c = ga._vec_side(emb, "vec_id", "embedding", "node_id", "cv", "cn")
-    qb = ga._banded_buckets(q.select("query_id", "qv"), "qv", 2, 4)
-    cb = ga._banded_buckets(c.select("node_id", "cv"), "cv", 2, 4)
+    qb = sim._banded_buckets(q.select("query_id", "qv"), "qv", 2, 4)
+    cb = sim._banded_buckets(c.select("node_id", "cv"), "cv", 2, 4)
     seeds = (
         qb.join(cb, ["band", "bucket"])
         .filter(F.col("query_id") != F.col("node_id"))

@@ -1785,8 +1785,8 @@ def test_seen_episode_ids_bloom_pruned_probe(spark, tmp_path):
 
 
 def test_purge_dvs_rewrites_only_heavy_files(spark, tmp_path):
-    """purge_dvs materializes DVs away ONLY where the dead-row fraction
-    reaches the threshold — the read-amplification bound that doesn't
+    """optimize(min_dead_ratio=) materializes DVs away ONLY where the
+    dead-row fraction reaches the threshold — the read-amplification bound that doesn't
     pay a full compact: the lightly-deleted file keeps its DV and its
     path; rows and time travel are unchanged."""
     from transcription_lakehouse_spark.txlog import _live_adds
@@ -1799,7 +1799,7 @@ def test_purge_dvs_rewrites_only_heavy_files(spark, tmp_path):
     adds = {a["path"]: a for a in _live_adds(t._load_for_read(None))}
     assert sum(1 for a in adds.values() if a.get("dv")) == 2
     before = sorted(r["id"] for r in t.read().collect())
-    out = t.purge_dvs(min_dead_ratio=0.5)
+    out = t.optimize(min_dead_ratio=0.5)
     assert out["purged_files"] == 1
     adds2 = {a["path"]: a for a in _live_adds(t._load_for_read(None))}
     dv_left = [a for a in adds2.values() if a.get("dv")]
@@ -1809,9 +1809,9 @@ def test_purge_dvs_rewrites_only_heavy_files(spark, tmp_path):
     assert light in adds2
     assert sorted(r["id"] for r in t.read().collect()) == before
     # below-threshold second purge is a clean no-op
-    assert t.purge_dvs(min_dead_ratio=0.5)["purged_files"] == 0
+    assert t.optimize(min_dead_ratio=0.5)["purged_files"] == 0
     # and a ratio-0 purge sweeps the remaining DV
-    assert t.purge_dvs(min_dead_ratio=0.0)["purged_files"] == 1
+    assert t.optimize(min_dead_ratio=0.0)["purged_files"] == 1
     assert not any(
         a.get("dv") for a in _live_adds(t._load_for_read(None))
     )
@@ -2719,7 +2719,7 @@ def test_cli_table_detail_and_constraint(spark, tmp_path, monkeypatch):
 
 
 def test_timestamp_as_of_and_vacuum_dry_run(spark, tmp_path):
-    """TIMESTAMP AS OF time travel (version_at + read(timestamp=...))
+    """TIMESTAMP AS OF time travel (version_as_of + read(timestamp=...))
     resolves to the newest commit at-or-before the instant, refuses
     pre-history instants, and refuses version+timestamp together;
     vacuum(dry_run=True) reports exactly the files a real run then
@@ -2738,15 +2738,15 @@ def test_timestamp_as_of_and_vacuum_dry_run(spark, tmp_path):
     _time.sleep(1.1)
     t.overwrite(spark.range(100, 105).coalesce(1))
 
-    assert t.version_at(ts_v0) == 0
+    assert t.version_as_of(ts_v0) == 0
     assert t.read(timestamp=ts_v0).count() == 10
     # ISO string + naive (taken as UTC) both resolve
-    assert t.version_at(ts_v0.isoformat()) == 0
-    assert t.version_at(ts_v0.replace(tzinfo=None)) == 0
+    assert t.version_as_of(ts_v0.isoformat()) == 0
+    assert t.version_as_of(ts_v0.replace(tzinfo=None)) == 0
     # "now" resolves to the tip; prehistory refuses
-    assert t.version_at(_dt.datetime.now(_dt.timezone.utc)) == t.version()
+    assert t.version_as_of(_dt.datetime.now(_dt.timezone.utc)) == t.version()
     with _pytest.raises(ValueError, match="predates"):
-        t.version_at(ts_v0 - _dt.timedelta(days=1))
+        t.version_as_of(ts_v0 - _dt.timedelta(days=1))
     with _pytest.raises(ValueError, match="mutually exclusive"):
         t.read(version=0, timestamp=ts_v0)
 

@@ -29,16 +29,10 @@ N_CELLS = 16
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    from pyspark.sql import SparkSession
-
     from transcription_lakehouse_spark.operators.similarity import train_centroids
+    from transcription_lakehouse_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .appName("train-ivf")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="train-ivf")
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     cents = train_centroids(emb, "vec_id", "embedding", n_cells=N_CELLS)
     out = os.path.join(

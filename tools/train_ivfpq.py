@@ -23,17 +23,11 @@ K_CODES = 16
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    from pyspark.sql import SparkSession
-
     from transcription_lakehouse_spark.operators.pq import train_ivfpq_codebooks
+    from transcription_lakehouse_spark.session import get_spark
     from transcription_lakehouse_spark.workload._ivf_quantizer import CENTROIDS
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .appName("train-ivfpq")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="train-ivfpq")
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     books = train_ivfpq_codebooks(
         emb, "vec_id", "embedding", CENTROIDS, m=M_SUBVECTORS, k=K_CODES

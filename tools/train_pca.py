@@ -23,16 +23,10 @@ N_COMPONENTS = 8
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    from pyspark.sql import SparkSession
-
     from transcription_lakehouse_spark.operators.pca import train_pca
+    from transcription_lakehouse_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .appName("train-pca")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="train-pca")
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     mean, comps, eigs = train_pca(
         emb, "vec_id", "embedding", n_components=N_COMPONENTS

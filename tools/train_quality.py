@@ -145,19 +145,13 @@ def accuracy(w, b, x, y) -> float:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    from pyspark.sql import SparkSession
-
     from transcription_lakehouse_spark.operators.quality_model import (
         FEATURE_ORDER,
         train_logreg,
     )
+    from transcription_lakehouse_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .appName("train-quality")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="train-quality")
     keys, x, y = build_slice(spark, sf_dir)
     tr_x, tr_y, ho_x, ho_y = split_slice(keys, x, y)
     # 1500 full-batch steps: 500 leaves this slice under-converged

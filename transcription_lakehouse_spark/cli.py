@@ -213,31 +213,37 @@ def catalog(lakehouse_path, version, catalog_type, output_format,
 
     from .catalogs.episodes import episode_catalog
     from .catalogs.speakers import speaker_catalog
-    from .ingestion import read_versioned, write_versioned
+    from .ingestion import read_versioned, write_counted
 
     spark = _spark("catalog")
     utterances = read_versioned(spark, lakehouse_path, "normalized", version)
     out: dict = {}
     limit = None if all_rows else (row_limit if detailed else 20)
 
+    def persist(df, artifact: str) -> int | None:
+        """Save the FULL catalog (filters shape display only) and return
+        its row count: observed on the write when it is saved, a count()
+        only for --statistics without --save-catalog. Overall statistics
+        come from the UNFILTERED catalog — an --episode-id display filter
+        must not shrink n_episodes to 1."""
+        if save_catalog:
+            return write_counted(df, lakehouse_path, artifact, version)
+        return df.count() if statistics else None
+
     if catalog_type in ("episodes", "all"):
         eps = episode_catalog(utterances)
-        if save_catalog:  # persist the FULL catalog; filters shape display only
-            write_versioned(eps, lakehouse_path, "catalogs/episodes", version)
+        n = persist(eps, "catalogs/episodes")
         if statistics:
-            # overall statistics come from the UNFILTERED catalog — an
-            # --episode-id display filter must not shrink n_episodes to 1
-            out["episode_stats"] = {"n_episodes": eps.count()}
+            out["episode_stats"] = {"n_episodes": n}
         if episode_id:
             eps = eps.filter(F.col("episode_id") == episode_id)
         rows = (eps.limit(limit) if limit else eps).collect()
         out["episodes"] = [r.asDict() for r in rows]
     if catalog_type in ("speakers", "all"):
         spk = speaker_catalog(utterances)
-        if save_catalog:  # persist the FULL catalog; filters shape display only
-            write_versioned(spk, lakehouse_path, "catalogs/speakers", version)
+        n = persist(spk, "catalogs/speakers")
         if statistics:
-            out["speaker_stats"] = {"n_speakers": spk.count()}
+            out["speaker_stats"] = {"n_speakers": n}
         if speaker_name:
             spk = spk.filter(F.col("speaker") == speaker_name)
         if rankings:
@@ -508,7 +514,7 @@ def table_restore(path, version_, timestamp):
         raise click.UsageError("pass exactly one of --version/--timestamp")
     t = LogTable(_spark("table-restore"), path)
     if timestamp is not None:
-        version_ = t.version_at(timestamp)
+        version_ = t.version_as_of(timestamp)
     _echo(t.restore(version_))
 
 

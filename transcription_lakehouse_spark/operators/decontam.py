@@ -19,7 +19,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from ..functions.text import tokens
-from ..functions.vector import guarded_cosine
 from .dedup import shingles_from_tokens
 
 __all__ = [
@@ -122,43 +121,30 @@ def semantic_decontam(
     buckets broadcast — note the broadcast relation is |eval| × n_bands
     rows CARRYING full vectors (~600 B/row at 64-dim float64), so even a
     100 k-row eval suite at 8 bands stays well under Spark's 8 GiB
-    broadcast cap; suites past ~2 M rows must drop the hint (see
-    `lsh_topk(broadcast_queries=False)` for the gated pattern); the corpus streams through one banded-LSH bucket
-    equi-join (candidates only within shared buckets — never all-pairs),
-    one exact rescore of candidates, and one map-side-combinable
+    broadcast cap; suites past ~2 M rows must drop the hint (the
+    ``broadcast`` flag of `similarity._collision_scores`, which
+    `append_knn_graph` gates on a batch count); the corpus streams through
+    one banded-LSH bucket equi-join (candidates only within shared buckets
+    — never all-pairs), one exact rescore of candidates, and one map-side-combinable
     groupBy(corpus_id). Corpus recall follows the OR-of-bands curve
     `lsh_topk` documents; banding + rounded-6 cosine are md5-deterministic,
     so the whole screen value-hash-gates against a DuckDB twin
     (`workload/vectors.py:VEC_SEMANTIC_DECONTAM_SQL`).
     """
-    from .similarity import _banded_buckets, _dedupe_by, _rank_topk, _vec_side
+    from .similarity import _collision_scores, _dedupe_by, _rank_topk, _vec_side
 
     c = _vec_side(corpus, id_col, vec_col, "corpus_id", "cv", "cn")
     e = _vec_side(evalset, id_col, vec_col, "eval_id", "ev", "en")
-    # Score AT the collision row (r11, guide §2.3/§2.4): bucket rows carry
-    # their vectors, the eval side broadcasts WITH vectors, and the rounded
-    # cosine + threshold filter run in the same stage as the bucket join —
-    # the corpus never shuffles and the distinct dedupes only the few
-    # surviving hits. The previous shape deduped the FULL candidate pair
-    # relation first (measured sf0.1×20: 2.04 M collisions → 1.6 M distinct
-    # pairs → 7,980 hits — a 1.6 M-row distinct exchange plus a corpus-wide
-    # vector re-fetch SortMergeJoin, all to feed a 0.5 %-selective filter).
-    # A multi-band collision recomputes the SAME deterministic expression on
-    # the same operands, so duplicates are bit-identical and
-    # distinct-after-filter equals the old score-once-per-distinct-pair
-    # rows exactly.
-    cb = _banded_buckets(c, "cv", n_bands, planes_per_band, keep_vec=True)
-    eb = _banded_buckets(e, "ev", n_bands, planes_per_band, keep_vec=True)
-    scored = (
-        cb.join(F.broadcast(eb), ["band", "bucket"])
-        .select(
-            "corpus_id",
-            "eval_id",
-            guarded_cosine(
-                F.col("cv"), F.col("ev"), F.col("cn"), F.col("en")
-            ).alias("sim"),
-        )
-        .filter(F.col("sim") >= F.lit(threshold))
+    # Score AT the collision row (`_collision_scores`, r11): the eval side
+    # broadcasts WITH vectors and the threshold filter runs in the bucket
+    # join's stage, so the corpus never shuffles and the dedupe sees only
+    # the few surviving hits (measured sf0.1×20: 2.04 M collisions → 7,980
+    # hits, where deduping pairs first cost a 1.6 M-row distinct exchange
+    # plus a corpus-wide vector re-fetch SortMergeJoin). Self-pairs stay:
+    # an eval row may share its id (and its vector) with a corpus row, and
+    # that row is exactly the leak to flag.
+    scored = _collision_scores(e, c, n_bands, planes_per_band).filter(
+        F.col("sim") >= F.lit(threshold)
     )
     # the few surviving hits dedupe over the corpus_id exchange, which the
     # hit-count window and the argmax rank share

@@ -44,11 +44,11 @@ from pyspark.sql import DataFrame
 from ..ckpt import cut_lineage
 from ..functions.vector import guarded_cosine
 from .similarity import (
-    _banded_buckets,
-    _nearest_cells_udf,
+    _collision_scores,
+    _dedupe_by,
     _rank_topk,
-    _topk_score_kernel,
     _vec_side,
+    ivf_topk,
     lsh_topk,
 )
 
@@ -186,30 +186,15 @@ def _batch_candidate_scores(
     """Exact cosines for every (existing src, batch dst) banded-bucket
     collision — the only existing-src edges an append can change. Srcs
     absent from this relation are untouched by construction (bucket
-    membership is corpus-independent)."""
-    # Score AT the bucket-collision row (r11, the asymmetric `lsh_topk`
-    # shape): the small BATCH side broadcasts its bucket rows with vectors,
-    # the old corpus streams its own straight from the scan — no candidate
-    # distinct before scoring and no corpus-vector re-fetch join. Duplicate
-    # multi-band collisions recompute the same deterministic expression and
-    # collapse in the distinct over the thin scored rows.
+    membership is corpus-independent). The small BATCH side broadcasts
+    (`_collision_scores`); multi-band duplicates collapse over the ``src``
+    exchange the fold's touched-src distinct and re-rank share."""
     o = _vec_side(old_corpus, id_col, vec_col, "src", "qv", "qn")
     b = _vec_side(batch, id_col, vec_col, "dst", "cv", "cn")
-    ob = _banded_buckets(o, "qv", n_bands, planes_per_band, keep_vec=True)
-    nb = _banded_buckets(b, "cv", n_bands, planes_per_band, keep_vec=True)
-    if broadcast_batch:
-        nb = F.broadcast(nb)
-    return (
-        ob.join(nb, ["band", "bucket"])
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            "src", "dst",
-            guarded_cosine(
-                F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")
-            ).alias("sim"),
-        )
-        .distinct()
-    )
+    scored = _collision_scores(
+        b, o, n_bands, planes_per_band, broadcast=broadcast_batch
+    ).filter(F.col("src") != F.col("dst"))
+    return _dedupe_by(scored.select("src", "dst", "sim"), "src")
 
 
 def _fold_edges(
@@ -302,47 +287,29 @@ def graph_topk(
     q = _vec_side(queries, id_col, vec_col, "query_id", "qv", "qn")
     c = _vec_side(corpus, id_col, vec_col, "node_id", "cv", "cn")
 
-    # Seed scoring: JVM HOF cosine AT the bucket-collision row (r11, the
-    # asymmetric `lsh_topk` shape) — the search-side query set is sparse
-    # (≪ bucket space), so its bucket rows broadcast WITH their vectors
-    # and the corpus bucket rows stream from the scan into the join +
-    # rounded cosine + thin projection; multi-band collision duplicates
-    # recompute the same deterministic expression and collapse in the
-    # distinct over the thin scored rows (equal to the old
-    # distinct-pairs-then-rescore by construction). A cogrouped GEMM
-    # would ship seed_bands copies of every corpus vector through the
-    # exchange + Arrow boundary regardless of |Q| — measured 4.7 s (pair
-    # shape) vs 5.4-6.0 s (three GEMM variants) on graph_search_20x; the
-    # GEMM wins only for corpus-scale pair relations (the graph BUILD's
-    # lsh_topk self-join).
-    qb = _banded_buckets(
-        q.select("query_id", "qv", "qn"), "qv", seed_bands, planes_per_band,
-        keep_vec=True,
+    # Seed scoring AT the bucket-collision row (`_collision_scores`): the
+    # search-side query set is sparse (≪ bucket space), so its bucket rows
+    # broadcast WITH their vectors and the corpus streams from the scan;
+    # multi-band duplicates collapse in the beam rank's one exchange. A
+    # cogrouped GEMM would ship seed_bands copies of every corpus vector
+    # through the exchange + Arrow boundary regardless of |Q| — measured
+    # 4.7 s (pair shape) vs 5.4-6.0 s (three GEMM variants) on
+    # graph_search_20x; the GEMM wins only for corpus-scale pair relations
+    # (the graph BUILD's lsh_topk self-join).
+    seed_scored = _collision_scores(
+        q, c, seed_bands, planes_per_band
+    ).filter(F.col("query_id") != F.col("node_id"))
+    beam_df = _rank_topk(
+        seed_scored, beam, dedupe=True, tie="node_id",
+        cols=["query_id", "node_id", "sim"],
     )
-    cb = _banded_buckets(
-        c.select("node_id", "cv", "cn"), "cv", seed_bands, planes_per_band,
-        keep_vec=True,
-    )
-    seed_scored = (
-        cb.join(F.broadcast(qb), ["band", "bucket"])
-        .filter(F.col("query_id") != F.col("node_id"))
-        .select(
-            "query_id",
-            "node_id",
-            guarded_cosine(
-                F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")
-            ).alias("sim"),
-        )
-        .distinct()
-    )
-    beam_df = _top_beam(seed_scored, beam)
     return _walk_and_rank(beam_df, graph, q, c, hops, beam, k)
 
 
 def _walk_and_rank(
     beam_df: DataFrame, graph: DataFrame, q: DataFrame, c: DataFrame,
     hops: int, beam: int, k: int,
-    checkpoint_hops: bool | None = None,
+    checkpoint_hops: bool = True,
 ) -> DataFrame:
     """Shared beam-walk + final ranking for both seed strategies.
 
@@ -358,8 +325,6 @@ def _walk_and_rank(
     materializes, never recomputes, the beam — parity pinned at hops=2
     by tests/test_plans.py). ``checkpoint_hops=False`` keeps the fully
     unrolled declarative lineage for plan inspection."""
-    if checkpoint_hops is None:
-        checkpoint_hops = True
     for _ in range(hops):
         # rescore only the NEW frontier — the beam's sims are already exact
         # (pure functions of the pair), so re-fetching those vectors every
@@ -413,8 +378,8 @@ def graph_topk_coarse(
 
     - **layer 0 (coarse)**: each query probes its ``nprobe`` nearest
       committed centroids; the seed beam is the top-``beam`` exact-cosine
-      members of those cells (exactly IVF's candidate slice, reusing the
-      already-trained, already-hash-gated quantizer — no new artifact).
+      members of those cells — literally ``ivf_topk(k=beam)``, reusing the
+      already-trained, already-hash-gated quantizer (no new artifact).
     - **layer 1 (fine)**: the k-NN-graph beam walk (`_walk_and_rank`)
       refines from those seeds, recovering cross-cell neighbors the
       coarse layer prunes away.
@@ -423,8 +388,7 @@ def graph_topk_coarse(
     the centroid seed starts at IVF-level recall and the walk climbs from
     there — measured 0.92 at nprobe=1/2 hops on sf0.01 (frontier table in
     SCALING.md). Cost: the seed rescore touches ~nprobe/n_cells of the
-    corpus per query (one cell equi-join, queries broadcast, corpus never
-    shuffles); each hop is the same O(|Q|·beam·k_graph) frontier join as
+    corpus per query (IVF's per-cell cogrouped GEMM); each hop is the same O(|Q|·beam·k_graph) frontier join as
     graph_topk. Deterministic end-to-end (committed centroid literals,
     stable argsort with index tiebreak, rounded cosines, id tiebreaks), so
     the DuckDB twin (`VEC_KNN_GRAPH_COARSE_SQL`) replays assignment, seed
@@ -433,35 +397,8 @@ def graph_topk_coarse(
         raise ValueError(f"graph_topk_coarse: beam={beam} must be >= k={k}")
     q = _vec_side(queries, id_col, vec_col, "query_id", "qv", "qn")
     c = _vec_side(corpus, id_col, vec_col, "node_id", "cv", "cn")
-
-    # Seed scoring = IVF's cogrouped-GEMM shape (r11, guide §2.3/§4.2):
-    # probed (query, cell) rows cogroup with cell members, one matmul per
-    # cell, only the per-(query, cell) top-``beam`` leaves Python. Cells
-    # are disjoint so the union across a query's nprobe cells has no
-    # duplicates; `_top_beam` over it equals the old distinct-pair +
-    # HOF-rescore beam exactly.
-    assign1 = _nearest_cells_udf(centroids, 1)
-    cc = c.select(
-        F.col("node_id").alias("neighbor_id"),
-        F.col("cv"),
-        F.element_at(assign1(F.col("cv")), 1).alias("cell"),
-    )
-    probe = _nearest_cells_udf(centroids, nprobe)
-    qc = q.select(
-        "query_id", "qv", F.explode(probe(F.col("qv"))).alias("cell")
-    )
-    qid_t = dict(queries.dtypes)[id_col]
-    nid_t = dict(corpus.dtypes)[id_col]
-    local = (
-        qc.groupBy("cell")
-        .cogroup(cc.groupBy("cell"))
-        .applyInPandas(
-            _topk_score_kernel(beam),
-            f"query_id {qid_t}, neighbor_id {nid_t}, sim double",
-        )
-    )
-    seed_scores = local.select(
-        "query_id", F.col("neighbor_id").alias("node_id"), "sim"
-    )
-    beam_df = _top_beam(seed_scores, beam)
+    beam_df = ivf_topk(
+        queries, corpus, id_col, vec_col,
+        k=beam, centroids=centroids, nprobe=nprobe,
+    ).select("query_id", F.col("neighbor_id").alias("node_id"), "sim")
     return _walk_and_rank(beam_df, graph, q, c, hops, beam, k)

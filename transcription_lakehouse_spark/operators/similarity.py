@@ -676,15 +676,8 @@ def lsh_near_dup_pairs(
     v = _vec_side(df, id_col, vec_col, "vid", "v", "nrm")
     if n_bands * planes_per_band > 32:
         # wide banding: literal-array codegen would dominate (see
-        # _band_buckets_udf); one GEMM, posexplode the per-band buckets
-        ids = v.select(
-            "vid",
-            "v",
-            "nrm",
-            F.posexplode(
-                _band_buckets_udf(n_bands, planes_per_band)(F.col("v"))
-            ).alias("band", "bucket"),
-        )
+        # _band_buckets_udf); one GEMM per batch hashes every band
+        ids = _banded_buckets(v, "v", n_bands, planes_per_band)
     else:
         ids = v.select(
             "vid",
@@ -749,10 +742,11 @@ def _band_buckets_udf(n_bands: int, planes_per_band: int, max_dims: int = 256):
     (same `_plane_signs`), but 10-100× faster for multi-band hashing — the
     per-plane HOF expression tree is interpreted per element, and banding
     multiplies that cost by bands×planes (measured 98 s vs ~8 s on the 20×
-    bench). Used by the top-k path (now oracle-gated) and by
-    `lsh_near_dup_pairs` when bands×planes > 32; the narrow near-dup
-    configs keep the HOF form its DuckDB twin mirrors expression-for-
-    expression.
+    bench). Its one caller is `_banded_buckets`, which builds the bucket
+    rows of every banded path: the collision joins (`_collision_scores`),
+    the `lsh_topk` self-join GEMM, and `lsh_near_dup_pairs` when
+    bands×planes > 32; the narrow near-dup configs keep the HOF form its
+    DuckDB twin mirrors expression-for-expression.
 
     Cross-engine caveat, CLOSED by the margin guard below: the GEMM
     accumulates in BLAS blocked order while the SQL twin sums strictly
@@ -801,17 +795,43 @@ def _band_buckets_udf(n_bands: int, planes_per_band: int, max_dims: int = 256):
 
 
 def _banded_buckets(
-    df: DataFrame, vec: str, n_bands: int, planes: int, keep_vec: bool = False
+    df: DataFrame, vec: str, n_bands: int, planes: int
 ) -> DataFrame:
     """Explode a vector table into one row per (band, bucket); band b hashes
-    with the disjoint plane slice [b*planes, (b+1)*planes). ``keep_vec``
-    retains the vector column on the bucket rows — the score-at-collision
-    shape (decontam / asymmetric top-k) rescans it straight off the bucket
-    join instead of re-fetching vectors through a second join."""
+    with the disjoint plane slice [b*planes, (b+1)*planes). Every column,
+    the vector included, rides on the bucket rows: the score-at-collision
+    shape (`_collision_scores`) rescans the vector straight off the bucket
+    join instead of re-fetching it through a second join, and the GEMM
+    paths hand it to their kernels."""
     udf = _band_buckets_udf(n_bands, planes)
-    keep = [c for c in df.columns if c != vec or keep_vec]
-    return (
-        df.select(*keep, F.posexplode(udf(F.col(vec))).alias("band", "bucket"))
+    return df.select("*", F.posexplode(udf(F.col(vec))).alias("band", "bucket"))
+
+
+def _collision_scores(
+    small: DataFrame, big: DataFrame, n_bands: int, planes_per_band: int,
+    broadcast: bool = True,
+) -> DataFrame:
+    """The banded-LSH filter step of every asymmetric filter-then-verify
+    path (`lsh_topk`'s query branch, graph seeds and appends, semantic
+    decontam): score AT the bucket-collision row. ``small`` and ``big`` are
+    three-column `_vec_side` frames ``(id, vec, norm)``; both explode to
+    their bucket rows WITH the vector, ``small``'s rows broadcast (when
+    ``broadcast``) and ``big``'s stream from the scan into the
+    (band, bucket) equi-join, and the rounded `guarded_cosine` runs in the
+    join's own stage — no candidate-pair distinct before scoring and no
+    vector re-fetch join. Emits ``(small_id, big_id, sim)``, one row per
+    collision: a pair colliding in several bands repeats with bit-identical
+    sims, so callers dedupe on their rank key (`_dedupe_by` or
+    `_rank_topk(dedupe=True)`). Self-pairs are kept; dropping them is
+    caller policy."""
+    (sid, sv, sn), (bid, bv, bn) = small.columns, big.columns
+    sb = _banded_buckets(small, sv, n_bands, planes_per_band)
+    bb = _banded_buckets(big, bv, n_bands, planes_per_band)
+    if broadcast:
+        sb = F.broadcast(sb)
+    return bb.join(sb, ["band", "bucket"]).select(
+        sid, bid,
+        guarded_cosine(F.col(sv), F.col(bv), F.col(sn), F.col(bn)).alias("sim"),
     )
 
 
@@ -823,7 +843,7 @@ def lsh_topk(
     k: int = 5,
     n_bands: int = 8,
     planes_per_band: int = 4,
-    broadcast_queries: bool | None = None,
+    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Approximate top-k via BANDED hyperplane LSH (OR-of-bands,
     AND-of-planes within a band — the same construction as
@@ -859,16 +879,14 @@ def lsh_topk(
     unchanged DuckDB twins.
     """
     if queries is corpus:
-        udf = _band_buckets_udf(n_bands, planes_per_band)
         qid_t = dict(queries.dtypes)[id_col]
         out_schema = f"query_id {qid_t}, neighbor_id {qid_t}, sim double"
         kern = _topk_score_kernel_bucketed(k)
         nsub = _lsh_supergroups(corpus.sparkSession, n_bands, planes_per_band)
         sub = F.pmod(F.col("bucket"), F.lit(nsub)).alias("sub")
-        b = corpus.select(
-            F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
-        ).select(
-            "_id", "_v", F.posexplode(udf(F.col("_v"))).alias("band", "bucket")
+        b = _banded_buckets(
+            corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")),
+            "_v", n_bands, planes_per_band,
         ).withColumn("sub", sub)
 
         def self_score(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -886,46 +904,19 @@ def lsh_topk(
         return _rank_topk(local, k, dedupe=True)
     else:
         # Asymmetric (queries ≢ corpus): score AT the bucket-collision row
-        # with the JVM HOF cosine — NOT the cogrouped GEMM, which must ship
+        # (`_collision_scores`) — NOT the cogrouped GEMM, which must ship
         # n_bands copies of every corpus vector through an exchange + the
         # Arrow boundary no matter how few queries there are (measured
         # 3.5 s vs 5.1-6.2 s on knn_lsh_20x across three GEMM variants).
-        # The query bucket rows broadcast WITH their vectors (the branch
-        # contract is a small query side — the corpus-scale case is the
-        # self-join branch above), so the corpus bucket rows stream
-        # straight from the scan into the join + cosine + thin projection:
-        # zero corpus-vector shuffles and no candidate-pair distinct
-        # before scoring. The pre-r11 pair shape deduped the full
-        # collision relation, then re-fetched BOTH vector sides through
-        # SortMergeJoins — three shuffles (pairs, queries, the whole
-        # corpus by id) to avoid rescoring the ~1.3x multi-band collision
-        # duplicates, whose recomputed sims are bit-identical anyway and
-        # collapse in `_rank_topk`'s distinct.
+        # ``broadcast_queries`` gates the hint on the fat query bucket rows
+        # (r12): a caller that cannot bound |Q| (append_knn_graph with an
+        # oversized batch) passes False and the join degrades to a shuffle
+        # instead of failing on the 8 GB broadcast cap / driver memory.
         q = _vec_side(queries, id_col, vec_col, "query_id", "qv", "qn")
         c = _vec_side(corpus, id_col, vec_col, "neighbor_id", "cv", "cn")
-        q_ids = _banded_buckets(q, "qv", n_bands, planes_per_band, keep_vec=True)
-        c_ids = _banded_buckets(c, "cv", n_bands, planes_per_band, keep_vec=True)
-        # ``broadcast_queries`` gates the hint (r12, ADVICE r11): the fat
-        # query bucket rows (|Q| x n_bands rows carrying full vectors) are
-        # only broadcastable under the branch's small-query contract. A
-        # caller that cannot guarantee it (e.g. append_knn_graph with an
-        # unbounded batch) passes False and the planner falls back to a
-        # plain join — degrading to a shuffle instead of failing on the
-        # 8 GB broadcast cap / driver memory. Default (None) keeps the
-        # hint: every in-repo call site is measured-small or gates itself.
-        if broadcast_queries is None or broadcast_queries:
-            q_ids = F.broadcast(q_ids)
-        scored = (
-            c_ids.join(q_ids, ["band", "bucket"])
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                guarded_cosine(
-                    F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")
-                ).alias("sim"),
-            )
-        )
+        scored = _collision_scores(
+            q, c, n_bands, planes_per_band, broadcast=broadcast_queries
+        ).filter(F.col("query_id") != F.col("neighbor_id"))
         return _rank_topk(scored, k, dedupe=True)
 
 

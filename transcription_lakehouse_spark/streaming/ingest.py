@@ -261,7 +261,7 @@ def stream_merge_txlog(
     ``optimize_every=N`` SCHEDULES the merge-on-read maintenance policy
     inside the sink itself: every N batches the apply also calls
     ``LogTable.optimize(min_dead_ratio, cluster_by, small_file_bytes)``,
-    so continuous CDC never needs an operator to remember ``purge_dvs``
+    so continuous CDC never needs an operator to remember to purge DVs
     — without it every read pays the DV bitmap tax on a forever-growing
     file set (measured: ``tools/cdc_stream_scaling.py --lifecycle``,
     SCALING.md r10). Replay-safe: a replayed batch's merge is skipped by

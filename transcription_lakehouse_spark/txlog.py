@@ -1380,13 +1380,6 @@ class LogTable:
 
     # ---- operations -----------------------------------------------------
 
-    def version_at(self, timestamp) -> int:
-        """Alias of :meth:`version_as_of` — one resolver, two names
-        (the r10 duplicate indexed ``c["timestamp"]`` directly and
-        raised KeyError on legacy commits without stamps; delegating
-        keeps the two TIMESTAMP-AS-OF entry points from drifting)."""
-        return self.version_as_of(timestamp)
-
     def read(self, version: int | None = None,
              timestamp=None) -> DataFrame:
         """Snapshot read (time travel with ``version``, or Delta's
@@ -1399,7 +1392,7 @@ class LogTable:
             if version is not None:
                 raise ValueError("read: version and timestamp are "
                                  "mutually exclusive")
-            version = self.version_at(timestamp)
+            version = self.version_as_of(timestamp)
         commits = self._load_for_read(version)
         schema = StructType.fromJson(json.loads(commits[-1]["schema"]))
         return self._read_adds(_live_adds(commits), schema)
@@ -2389,17 +2382,6 @@ class LogTable:
                 targets.append(a)
         return targets
 
-    def purge_dvs(self, min_dead_ratio: float = 0.2) -> dict:
-        """Targeted merge-on-read maintenance (Delta's ``REORG TABLE ...
-        APPLY (PURGE)`` idea): rewrite ONLY the live files whose
-        deletion-vector dead-row fraction reaches ``min_dead_ratio``,
-        materializing their DVs away — the knob that bounds read
-        amplification (every DV'd file pays a bitmap filter per scan)
-        without paying a full ``compact()`` of the healthy files.
-        Files without a DV, and DV'd files below the ratio, carry over
-        untouched. One snapshot-atomic commit; lost races re-plan."""
-        return self.optimize(min_dead_ratio=min_dead_ratio)
-
     def optimize(self, min_dead_ratio: float = 0.2,
                  cluster_by: list[str] | None = None,
                  zorder_by: list[str] | None = None,
@@ -2407,7 +2389,7 @@ class LogTable:
                  small_file_bytes: int | None = None) -> dict:
         """Scheduled merge-on-read maintenance: the OPTIMIZE entry point
         a continuous-CDC deployment calls on a timer so nobody has to
-        *remember* ``purge_dvs`` (r9 verdict missing #1 — without a
+        *remember* a manual DV purge (r9 verdict missing #1 — without a
         policy, every read pays the bitmap filter on a forever-growing
         DV'd-file set). One snapshot-atomic commit that
 

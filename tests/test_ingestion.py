@@ -89,7 +89,7 @@ def test_compaction_reduces_files_preserves_rows(spark, tmp_path):
     assert file_stats(src)["n_files"] == 64
 
     stats = compact(spark, src, dst, target_file_bytes=256 * 1024,
-                    sort_within_by=["k"])
+                    cluster_by=["k"])
     assert stats["n_files_before"] == 64
     assert stats["n_files_after"] < 16
     assert stats["rows"] == 10_000
@@ -128,7 +128,7 @@ def test_merge_upsert_replaces_and_inserts(spark, tmp_path):
 
 
 def test_compaction_sort_clusters_row_groups(spark, tmp_path):
-    """sort_within_by makes parquet min/max stats selective: after sorting
+    """cluster_by makes parquet min/max stats selective: after sorting
     by k, each output file covers a narrow disjoint k range (the data-
     skipping footprint a filtered 100 TB scan prunes on), while the
     unsorted source files all span nearly the full domain."""
@@ -158,7 +158,7 @@ def test_compaction_sort_clusters_row_groups(spark, tmp_path):
         return widths
 
     stats = compact(
-        spark, src, dst, target_file_bytes=32 * 1024, sort_within_by=["k"]
+        spark, src, dst, target_file_bytes=32 * 1024, cluster_by=["k"]
     )
     assert stats["n_files_after"] >= 4, stats
     # hash-repartitioned source: every row group spans ~the whole k domain

@@ -391,7 +391,7 @@ def test_compacted_layout_prunes_partitions_and_row_groups(spark, tmp_path):
             f"{raw}/event_type={et}",
             f"{clustered}/event_type={et}",
             target_file_bytes=64 * 1024,  # force multiple files per partition
-            sort_within_by=["ts"],
+            cluster_by=["ts"],
         )
 
     table = spark.read.parquet(clustered)
@@ -430,7 +430,7 @@ def test_zorder_prunes_on_both_clustered_columns(spark, tmp_path):
     1D range clustering cannot give — measured on actual filesystem bytes."""
     import pyspark.sql.functions as F
 
-    from transcription_lakehouse_spark.maintenance import compact_zorder
+    from transcription_lakehouse_spark.maintenance import compact
     from transcription_lakehouse_spark.sources.tables import load_table
 
     base = load_table(spark, "/root/testdata/sf0.01", "events")
@@ -443,8 +443,9 @@ def test_zorder_prunes_on_both_clustered_columns(spark, tmp_path):
     raw = str(tmp_path / "raw")
     tenx.repartition(8).write.parquet(raw)
     zpath = str(tmp_path / "zordered")
-    stats = compact_zorder(
-        spark, raw, zpath, ["ts", "user_id"], target_file_bytes=48 * 1024
+    stats = compact(
+        spark, raw, zpath, zorder_by=["ts", "user_id"],
+        target_file_bytes=48 * 1024,
     )
     assert stats["rows"] == tenx.count()
     assert stats["n_files_after"] > 4  # multiple files, else nothing to skip

@@ -10,7 +10,10 @@ JSON line per query:
 - ``run2_s``:    second materialization (steady state — the bench's min)
 - plan-shape counters: #Exchange, #Sort, #*EvalPython/MapInPandas/
   FlatMapGroupsInPandas (the Python boundary), #SortMergeJoin/
-  #BroadcastHashJoin, #jobs observed, plan line count
+  #BroadcastHashJoin, #jobs observed, plan line count. The counters read
+  the FINAL DataFrame's plan only: a query whose intermediate steps are
+  lazily checkpointed (the graph-search hops) shows just the last step's
+  plan, so operators removed or added in earlier hops are invisible here
 
 and optionally writes the formatted plan to --plans-dir/<name>_<tag>.txt.
 

@@ -24,8 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 __all__ = [
     "file_stats",
     "compact",
-    "compact_zorder",
-    "zorder_value",
+    "layout",
     "merge_upsert",
     "optimize_lake",
     "version_diff",
@@ -95,23 +94,81 @@ def optimize_lake(
     return out
 
 
+def layout(
+    df: DataFrame,
+    n: int | None,
+    cluster_by: list[str] | None = None,
+    zorder_by: list[str] | None = None,
+) -> DataFrame:
+    """The one rewrite layout every compaction and clustered write uses.
+
+    - ``cluster_by`` range-clusters: ``repartitionByRange`` + in-file sort
+      on those columns, so every output file owns a disjoint value range
+      and footer / log min/max stats prune whole files (the liquid-
+      clustering direction Delta took instead of hive partition dirs).
+    - ``zorder_by`` (mutually exclusive) Morton-clusters over SEVERAL
+      columns (``OPTIMIZE ZORDER BY``): one min/max aggregate, cast to
+      double (a timestamp scales as epoch seconds), puts each column on
+      a 2^10 grid; the coordinates' bits interleave into one long that is
+      range-clustered like a single column, so each file covers a narrow
+      range in EVERY listed dimension. Min/max scaling is skew-sensitive
+      (a heavy-hitter key crowds one cell); range-cluster 1D when one
+      column dominates the workload. A column without bounds (empty or
+      all-NULL input) contributes a constant coordinate.
+    - otherwise ``coalesce(n)``: merges input splits with no shuffle.
+
+    ``n`` is the output partition count; ``None`` leaves the count to the
+    shuffle default (clustering) or the input (plain)."""
+    if cluster_by and zorder_by:
+        raise ValueError("cluster_by and zorder_by are mutually exclusive")
+    ranged = list(cluster_by or [])
+    if zorder_by:
+        bits, grid = 10, (1 << 10) - 1
+        if bits * len(zorder_by) > 62:
+            raise ValueError(
+                f"zorder_by: {len(zorder_by)} columns x {bits} bits exceed "
+                "a 63-bit long; z-order at most 6 columns"
+            )
+        row = df.agg(*[
+            f(c).cast("double") for c in zorder_by for f in (F.min, F.max)
+        ]).head()
+        z = F.lit(0).cast("long")
+        for j, c in enumerate(zorder_by):
+            lo, hi = row[2 * j] or 0.0, row[2 * j + 1] or 0.0
+            coord = F.greatest(F.lit(0), F.least(F.lit(grid), F.floor(
+                (F.col(c).cast("double") - F.lit(lo))
+                / F.lit((hi - lo) or 1.0) * grid
+            ).cast("long")))
+            for b in range(bits):
+                bit = F.shiftright(coord, b).bitwiseAND(F.lit(1))
+                z = z + bit * F.lit(1 << (b * len(zorder_by) + j))
+        df, ranged = df.withColumn("_z", z), ["_z"]
+    if ranged:
+        parts = (n,) if n is not None else ()
+        df = df.repartitionByRange(*parts, *ranged).sortWithinPartitions(
+            *ranged
+        )
+        return df.drop("_z") if zorder_by else df
+    return df if n is None else df.coalesce(n)
+
+
 def compact(
     spark: SparkSession,
     src_path: str,
     dst_path: str,
     target_file_bytes: int = TARGET_FILE_BYTES,
-    sort_within_by: list[str] | None = None,
+    cluster_by: list[str] | None = None,
+    zorder_by: list[str] | None = None,
 ) -> dict:
-    """Rewrite ``src_path`` into ``dst_path`` with ceil(bytes/target) files.
+    """Rewrite ``src_path`` into ``dst_path`` with ceil(bytes/target) files
+    laid out by ``layout`` (plain ``coalesce``, ``cluster_by`` range
+    clustering, or ``zorder_by`` Morton clustering — the same options as
+    ``LogTable.compact``). Clustering costs one range shuffle (z-order
+    one bounds aggregate more), which is the honest price of files whose
+    min/max footer stats prune filtered scans.
 
     The file count is planned from the SOURCE's on-disk bytes (parquet in,
     parquet out — compressed sizes carry over closely), so no double scan.
-    Plain compaction uses ``coalesce`` — merges input splits with NO
-    shuffle. ``sort_within_by`` upgrades to CLUSTERING (the OPTIMIZE
-    ZORDER-1D equivalent): ``repartitionByRange`` on those columns makes
-    every output file own a disjoint value range, so parquet min/max
-    footer stats prune whole files/row groups on filtered scans — that
-    costs one range shuffle, which is the honest price of clustering.
 
     Returns {"n_files_before", "n_files_after", "rows"}. Contents are
     row-identical to the source (asserted by tests, order excepted).
@@ -127,11 +184,7 @@ def compact(
         )
     n_out = max(1, math.ceil(before["bytes"] / target_file_bytes))
     df: DataFrame = spark.read.parquet(src_path)
-    if sort_within_by:
-        out = df.repartitionByRange(n_out, *sort_within_by).sortWithinPartitions(
-            *sort_within_by
-        )
-    elif n_out <= df.rdd.getNumPartitions():
+    if not (cluster_by or zorder_by) and n_out > df.rdd.getNumPartitions():
         # the deliberate RDD-metadata touch: coalesce-vs-repartition needs
         # the SCAN's partition count, and the file listing is NOT a proxy
         # for it — FileSourceScanExec bin-packs small files into shared
@@ -139,97 +192,11 @@ def compact(
         # file-count test would route n_out=63 into coalesce, which can
         # only shrink, silently emitting ~40 oversized files instead of
         # 63. getNumPartitions() reads planned metadata; no job runs.
-        out = df.coalesce(n_out)
-    else:
         # coalesce cannot INCREASE partition count — a few huge input
         # files splitting into more, smaller outputs needs the shuffle
         out = df.repartition(n_out)
-    out.write.mode("error").parquet(dst_path)
-    after = file_stats(dst_path)
-    return {
-        "n_files_before": before["n_files"],
-        "n_files_after": after["n_files"],
-        "rows": spark.read.parquet(dst_path).count(),
-    }
-
-
-def zorder_value(
-    cols: list,
-    bounds: list[tuple[float, float]],
-    bits: int = 10,
-):
-    """Interleaved-bit Z-value over ``cols`` (Morton order): each column is
-    min/max-scaled onto a 2^bits grid and the grid coordinates' bits are
-    interleaved, so rows close in EVERY dimension get close z-values. Pure
-    constant-folded integer arithmetic (bits*len(cols) shift-or terms), no
-    UDF. ``bounds`` are (min, max) per column — driver-side scalars from
-    one aggregate."""
-    if bits * len(cols) > 62:
-        raise ValueError(
-            f"zorder_value: {bits} bits x {len(cols)} columns exceeds a "
-            "63-bit long; lower bits or z-order fewer columns"
-        )
-    grid = (1 << bits) - 1
-    coords = []
-    for c, (lo, hi) in zip(cols, bounds):
-        if lo is None or hi is None:
-            raise ValueError(
-                f"zorder_value: column {c!r} has NULL min/max (all-NULL or "
-                "empty input) — cannot place NULLs on the z-grid"
-            )
-        span = (hi - lo) or 1.0
-        scaled = F.floor(
-            (F.col(c).cast("double") - F.lit(float(lo)))
-            / F.lit(float(span))
-            * grid
-        ).cast("long")
-        coords.append(F.greatest(F.lit(0), F.least(F.lit(grid), scaled)))
-    z = F.lit(0).cast("long")
-    n = len(coords)
-    for i in range(bits):
-        for j, coord in enumerate(coords):
-            bit = F.shiftright(coord, i).bitwiseAND(F.lit(1))
-            z = z + (bit * F.lit(1 << (i * n + j)))
-    return z
-
-
-def compact_zorder(
-    spark: SparkSession,
-    src_path: str,
-    dst_path: str,
-    zorder_by: list[str],
-    target_file_bytes: int = TARGET_FILE_BYTES,
-    bits: int = 10,
-) -> dict:
-    """Multi-column clustering rewrite (the OPTIMIZE ZORDER equivalent —
-    public Delta Lake feature, implemented here as range-partitioning on a
-    Morton z-value): where `compact(sort_within_by=)` gives each file a
-    disjoint range of ONE column, z-ordering makes footer min/max stats
-    selective for predicates on EVERY z-ordered column simultaneously —
-    the layout for tables filtered sometimes by time, sometimes by key.
-    Min/max scaling makes the grid skew-sensitive (a heavy-hitter key
-    crowds one cell); range-cluster 1D instead when one column dominates
-    the workload. Cost: one bounds aggregate + one range shuffle."""
-    before = file_stats(src_path)
-    if before["n_files"] == 0:
-        raise ValueError(
-            f"compact_zorder: no parquet files visible at {src_path!r}"
-        )
-    df: DataFrame = spark.read.parquet(src_path)
-    row = df.agg(
-        *[F.min(c).cast("double").alias(f"_lo{i}") for i, c in enumerate(zorder_by)],
-        *[F.max(c).cast("double").alias(f"_hi{i}") for i, c in enumerate(zorder_by)],
-    ).collect()[0]
-    bounds = [
-        (row[f"_lo{i}"], row[f"_hi{i}"]) for i in range(len(zorder_by))
-    ]
-    n_out = max(1, math.ceil(before["bytes"] / target_file_bytes))
-    out = (
-        df.withColumn("_z", zorder_value(zorder_by, bounds, bits))
-        .repartitionByRange(n_out, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-    )
+    else:
+        out = layout(df, n_out, cluster_by, zorder_by)
     out.write.mode("error").parquet(dst_path)
     after = file_stats(dst_path)
     return {

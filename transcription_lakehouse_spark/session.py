@@ -21,7 +21,15 @@ from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "DEFAULT_SHUFFLE_PARTITIONS"]
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def _cpus() -> int:
+    """Local core count: ``SPARK_GRAFT_CPUS`` when set, else the CPUs this
+    process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
+DEFAULT_SHUFFLE_PARTITIONS = _cpus()
 
 
 def get_spark(
@@ -31,8 +39,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-minded defaults."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
+    master = master or f"local[{_cpus()}]"
     shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
 
     builder = (

@@ -32,12 +32,14 @@ pins its commit version from the SAME log read that planned it, so an
 intervening commit makes the publish lose the rename race rather than
 silently absorbing a stale rewrite. **Concurrency contract**: many
 readers; two writers racing the same version leave exactly one winner
-at that version, and the loser REBASES and retries (Delta's
-OptimisticTransaction): appends and overwrites reuse their written
-files and take the next version; compaction re-commits over append-only
-interference and re-plans otherwise; delete/merge re-plan from the new
-tip (a concurrent append may hold matching rows). After
-``max_commit_retries`` rebases the loser raises
+at that version, and the loser retries through the one commit loop,
+``LogTable._transact`` (Delta's OptimisticTransaction), which hands the
+operation a fresh read of the log: appends and overwrites reuse their
+written files and take the next version; compaction re-commits over
+append-only interference and re-plans otherwise; delete, merge,
+merge_cdc, optimize, constraint changes and restore re-plan from the
+new tip (a concurrent append may hold matching rows). After
+``max_commit_retries`` retries the loser raises
 ``ConcurrentCommitError``; abandoned staged files are swept by
 ``vacuum(remove_orphans=True)``. On object stores with neither
 atomic-install primitive (S3-style), pair the log dir with an external
@@ -67,6 +69,8 @@ import pandas as pd  # module-level: pandas_udf type hints resolve here
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructField, StructType
+
+from .maintenance import layout
 
 __all__ = [
     "ConcurrentCommitError",
@@ -483,6 +487,18 @@ def _live_adds(commits: list[dict]) -> list[dict]:
 
 def _live_files(commits: list[dict]) -> list[str]:
     return [a["path"] for a in _live_adds(commits)]
+
+
+def _next_version(commits: list[dict]) -> int:
+    """The version a commit planned against ``commits`` publishes at."""
+    return (commits[-1]["version"] if commits else -1) + 1
+
+
+def _txn_params(txn: tuple[str, int] | None) -> dict:
+    """Commit params recording Delta's txnAppId/txnVersion (see
+    ``_fold_txns``)."""
+    return {} if txn is None else {"txn_app_id": txn[0],
+                                   "txn_version": txn[1]}
 
 
 def _fold_txns(commits: list[dict]) -> dict[str, int]:
@@ -1393,9 +1409,7 @@ class LogTable:
                 raise ValueError("read: version and timestamp are "
                                  "mutually exclusive")
             version = self.version_as_of(timestamp)
-        commits = self._load_for_read(version)
-        schema = StructType.fromJson(json.loads(commits[-1]["schema"]))
-        return self._read_adds(_live_adds(commits), schema)
+        return self._read_of(self._load_for_read(version))
 
     def scan(
         self,
@@ -1454,40 +1468,70 @@ class LogTable:
             )
         return df
 
-    def _cluster(self, df: DataFrame,
-                 cluster_by: list[str] | None) -> DataFrame:
-        """Cluster-on-write (the liquid-clustering direction Delta took
-        INSTEAD of hive partition dirs): range-repartition + in-file sort
-        on ``cluster_by`` so each written file owns a narrow value range —
-        the log's per-file min/max then make ``scan()`` pruning sharp on
-        those columns without any partition-directory metadata, and
-        without hive's small-file explosion on high-cardinality keys."""
-        if not cluster_by:
-            return df
-        return df.repartitionByRange(*cluster_by).sortWithinPartitions(
-            *cluster_by
-        )
+    def _transact(self, attempt, allow_empty: bool = False):
+        """The one optimistic-commit loop (Delta's OptimisticTransaction):
+        ``attempt(prefix)`` plans against a fresh read of the log and
+        returns ``(record | None, result)``; a record is published, then
+        ``result`` is returned (None publishes nothing). On a lost race
+        (``ConcurrentCommitError``) ``attempt`` runs again on the new tip
+        — each operation's closure decides whether its earlier work still
+        holds (rebase) or must be redone (re-plan) — up to
+        ``max_commit_retries`` times before the last error is raised."""
+        last_exc: ConcurrentCommitError | None = None
+        for _ in range(self.max_commit_retries + 1):
+            record, result = attempt(
+                self._load_for_read(None, allow_empty=allow_empty)
+            )
+            if record is None:
+                return result
+            try:
+                self._commit(record)
+            except ConcurrentCommitError as exc:
+                last_exc = exc
+                continue
+            self._maybe_checkpoint(record["version"])
+            return result
+        raise last_exc
+
+    def _staged(self, df: DataFrame, cluster_by: list[str] | None,
+                op: str):
+        """Data files for append/overwrite, written ONCE (clustered on
+        ``cluster_by``, under the first attempt's version) and reused by
+        every rebase. The CHECK validation re-runs whenever the tip's
+        constraint set differs from the one last validated — a racing
+        ``add_constraint`` must not be bypassed by a rebase."""
+        state: dict = {}
+
+        def adds_for(prefix: list[dict], ddl: str, v: int) -> list[dict]:
+            if "adds" not in state:
+                state["adds"] = self._write_files(
+                    layout(df, None, cluster_by), v
+                )
+            cons = _fold_constraints(prefix)
+            if state.get("cons") != cons:
+                self._enforce_written(state["adds"], ddl, prefix, op)
+                state["cons"] = cons
+            return state["adds"]
+
+        return adds_for
 
     def append(self, df: DataFrame, merge_schema: bool = False,
                params: dict | None = None,
                cluster_by: list[str] | None = None,
                txn: tuple[str, int] | None = None) -> int | None:
-        """Append commit: new files only, nothing rewritten. Loads the
-        log ONCE (schema check + next version from the same read).
+        """Append commit: new files only, nothing rewritten.
         ``merge_schema=True`` allows additive column evolution (see
         ``_check_schema``).
 
         Optimistic concurrency: an append NEVER logically conflicts with
-        another commit — on a lost commit race it re-reads the log tail,
-        re-validates the schema against the new tip (a concurrent schema
-        change IS a real conflict and raises), takes the next version,
-        and retries; the data files are reused, not rewritten. Two
-        concurrent appenders therefore both land without hand-rolled
-        retry loops (Delta's OptimisticTransaction behavior).
+        another commit — on a lost commit race it re-validates the schema
+        against the new tip (a concurrent schema change IS a real
+        conflict and raises), takes the next version, and retries; the
+        data files are reused, not rewritten (see ``_staged``).
 
-        ``cluster_by`` clusters the batch on write (see ``_cluster``) so
-        scans filtered on those columns prune this commit's files from
-        the log alone.
+        ``cluster_by`` clusters the batch on write
+        (``maintenance.layout``) so scans filtered on those columns prune
+        this commit's files from the log alone.
 
         ``txn=(app_id, version)`` gives the append Delta's
         txnAppId/txnVersion idempotence (same contract as ``merge_cdc``):
@@ -1497,44 +1541,18 @@ class LogTable:
         checkpoint advance re-fires the batch. Checked again on every
         commit-race retry (the racer may have been the same app's
         earlier attempt)."""
-        prefix = self._load_for_read(None, allow_empty=True)
-        if self._txn_already_applied(txn, prefix):
-            return None
-        commit_params = dict(params or {})
-        if txn is not None:
-            commit_params["txn_app_id"] = txn[0]
-            commit_params["txn_version"] = txn[1]
-        ddl = self._check_schema(df, prefix, merge_schema=merge_schema)
-        v = (prefix[-1]["version"] if prefix else -1) + 1
-        adds = self._write_files(self._cluster(df, cluster_by), v)
-        self._enforce_written(adds, ddl, prefix, "append")
-        validated_cons = _fold_constraints(prefix)
-        last_exc: ConcurrentCommitError | None = None
-        for _ in range(self.max_commit_retries + 1):
-            try:
-                self._commit(self._record(
-                    v, "append", adds, [], ddl, **commit_params
-                ))
-                self._maybe_checkpoint(v)
-                return v
-            except ConcurrentCommitError as exc:
-                last_exc = exc
-                prefix = self._load_for_read(None, allow_empty=True)
-                if self._txn_already_applied(txn, prefix):
-                    return None  # the racer WAS this txn's earlier fire
-                ddl = self._check_schema(df, prefix,
-                                         merge_schema=merge_schema)
-                # the racer may have been add_constraint: a retried
-                # commit must satisfy the NEW tip's constraint set, or
-                # add_constraint's "validates the whole table" guarantee
-                # is defeated by any append racing it (matches
-                # _keyed_rewrite, which enforces inside its retry loop)
-                cons = _fold_constraints(prefix)
-                if cons != validated_cons:
-                    self._enforce_written(adds, ddl, prefix, "append")
-                    validated_cons = cons
-                v = (prefix[-1]["version"] if prefix else -1) + 1
-        raise last_exc
+        commit_params = dict(params or {}, **_txn_params(txn))
+        staged = self._staged(df, cluster_by, "append")
+
+        def attempt(prefix):
+            if self._txn_already_applied(txn, prefix):
+                return None, None
+            ddl = self._check_schema(df, prefix, merge_schema=merge_schema)
+            v = _next_version(prefix)
+            return self._record(v, "append", staged(prefix, ddl, v), [],
+                                ddl, **commit_params), v
+
+        return self._transact(attempt, allow_empty=True)
 
     def overwrite(self, df: DataFrame, params: dict | None = None,
                   cluster_by: list[str] | None = None) -> int:
@@ -1547,33 +1565,15 @@ class LogTable:
         WHATEVER is current, so rebasing is always safe and the written
         data files are reused. ``cluster_by`` clusters on write."""
         ddl = df.schema.json()
-        prefix = self._load_for_read(None, allow_empty=True)
-        v = (prefix[-1]["version"] if prefix else -1) + 1
-        adds = self._write_files(self._cluster(df, cluster_by), v)
-        self._enforce_written(adds, ddl, prefix, "overwrite")
-        validated_cons = _fold_constraints(prefix)
-        last_exc: ConcurrentCommitError | None = None
-        for _ in range(self.max_commit_retries + 1):
-            old = self._snapshot_of(prefix)[0] if prefix else []
-            removes = [p[len(self.path) + 1:] for p in old]
-            try:
-                self._commit(self._record(
-                    v, "overwrite", adds, removes, ddl, **(params or {})
-                ))
-                self._maybe_checkpoint(v)
-                return v
-            except ConcurrentCommitError as exc:
-                last_exc = exc
-                prefix = self._load_for_read(None, allow_empty=True)
-                # re-validate when the racer changed the constraint set
-                # (see append: a racing add_constraint must not be
-                # bypassed by this retry's rebase)
-                cons = _fold_constraints(prefix)
-                if cons != validated_cons:
-                    self._enforce_written(adds, ddl, prefix, "overwrite")
-                    validated_cons = cons
-                v = (prefix[-1]["version"] if prefix else -1) + 1
-        raise last_exc
+        staged = self._staged(df, cluster_by, "overwrite")
+
+        def attempt(prefix):
+            v = _next_version(prefix)
+            return self._record(v, "overwrite", staged(prefix, ddl, v),
+                                _live_files(prefix), ddl,
+                                **(params or {})), v
+
+        return self._transact(attempt, allow_empty=True)
 
     def _read_of(self, commits: list[dict]) -> DataFrame:
         """Snapshot read from an already-loaded prefix — mutation ops
@@ -1584,28 +1584,12 @@ class LogTable:
         schema = StructType.fromJson(json.loads(commits[-1]["schema"]))
         return self._read_adds(_live_adds(commits), schema)
 
-    def _resolve_file_uris(self, uris: list[str],
-                           files: list[str]) -> list[str]:
-        """Map ``input_file_name()`` URIs back to the snapshot's paths.
-        The URIs come back percent-encoded — decode before comparing, and
-        REFUSE (never silently drop) a matched row whose file can't be
-        resolved: dropping it would make delete/merge skip rows while
-        reporting success."""
-        by_tail = {p.split("/data/")[-1]: p for p in files}
-        out = set()
-        for u in uris:
-            tail = unquote(urlparse(u).path or u).split("/data/")[-1]
-            if tail not in by_tail:
-                raise RuntimeError(
-                    f"matched row's file {u!r} does not resolve to a "
-                    f"snapshot path under {self.path!r}"
-                )
-            out.add(by_tail[tail])
-        return sorted(out)
-
     def _rels_of_uris(self, uris: list[str], adds: list[dict]) -> list[str]:
-        """Map scan-stage file URIs back to add-action relative paths,
-        REFUSING any URI that doesn't resolve (like _resolve_file_uris)."""
+        """Map scan-stage file URIs (``__f``) back to add-action relative
+        paths. The URIs come back percent-encoded — decode before
+        comparing, and REFUSE (never silently drop) a matched row whose
+        file can't be resolved: dropping it would make delete/merge skip
+        rows while reporting success."""
         by_tail = {a["path"].split("data/", 1)[1]: a["path"] for a in adds}
         out = []
         for u in uris:
@@ -1618,28 +1602,18 @@ class LogTable:
             out.append(by_tail[tail])
         return out
 
-    def _files_with_matches(self, cond, commits: list[dict]) -> list[str]:
-        """File-level pruning: the live files that contain >= 1 LIVE row
-        matching ``cond`` (deletion vectors folded — a file whose only
-        matches are already DV-deleted is not touched) — ONE pass with
-        the file identity materialized in the scan stage, so a delete
-        rewrites only the files it must."""
-        adds = _live_adds(commits)
-        schema = self._snapshot_of(commits)[1]
-        cur = self._read_adds(adds, schema, with_meta=True)
-        rows = cur.filter(cond).select("__f").distinct().collect()
-        files, _ = self._snapshot_of(commits)
-        return self._resolve_file_uris([r["__f"] for r in rows], files)
-
     def _candidate_adds(self, keys: DataFrame, key: str,
                         adds: list[dict],
                         schema: StructType) -> list[dict]:
         """Bloom-prune the candidate add set for a keyed rewrite: when
         the table carries blooms on ``key`` and the batch holds at most
         ``_BLOOM_PROBE_CAP`` distinct keys (the streaming-CDC shape),
-        candidate files are pruned DRIVER-SIDE from the log's bitsets.
-        The cap bounds the driver collect (no size cliff — above it, or
-        without blooms, every live add stays a candidate)."""
+        candidate files are pruned DRIVER-SIDE from the log's bitsets, so
+        the matched-rows scan opens only bloom-matched files. The cap
+        bounds the driver collect (no size cliff — above it, or without
+        blooms, every live add stays a candidate), and the scan still
+        confirms every candidate, so bloom false positives only cost I/O,
+        never a wrong rewrite."""
         if not any((a.get("bloom") or {}).get("cols", {}).get(key)
                    for a in adds):
             return adds
@@ -1658,42 +1632,6 @@ class LogTable:
             adds, key, [r[key] for r in head],
             self._bloom_bits_of, key_type,
         )
-
-    def _files_with_key_matches(self, keys: DataFrame, key: str,
-                                commits: list[dict]) -> list[str]:
-        """Files holding >= 1 row whose ``key`` appears in ``keys`` —
-        discovered with a LEFT SEMI JOIN, never by collecting the key set
-        to the driver: the key side stays a DataFrame of any size (AQE
-        broadcasts it when it is small), so a 100 k-key CDC merge prunes
-        files exactly like a 10-key one instead of cliffing into a
-        full-table rewrite (the r7 verdict's "wrong #1"). The file name
-        is materialized IN THE SCAN STAGE (input_file_name() is undefined
-        past an exchange — after a sort-merge join it reads back empty).
-
-        When the table carries blooms on ``key`` and the batch holds at
-        most ``_BLOOM_PROBE_CAP`` distinct keys (the streaming-CDC
-        shape), candidate files are first pruned DRIVER-SIDE from the
-        log's bitsets — the confirm scan then opens only bloom-matched
-        files instead of every live file. The cap bounds the driver
-        collect (no size cliff: above it, or without blooms, the full
-        distributed discovery runs unchanged), and the semi-join still
-        confirms every candidate, so bloom false positives only cost
-        I/O, never a wrong rewrite."""
-        adds = _live_adds(commits)
-        schema = self._snapshot_of(commits)[1]
-        cand = self._candidate_adds(keys, key, adds, schema)
-        if not cand:
-            return []
-        cur = (
-            self._read_adds(cand, schema, with_meta=True)
-            .select(F.col(key), F.col("__f"))
-        )
-        rows = (
-            cur.join(keys, key, "left_semi")
-            .select("__f").distinct().collect()
-        )
-        files, _ = self._snapshot_of(commits)
-        return self._resolve_file_uris([r["__f"] for r in rows], files)
 
     def _dv_plan(
         self, matched: DataFrame, adds: list[dict], version: int
@@ -1742,6 +1680,68 @@ class LogTable:
             n_dv += 1
         return sorted(new_adds, key=lambda a: a["path"]), removes, n_dv
 
+    def _rewrite_matched(self, prefix: list[dict], cand: list[dict],
+                         rows, op: str, ddl: str,
+                         upserts: DataFrame | None = None,
+                         **params) -> tuple[dict, dict]:
+        """The matched-rows step of delete and merge/merge_cdc, planned
+        against ``prefix``. ``rows(df, matched)`` selects the rows of
+        ``df`` that match (``matched=True``: a filter for delete, a
+        left-semi join on the keys for merge — the key set never collects
+        to the driver, so a 100 k-key merge prunes files exactly like a
+        10-key one) or the rest (``False``). ONE scan of the candidate
+        adds ``cand``, with the file identity ``__f`` and row position
+        ``__p`` materialized IN THE SCAN STAGE (input_file_name() is
+        undefined past an exchange), finds the matched live rows
+        (deletion vectors folded — already-deleted rows never match).
+        Then either
+
+        - ``deletion_vectors=True`` — merge-on-read: the matched rows are
+          marked in per-file DV bitmaps (``_dv_plan``) and no data file
+          is rewritten, so the cost is O(matched rows) bitmap bytes, not
+          O(touched bytes), even when matches spread across the table;
+          past ``_DV_MAX_POSITIONS`` it falls back to
+        - copy-on-write: exactly the files holding a match are rewritten
+          with their UNMATCHED rows, ``rows(df, False)`` — so a row whose
+          delete condition is NULL survives, in both modes.
+
+        ``upserts`` land as fresh files in the same commit. Returns
+        ``(record, result)`` for ``_transact``."""
+        v = _next_version(prefix)
+        live = _live_adds(prefix)
+        schema = self._snapshot_of(prefix)[1] if prefix else None
+        cur = self._read_adds(cand, schema, with_meta=True) if cand else None
+        plan = None
+        if self.deletion_vectors and live:
+            plan = self._dv_plan(
+                rows(cur, True).select("__f", "__p"), live, v
+            ) if cand else ([], [], 0)
+        new_rows = upserts
+        if plan is not None:
+            adds, removes, n_dv = plan
+            params["mode"] = "dv"
+            out = {"rewritten_files": 0, "dv_files": n_dv,
+                   "removed_files": len(removes)}
+        else:
+            hits = (
+                rows(cur, True).select("__f").distinct().collect()
+                if cand else []
+            )
+            removes = sorted(set(
+                self._rels_of_uris([r["__f"] for r in hits], cand)
+            ))
+            adds, out = [], {"rewritten_files": len(removes)}
+            if removes:
+                by_rel = {a["path"]: a for a in cand}
+                kept = rows(self._read_adds(
+                    [by_rel[r] for r in removes], schema), False)
+                new_rows = (kept if upserts is None
+                            else kept.unionByName(upserts))
+        if new_rows is not None and new_rows.head(1):
+            adds = adds + self._write_files(new_rows, v)
+        return (self._record(v, op, adds, removes, ddl, **params),
+                {"version": v, **out})
+
     def _apply_auto_optimize(self, out: dict) -> dict:
         """Run the handle's opt-in auto-OPTIMIZE policy after a
         debt-creating commit and report what it did under
@@ -1754,19 +1754,18 @@ class LogTable:
         return out
 
     def delete(self, condition: str) -> dict:
-        """Delete matching rows. With ``deletion_vectors=True`` this is
-        MERGE-ON-READ: matched rows are marked in per-file DV bitmaps
-        (one tiny inline/sidecar bitmap per touched file, Delta
-        DV / Iceberg v2 position-delete semantics) and NO data file is
-        rewritten — at 100 TB a delete whose keys spread across the
-        whole table costs O(matched rows) bitmap bytes instead of
-        O(touched bytes) rewrite; ``compact()`` materializes the DVs
-        away. A fully-deleted file drops from the live set. Falls back
-        to copy-on-write above ``_DV_MAX_POSITIONS`` matches.
+        """Delete the rows for which ``condition`` is TRUE (SQL DELETE: a
+        row whose condition is NULL stays). With
+        ``deletion_vectors=True`` this is MERGE-ON-READ: matched rows are
+        marked in per-file DV bitmaps (one tiny inline/sidecar bitmap per
+        touched file, Delta DV / Iceberg v2 position-delete semantics)
+        and NO data file is rewritten; ``compact()`` materializes the DVs
+        away. A fully-deleted file drops from the live set. Falls back to
+        copy-on-write above ``_DV_MAX_POSITIONS`` matches.
 
         Otherwise (default) copy-on-write: rewrite ONLY the files that
         contain matches, with any existing DVs folded (never
-        resurrecting previously deleted rows).
+        resurrecting previously deleted rows). See ``_rewrite_matched``.
 
         Snapshot isolation: the commit version is pinned from the SAME
         log read that planned the rewrite, so a commit landing between
@@ -1776,56 +1775,18 @@ class LogTable:
         append may have added files containing matching rows — reusing
         the old plan would miss them); abandoned staged files are swept
         by ``vacuum(remove_orphans=True)``."""
-        cond = F.expr(condition)
-        last_exc: ConcurrentCommitError | None = None
-        for _ in range(self.max_commit_retries + 1):
-            prefix = self._load_for_read(None)
-            live = _live_adds(prefix)
-            schema = self._snapshot_of(prefix)[1]
-            ddl = prefix[-1]["schema"]
-            v = prefix[-1]["version"] + 1
-            plan = None
-            if self.deletion_vectors and live:
-                cur = self._read_adds(live, schema, with_meta=True)
-                plan = self._dv_plan(
-                    cur.filter(cond).select("__f", "__p"), live, v
-                )
-            if plan is not None:
-                adds, removes, n_dv = plan
-                try:
-                    self._commit(self._record(
-                        v, "delete", adds, removes, ddl,
-                        condition=condition, mode="dv",
-                    ))
-                    self._maybe_checkpoint(v)
-                    return self._apply_auto_optimize(
-                        {"version": v, "rewritten_files": 0,
-                         "dv_files": n_dv,
-                         "removed_files": len(removes)})
-                except ConcurrentCommitError as exc:
-                    last_exc = exc
-                    continue
-            touched = self._files_with_matches(cond, prefix)
-            if touched:
-                by_rel = {a["path"]: a for a in live}
-                t_adds = [
-                    by_rel[p[len(self.path) + 1:]] for p in touched
-                ]
-                keep = self._read_adds(t_adds, schema).filter(~cond)
-                adds = self._write_files(keep, v) if keep.head(1) else []
-            else:
-                adds = []
-            removes = [p[len(self.path) + 1:] for p in touched]
-            try:
-                self._commit(self._record(
-                    v, "delete", adds, removes, ddl, condition=condition,
-                ))
-                self._maybe_checkpoint(v)
-                return self._apply_auto_optimize(
-                    {"version": v, "rewritten_files": len(touched)})
-            except ConcurrentCommitError as exc:
-                last_exc = exc
-        raise last_exc
+        hit = F.coalesce(F.expr(condition), F.lit(False))
+
+        def rows(df, matched):
+            return df.filter(hit if matched else ~hit)
+
+        def attempt(prefix):
+            return self._rewrite_matched(
+                prefix, _live_adds(prefix), rows, "delete",
+                prefix[-1]["schema"], condition=condition,
+            )
+
+        return self._apply_auto_optimize(self._transact(attempt))
 
     def _refuse_dup_keys(self, df: DataFrame, key: str, op: str) -> None:
         dup = df.groupBy(key).count().filter(F.col("count") > 1).head(1)
@@ -1857,11 +1818,10 @@ class LogTable:
                        require_txn: tuple[str, int] | None = None,
                        **params) -> dict:
         """Shared engine of merge()/merge_cdc(): ONE snapshot-atomic
-        commit that rewrites exactly the live files holding a key from
-        ``keys`` (left-semi discovery — the key set never collects to the
-        driver, no size cliff), drops those keys' old rows, and adds
-        ``upserts``. Lost commit races re-plan from the new tip, like
-        ``delete``.
+        commit that drops the live rows whose ``key`` appears in ``keys``
+        (``_rewrite_matched`` with a left-semi join, after bloom pruning
+        of the candidate files) and adds ``upserts``. Lost commit races
+        re-plan from the new tip, like ``delete``.
 
         ``require_txn=(app_id, expected)`` makes the commit a
         compare-and-swap on the app's txn watermark: if the table's
@@ -1871,12 +1831,15 @@ class LogTable:
         be recomputed, never rebased (the incremental-matview race,
         r8 ADVICE #2). Checked on every retry iteration so a concurrent
         writer landing mid-retry is caught too."""
-        last_exc: ConcurrentCommitError | None = None
-        for _ in range(self.max_commit_retries + 1):
-            prefix = self._load_for_read(None, allow_empty=True)
+        commit_params = dict(params, key=key, **_txn_params(txn))
+
+        def rows(df, matched):
+            return df.join(keys, key, "left_semi" if matched else "left_anti")
+
+        def attempt(prefix):
             if self._txn_already_applied(txn, prefix):
-                return {"version": None, "rewritten_files": 0,
-                        "skipped_as_applied": True}
+                return None, {"version": None, "rewritten_files": 0,
+                              "skipped_as_applied": True}
             if require_txn is not None:
                 app, expected = require_txn
                 got = _fold_txns(prefix).get(app, -1)
@@ -1891,83 +1854,14 @@ class LogTable:
             # the incoming upserts need the CHECK pass (deletes cannot
             # create violations)
             self._enforce_constraints(upserts, prefix, op)
-            v = (prefix[-1]["version"] if prefix else -1) + 1
-            live = _live_adds(prefix) if prefix else []
-            commit_params = dict(params, key=key)
-            if txn is not None:
-                commit_params["txn_app_id"] = txn[0]
-                commit_params["txn_version"] = txn[1]
-            plan = None
-            if self.deletion_vectors and live:
-                # merge-on-read: the batch's keys are DELETED from their
-                # files via deletion-vector bitmaps (no rewrite), the
-                # upserts land as fresh appended files — per-batch cost
-                # is O(batch) + O(touched files) bitmap bytes, never
-                # O(touched bytes), even when the keys spread uniformly
-                # across the table (the r8 verdict's missing #1)
-                schema = self._snapshot_of(prefix)[1]
-                cand = self._candidate_adds(keys, key, live, schema)
-                if cand:
-                    cur = (
-                        self._read_adds(cand, schema, with_meta=True)
-                        .select(F.col(key), "__f", "__p")
-                    )
-                    matched = (
-                        cur.join(keys, key, "left_semi")
-                        .select("__f", "__p")
-                    )
-                    plan = self._dv_plan(matched, live, v)
-                else:
-                    plan = ([], [], 0)
-            if plan is not None:
-                dv_adds, removes, n_dv = plan
-                adds = dv_adds + (
-                    self._write_files(upserts, v)
-                    if upserts.head(1) else []
-                )
-                try:
-                    self._commit(self._record(
-                        v, op, adds, removes, ddl,
-                        mode="dv", **commit_params,
-                    ))
-                    self._maybe_checkpoint(v)
-                    return {"version": v, "rewritten_files": 0,
-                            "dv_files": n_dv,
-                            "removed_files": len(removes)}
-                except ConcurrentCommitError as exc:
-                    last_exc = exc
-                    continue
-            touched = (
-                self._files_with_key_matches(keys, key, prefix)
-                if prefix else []
-            )
-            if touched:
-                schema = self._snapshot_of(prefix)[1]
-                by_rel = {a["path"]: a for a in live}
-                t_adds = [
-                    by_rel[p[len(self.path) + 1:]] for p in touched
-                ]
-                survivors = (
-                    self._read_adds(t_adds, schema)
-                    .join(keys, key, "left_anti")
-                )
-                new_data = survivors.unionByName(upserts)
-            else:
-                new_data = upserts
-            adds = (
-                self._write_files(new_data, v)
-                if new_data.head(1) else []
-            )
-            removes = [p[len(self.path) + 1:] for p in touched]
-            try:
-                self._commit(self._record(
-                    v, op, adds, removes, ddl, **commit_params,
-                ))
-                self._maybe_checkpoint(v)
-                return {"version": v, "rewritten_files": len(touched)}
-            except ConcurrentCommitError as exc:
-                last_exc = exc
-        raise last_exc
+            live = _live_adds(prefix)
+            cand = self._candidate_adds(
+                keys, key, live, self._snapshot_of(prefix)[1]
+            ) if live else []
+            return self._rewrite_matched(prefix, cand, rows, op, ddl,
+                                         upserts, **commit_params)
+
+        return self._transact(attempt, allow_empty=True)
 
     def merge(self, updates: DataFrame, key: str) -> dict:
         """Upsert (Delta MERGE WHEN MATCHED UPDATE / NOT MATCHED INSERT,
@@ -2026,113 +1920,48 @@ class LogTable:
                 cluster_by: list[str] | None = None,
                 zorder_by: list[str] | None = None) -> dict:
         """OPTIMIZE: rewrite the live file set into ``target_files``
-        larger files. ``cluster_by`` upgrades to CLUSTERING
-        (repartitionByRange + in-file sort): every output file owns a
-        disjoint value range on those columns, which is what makes the
-        log's min/max stats — and therefore ``scan()`` skipping — sharp
-        instead of overlapping. ``zorder_by`` (mutually exclusive)
-        clusters on the interleaved-bit Morton value over SEVERAL
-        columns instead (Delta's `OPTIMIZE ZORDER BY`): each file then
-        covers a narrow range in EVERY listed dimension, so scans
-        filtered on any one of them prune — the multi-predicate layout
-        single-column range clustering can't give. Pure rewrite +
+        larger files, laid out by ``maintenance.layout``: ``cluster_by``
+        range-clusters (every output file owns a disjoint value range on
+        those columns, which is what makes the log's min/max stats — and
+        therefore ``scan()`` skipping — sharp instead of overlapping);
+        ``zorder_by`` (mutually exclusive) clusters on the interleaved-bit
+        Morton value over SEVERAL columns (Delta's `OPTIMIZE ZORDER BY`),
+        so scans filtered on any one of them prune. Pure rewrite +
         metadata swap — every prior version still time-travels (old
-        files stay until vacuum).
+        files stay until vacuum); deletion vectors are materialized away.
 
         Compaction is declared NON-CONFLICTING with appends: on a lost
-        commit race where every input file is still live and the schema
-        is unchanged (i.e. only appends landed in between), the same
-        rewrite re-commits at the next version — both effects stay
-        visible (the new appends remain live alongside the compacted
-        files). If an input file was removed (a concurrent
-        delete/merge/compact rewrote it), the rewrite is stale and the
-        operation re-plans from scratch."""
-        if cluster_by and zorder_by:
-            raise ValueError(
-                "compact: cluster_by and zorder_by are mutually exclusive"
-            )
-        last_exc: ConcurrentCommitError | None = None
-        need_plan = True
-        files: list[str] = []
-        adds: list[dict] = []
-        removes: list[str] = []
-        planned_sigs: dict[str, object] = {}
-        ddl = ""
-        v = 0
-        for _ in range(self.max_commit_retries + 1):
-            if need_plan:
-                prefix = self._load_for_read(None)
-                files, _schema = self._snapshot_of(prefix)
-                planned_sigs = {
-                    a["path"]: _add_sig(a) for a in _live_adds(prefix)
-                }
-                ddl = prefix[-1]["schema"]
-                v = prefix[-1]["version"] + 1
-                # DV-folded read: compaction MATERIALIZES deletion
-                # vectors away — the rewritten files carry no DVs and
-                # the read path sheds its bitmap filter
-                base = self._read_of(prefix)
-                if zorder_by:
-                    from .maintenance import zorder_value
+        commit race where every input file is still live with the same
+        deletion-vector state and the schema is unchanged (i.e. only
+        appends landed in between), the same rewrite re-commits at the
+        next version — both effects stay visible (the new appends remain
+        live alongside the compacted files). Otherwise (a concurrent
+        delete/merge/compact rewrote or DV-marked an input, whose live
+        rows the stale rewrite would resurrect) it re-plans."""
+        plan: dict = {}
 
-                    stats_row = base.agg(*[
-                        f(c).alias(f"{n}_{c}")
-                        for c in zorder_by
-                        for n, f in (("lo", F.min), ("hi", F.max))
-                    ]).head()
-                    bounds = [
-                        (stats_row[f"lo_{c}"], stats_row[f"hi_{c}"])
-                        for c in zorder_by
-                    ]
-                    df = (
-                        base.withColumn(
-                            "_z", zorder_value(zorder_by, bounds)
-                        )
-                        .repartitionByRange(max(1, target_files), "_z")
-                        .sortWithinPartitions("_z")
-                        .drop("_z")
-                    )
-                elif cluster_by:
-                    df = base.repartitionByRange(
-                        max(1, target_files), *cluster_by
-                    ).sortWithinPartitions(*cluster_by)
-                else:
-                    df = base.coalesce(max(1, target_files))
-                adds = self._write_files(df, v)
-                removes = [p[len(self.path) + 1:] for p in files]
-            try:
-                self._commit(self._record(
-                    v, "compact", adds, removes, ddl,
-                    target_files=target_files, cluster_by=cluster_by or [],
-                    zorder_by=zorder_by or [],
-                ))
-                self._maybe_checkpoint(v)
-                return {"version": v, "files_before": len(files),
-                        "files_after": len(adds)}
-            except ConcurrentCommitError as exc:
-                last_exc = exc
-                new_prefix = self._load_for_read(None)
-                new_sigs = {
-                    a["path"]: _add_sig(a)
-                    for a in _live_adds(new_prefix)
-                }
-                same_schema = _norm_schema(ddl) == _norm_schema(
-                    new_prefix[-1]["schema"]
+        def attempt(prefix):
+            sigs = {a["path"]: _add_sig(a) for a in _live_adds(prefix)}
+            v = _next_version(prefix)
+            stale = not plan or _norm_schema(plan["ddl"]) != _norm_schema(
+                prefix[-1]["schema"]
+            ) or any(sigs.get(r) != s for r, s in plan["inputs"].items())
+            if stale:  # first attempt, or a racer did more than append
+                plan.update(
+                    ddl=prefix[-1]["schema"], inputs=sigs,
+                    adds=self._write_files(layout(
+                        self._read_of(prefix), max(1, target_files),
+                        cluster_by, zorder_by,
+                    ), v),
                 )
-                # rebase ONLY if every planned input is still live WITH
-                # THE SAME deletion-vector state — a concurrent DV update
-                # keeps the path live but changes its live rows, and
-                # re-committing the stale rewrite would resurrect them
-                if same_schema and all(
-                    new_sigs.get(r) == planned_sigs.get(r)
-                    for r in removes
-                ):
-                    # append-only interference: rebase, keep the rewrite
-                    v = new_prefix[-1]["version"] + 1
-                    need_plan = False
-                else:
-                    need_plan = True
-        raise last_exc
+            return self._record(
+                v, "compact", plan["adds"], list(plan["inputs"]),
+                plan["ddl"], target_files=target_files,
+                cluster_by=cluster_by or [], zorder_by=zorder_by or [],
+            ), {"version": v, "files_before": len(plan["inputs"]),
+                "files_after": len(plan["adds"])}
+
+        return self._transact(attempt)
 
     # ---- CHECK constraints + table detail ---------------------------------
 
@@ -2220,13 +2049,13 @@ class LogTable:
         ``append``/``merge``/``merge_cdc`` refuses batches whose rows
         violate it (NULL passes, per SQL CHECK). Re-adding the identical
         constraint is an idempotent no-op; a different expression under
-        the same name is refused (drop it first)."""
-        last_exc: ConcurrentCommitError | None = None
-        for _ in range(self.max_commit_retries + 1):
-            prefix = self._load_for_read(None)
+        the same name is refused (drop it first). A lost commit race
+        re-validates against the new tip."""
+
+        def attempt(prefix):
             cons = _fold_constraints(prefix)
             if cons.get(name) == expr:
-                return {"version": None, "added": False}
+                return None, {"version": None, "added": False}
             if name in cons:
                 raise ValueError(
                     f"add_constraint: {name!r} already exists with a "
@@ -2240,37 +2069,28 @@ class LogTable:
                     f"add_constraint: {bad[name]} existing row(s) "
                     f"violate {name!r} ({expr})"
                 )
-            v = prefix[-1]["version"] + 1
-            try:
-                self._commit(self._record(
-                    v, "set_constraint", [], [], prefix[-1]["schema"],
-                    name=name, expr=expr,
-                ))
-                self._maybe_checkpoint(v)
-                return {"version": v, "added": True}
-            except ConcurrentCommitError as exc:
-                last_exc = exc
-        raise last_exc
+            v = _next_version(prefix)
+            return self._record(
+                v, "set_constraint", [], [], prefix[-1]["schema"],
+                name=name, expr=expr,
+            ), {"version": v, "added": True}
+
+        return self._transact(attempt)
 
     def drop_constraint(self, name: str) -> dict:
         """Remove a CHECK constraint (metadata-only commit); dropping an
         absent name is a no-op."""
-        last_exc: ConcurrentCommitError | None = None
-        for _ in range(self.max_commit_retries + 1):
-            prefix = self._load_for_read(None)
+
+        def attempt(prefix):
             if name not in _fold_constraints(prefix):
-                return {"version": None, "dropped": False}
-            v = prefix[-1]["version"] + 1
-            try:
-                self._commit(self._record(
-                    v, "set_constraint", [], [], prefix[-1]["schema"],
-                    name=name, drop=True,
-                ))
-                self._maybe_checkpoint(v)
-                return {"version": v, "dropped": True}
-            except ConcurrentCommitError as exc:
-                last_exc = exc
-        raise last_exc
+                return None, {"version": None, "dropped": False}
+            v = _next_version(prefix)
+            return self._record(
+                v, "set_constraint", [], [], prefix[-1]["schema"],
+                name=name, drop=True,
+            ), {"version": v, "dropped": True}
+
+        return self._transact(attempt)
 
     def detail(self) -> dict:
         """DESCRIBE DETAIL: one metadata-only read of the current
@@ -2419,15 +2239,9 @@ class LogTable:
         every batch."""
         if not 0.0 <= min_dead_ratio <= 1.0:
             raise ValueError("optimize: min_dead_ratio must be in [0, 1]")
-        if cluster_by and zorder_by:
-            raise ValueError(
-                "optimize: cluster_by and zorder_by are mutually exclusive"
-            )
-        last_exc: ConcurrentCommitError | None = None
-        for _ in range(self.max_commit_retries + 1):
-            prefix = self._load_for_read(None)
+
+        def attempt(prefix):
             live = _live_adds(prefix)
-            schema = self._snapshot_of(prefix)[1]
             dv_targets = self._dv_purge_targets(live, min_dead_ratio)
             packed = 0
             targets = list(dv_targets)
@@ -2442,69 +2256,38 @@ class LogTable:
                     targets += smalls
                     packed = len(smalls)
             if not targets:
-                return {"version": None, "purged_files": 0}
-            v = prefix[-1]["version"] + 1
-            df = self._read_adds(targets, schema)  # DV-folded rows
+                return None, {"version": None, "purged_files": 0}
+            v = _next_version(prefix)
             if target_files is not None:
                 nf = max(1, target_files)
             elif small_file_bytes:
                 # pack into ~2x-threshold outputs: a file sized AT the
                 # threshold would count as small again next call and be
                 # repacked forever (write amplification); the headroom
-                # also absorbs post-rewrite compression-size drift
+                # also absorbs post-rewrite compression-size drift. The
+                # count must actually be applied (layout's coalesce):
+                # otherwise the written file count is whatever the scan's
+                # partitioning produced and sub-threshold outputs are
+                # repacked on every scheduled call
                 total = sum(int(a.get("size") or 0) for a in targets)
                 nf = max(1, total // (2 * small_file_bytes) or 1)
+            elif cluster_by or zorder_by:
+                nf = len(targets)
             else:
-                nf = max(1, len(targets))
-            if zorder_by:
-                from .maintenance import zorder_value
-
-                stats_row = df.agg(*[
-                    f(c).alias(f"{n}_{c}")
-                    for c in zorder_by
-                    for n, f in (("lo", F.min), ("hi", F.max))
-                ]).head()
-                if stats_row is not None:
-                    bounds = [
-                        (stats_row[f"lo_{c}"], stats_row[f"hi_{c}"])
-                        for c in zorder_by
-                    ]
-                    df = (
-                        df.withColumn("_z", zorder_value(zorder_by, bounds))
-                        .repartitionByRange(nf, "_z")
-                        .sortWithinPartitions("_z")
-                        .drop("_z")
-                    )
-            elif cluster_by:
-                df = df.repartitionByRange(
-                    nf, *cluster_by
-                ).sortWithinPartitions(*cluster_by)
-            elif target_files is not None or small_file_bytes:
-                # the computed output count must actually be applied in
-                # the small-file packing branch too: without it the
-                # written file count is whatever the scan's partitioning
-                # produced, the "packed files come out ~2x-threshold"
-                # guarantee is unenforced, and sub-threshold outputs are
-                # repacked on every scheduled call (continuous write
-                # amplification in stream_merge_txlog's optimize_every
-                # path, which passes no cluster_by)
-                df = df.coalesce(nf)
+                nf = None  # plain purge keeps the scan's partitioning
+            df = layout(
+                self._read_adds(targets, self._snapshot_of(prefix)[1]),
+                nf, cluster_by, zorder_by,
+            )  # DV-folded rows
             adds = self._write_files(df, v) if df.head(1) else []
-            removes = [a["path"] for a in targets]
-            try:
-                self._commit(self._record(
-                    v, "purge", adds, removes, prefix[-1]["schema"],
-                    min_dead_ratio=min_dead_ratio,
-                    cluster_by=cluster_by or [],
-                    zorder_by=zorder_by or [],
-                ))
-                self._maybe_checkpoint(v)
-                return {"version": v, "purged_files": len(dv_targets),
-                        "packed_files": packed,
-                        "files_written": len(adds)}
-            except ConcurrentCommitError as exc:
-                last_exc = exc
-        raise last_exc
+            return self._record(
+                v, "purge", adds, [a["path"] for a in targets],
+                prefix[-1]["schema"], min_dead_ratio=min_dead_ratio,
+                cluster_by=cluster_by or [], zorder_by=zorder_by or [],
+            ), {"version": v, "purged_files": len(dv_targets),
+                "packed_files": packed, "files_written": len(adds)}
+
+        return self._transact(attempt)
 
     def optimize_if_needed(self, max_dead_ratio: float = 0.2,
                            min_dead_ratio: float | None = None,
@@ -2551,55 +2334,54 @@ class LogTable:
         rollback (no data rewrite; the old files must still exist, i.e.
         not vacuumed away). History is preserved: the bad commits stay
         readable, and the restore itself can be time-traveled past or
-        re-restored. Fails with ConcurrentCommitError semantics like any
-        commit (retry by re-calling)."""
-        prefix = self._load_for_read(None)
-        cur_adds = {a["path"]: a for a in _live_adds(prefix)}
+        re-restored. A lost commit race re-plans against the new tip (the
+        live set still becomes exactly ``version``'s)."""
         target_prefix = self._load_for_read(version)
         target_adds = _live_adds(target_prefix)
         target_files = {a["path"] for a in target_adds}
         fs, jvm = _fs(self.spark, self.data_dir)
-        need = [
-            rel for rel in sorted(target_files - set(cur_adds))
-        ] + sorted({
-            # DV sidecars of the target snapshot are load-bearing: a
-            # restore that can't fold them would resurrect deleted rows
-            a["dv"]["ref"] for a in target_adds
-            if a.get("dv") and a["dv"].get("ref")
-        })
-        missing = [
-            rel for rel in need
-            if not fs.exists(
-                jvm.org.apache.hadoop.fs.Path(f"{self.path}/{rel}")
-            )
-        ]
-        if missing:
-            raise ValueError(
-                f"restore({version}): {len(missing)} files of that "
-                f"snapshot were vacuumed away (e.g. {missing[0]!r}) — "
-                "the version is no longer restorable"
-            )
-        v = prefix[-1]["version"] + 1
-        # a path live on BOTH sides but with a different deletion-vector
-        # state must be re-added too (the add entry replaces on replay)
-        adds = [
-            a for a in target_adds
-            if _add_sig(a) != _add_sig(cur_adds.get(a["path"]))
-        ]
-        removes = sorted(set(cur_adds) - target_files)
-        self._commit(self._record(
-            v, "restore", adds, removes,
-            target_prefix[-1]["schema"], restored_version=version,
-            # Delta RESTORE rewinds metadata with the data: the CHECK
-            # constraint set becomes exactly the target version's (a
-            # constraint added later must not stay active over rewound
-            # data it never validated). _fold_constraints treats this
-            # as a REPLACE.
-            constraints=_fold_constraints(target_prefix),
-        ))
-        self._maybe_checkpoint(v)
-        return {"version": v, "restored_version": version,
+
+        def attempt(prefix):
+            cur_adds = {a["path"]: a for a in _live_adds(prefix)}
+            need = sorted(target_files - set(cur_adds)) + sorted({
+                # DV sidecars of the target snapshot are load-bearing: a
+                # restore that can't fold them would resurrect deleted rows
+                a["dv"]["ref"] for a in target_adds
+                if a.get("dv") and a["dv"].get("ref")
+            })
+            missing = [
+                rel for rel in need
+                if not fs.exists(
+                    jvm.org.apache.hadoop.fs.Path(f"{self.path}/{rel}")
+                )
+            ]
+            if missing:
+                raise ValueError(
+                    f"restore({version}): {len(missing)} files of that "
+                    f"snapshot were vacuumed away (e.g. {missing[0]!r}) — "
+                    "the version is no longer restorable"
+                )
+            v = _next_version(prefix)
+            # a path live on BOTH sides but with a different deletion-vector
+            # state must be re-added too (the add entry replaces on replay)
+            adds = [
+                a for a in target_adds
+                if _add_sig(a) != _add_sig(cur_adds.get(a["path"]))
+            ]
+            removes = sorted(set(cur_adds) - target_files)
+            return self._record(
+                v, "restore", adds, removes,
+                target_prefix[-1]["schema"], restored_version=version,
+                # Delta RESTORE rewinds metadata with the data: the CHECK
+                # constraint set becomes exactly the target version's (a
+                # constraint added later must not stay active over rewound
+                # data it never validated). _fold_constraints treats this
+                # as a REPLACE.
+                constraints=_fold_constraints(target_prefix),
+            ), {"version": v, "restored_version": version,
                 "files_added": len(adds), "files_removed": len(removes)}
+
+        return self._transact(attempt)
 
     def changes(self, from_version: int, to_version: int) -> DataFrame:
         """CDF-style value diff between two snapshots, computed from the
